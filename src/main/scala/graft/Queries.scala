@@ -1696,15 +1696,13 @@ object Queries {
     * discards). The TRUE maintenance path (state − touched-old +
     * touched-full) lives in [[graft.operators.ItemSim
     * .cosineNeighborsFromState]]; ItemSimSpec proves it
-    * output-identical and [[graft.ItemCfDeltaProbe]] measures its
-    * delta-proportional cost against a persisted state table. Round
-    * 21 fixture note: the delta is the 1998 orders of the
-    * `user_id % 101 == 0` slice — a plain date split cannot model the
-    * daily-delta regime on this fixture (TPC-H customers order
-    * uniformly across the window, so even one month touches ~2/3 of
-    * users), while this slice touches ~1% of users. existing and
-    * delta PARTITION the log, so the output equals the full rebuild
-    * and [[itemCfQ]]'s oracle serves verbatim.
+    * output-identical. Round 21 fixture note: the delta is the 1998
+    * orders of the `user_id % 101 == 0` slice — a plain date split
+    * cannot model the daily-delta regime on this fixture (TPC-H
+    * customers order uniformly across the window, so even one month
+    * touches ~2/3 of users), while this slice touches ~1% of users.
+    * existing and delta PARTITION the log, so the output equals the
+    * full rebuild and [[itemCfQ]]'s oracle serves verbatim.
     */
   def itemCfIncrementalQ(s: SparkSession, dir: String): DataFrame = {
     val fact = orderFact(s, dir)

@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the local session every driver-facing main boots
-  * (round-16 review: this block had drifted into six inline copies —
-  * Bench, Verify, JaccardProbe, StressScale, ExplainDump, Plans — and
-  * a config change missed in one of them makes that main's
-  * measurements silently non-comparable to the others').
+  * and the test suites share (round-16 review: this block had drifted
+  * into inline copies, and a config change missed in one of them makes
+  * that caller's measurements silently non-comparable to the others').
   *
   * The settings themselves: one shuffle partition per core (the
   * 100 TB analogue is partitions ~= 2-3x total executor cores —
@@ -38,8 +37,9 @@ object SparkBoot {
     // cache-heavy queries (jaccard stage-2: 33 s -> 6 s once capped).
     // The cost is per plan NODE, not per data byte, so the cap is just
     // as right on a 100 TB cluster driver as on local[n]; anything
-    // needing full plans (ExplainDump, plan-regression specs) must
-    // raise SPARK_GRAFT_MAX_PLAN_STR for its own session.
+    // needing full plans (plan dumps, plan-regression specs) must raise
+    // `spark.sql.maxPlanStringLength` for the render, or
+    // SPARK_GRAFT_MAX_PLAN_STR for its whole session.
     val maxPlanStr =
       sys.env.getOrElse("SPARK_GRAFT_MAX_PLAN_STR", "8192")
     val s = SparkSession.builder()

@@ -204,10 +204,6 @@ object Ops {
     df.select((col(userIdCol).as("external_id") +: attrs) ++ others: _*)
   }
 
-  /** Column expression for the pivot of one field — exposed for reuse. */
-  def pivotField(recCol: Column, field: String, prefix: String): Column =
-    recCol.getField(field).as(s"$prefix$field")
-
   /** U2 with PER-RECORD sync directives (reference
     * `braze_dequeue_function/main.py:67-81`): each record's OWN
     * `syncDirectives.attributePrefix` names its pivoted keys (default

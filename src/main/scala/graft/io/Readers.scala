@@ -90,14 +90,8 @@ object Readers {
       fs.listStatus(p).nonEmpty)
   }
 
-  /** S3: existence-gated JSONL read — item metadata is optional
-    * (reference `related_items_etl.py:175-189`).
-    */
-  def jsonlIfExists(spark: SparkSession, path: String, schema: StructType)
-      : Option[DataFrame] =
-    if (pathExists(spark, path)) Some(jsonl(spark, path, schema)) else None
-
-  /** S3 variant with inferred schema, for open-schema item metadata whose
+  /** S3: existence-gated JSONL read with inferred schema — item metadata
+    * is optional (reference `related_items_etl.py:175-189`), and its
     * field set is config/data-driven (reference infers via DynamicFrame).
     * Ragged corpora — the same field typed differently across files (Glue's
     * "choice type", `related_items_etl.py:175-189`) — are handled by

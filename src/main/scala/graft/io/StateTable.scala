@@ -21,10 +21,12 @@ import org.apache.spark.sql.functions._
   *
   * Versions piggyback on parquet partition discovery (`v=N` dirs), so
   * the reader prunes by version and no manifest file is needed.
-  * Concurrent appenders serialize through a pluggable [[ClaimStore]]
-  * — atomic rename where the store has it, a conditional-put marker
-  * where it doesn't (raw S3) — so `MaxConcurrentRuns: 2` is safe on
-  * either; [[compact]] stays single-writer.
+  * Concurrent appenders serialize by atomically renaming their data
+  * into the next `v=N` slot, so `MaxConcurrentRuns: 2` is safe where
+  * directory rename is atomic: the local filesystem and HDFS. Object
+  * stores without atomic rename (raw S3, GCS) need a conditional-put
+  * commit, which this table does not provide. [[compact]] stays
+  * single-writer.
   */
 object StateTable {
 
@@ -46,213 +48,72 @@ object StateTable {
       .sorted
   }
 
-  /** Version-slot claim protocol — the pluggable seam (VERDICT r15
-    * #4) that makes concurrent [[append]] safe on stores with
-    * DIFFERENT atomic primitives. `tryClaim` must move the prepared
-    * hidden `tmp` dir into the `v=N` slot `dst` such that of any two
-    * racing writers exactly one returns true; `false` means ONLY
-    * "another writer holds dst" (the caller then retries at the next
-    * version), and every persistent failure must throw — a
-    * misclassified error would loop or skip versions silently.
+  /** Move the fully written hidden `tmp` dir into the `v=N` slot `dst`
+    * by ATOMIC RENAME: of any two racing writers exactly one returns
+    * true, and the claim IS the data publish, so a visible `v=N` is
+    * always complete. `false` means ONLY "another writer holds dst"
+    * (the caller retries at the next version); every persistent
+    * failure throws — a misclassified error would loop or skip
+    * versions silently.
     */
-  trait ClaimStore {
-    def tryClaim(spark: SparkSession, tmp: Path, dst: Path): Boolean
-
-    /** Attempt to free an ORPHANED claim on `dst` — one whose winner
-      * crashed between claiming the slot and publishing its data
-      * (ADVICE r16). Returns true when the slot was reclaimed and the
-      * caller may retry `tryClaim` at the SAME version instead of
-      * advancing past a hole. Default: no reclaim (the rename
-      * protocol's claim IS the publish, so it cannot orphan).
-      */
-    def reclaimOrphan(spark: SparkSession, dst: Path): Boolean = false
-  }
-
-  /** Claim by ATOMIC RENAME — the impl for filesystems that have one
-    * (local FS via rename(2), HDFS under the NameNode lock). The
-    * claim and the data publish are the same atomic operation, so a
-    * visible `v=N` is always complete.
-    */
-  object RenameClaim extends ClaimStore {
-    def tryClaim(spark: SparkSession, tmp: Path, dst: Path): Boolean = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      // NOT FileSystem.rename: its contract MOVES src INTO an existing
-      // destination directory (mv-style), silently merging two racers'
-      // files under one v=N. On HDFS, FileContext.rename without
-      // OVERWRITE is atomic under the NameNode lock; on the local FS
-      // its exists-check is client-side (a residual TOCTOU window), so
-      // there we go straight to rename(2) via nio ATOMIC_MOVE — a
-      // claimed v=N is never empty, so a lost race surfaces as
-      // ENOTEMPTY, atomically.
-      if (dst.getFileSystem(conf).getScheme == "file")
-        try {
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(tmp.toUri.getPath),
-            java.nio.file.Paths.get(dst.toUri.getPath),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          true
-        } catch {
-          // ONLY the two shapes a lost race can take: the claimed dir
-          // already exists (ENOTEMPTY/EEXIST). A broader
-          // FileSystemException catch turned any persistent failure —
-          // vanished tmp dir, read-only volume, EIO — into an infinite
-          // claim loop instead of an error (round-15 review).
-          case _: java.nio.file.DirectoryNotEmptyException |
-               _: java.nio.file.FileAlreadyExistsException => false
-          // Known NON-race subclasses must not take the lost-race
-          // path below even when another writer coincidentally holds
-          // dst (ADVICE r15): an EXDEV atomic-move refusal, a
-          // permissions failure, or a vanished path is a persistent
-          // error — retrying it against v=N+1 would just re-fail one
-          // version later and report against the wrong path.
-          case e @ (_: java.nio.file.AtomicMoveNotSupportedException |
-               _: java.nio.file.AccessDeniedException |
-               _: java.nio.file.NoSuchFileException) => throw e
-          // Linux's atomic rename(2) surfaces ENOTEMPTY as a BARE
-          // FileSystemException (UnixException.rethrowAsIOException
-          // only mints DirectoryNotEmptyException on non-atomic
-          // paths), which the narrow catch above rethrew — the
-          // concurrent-append spec caught it losing a delivery. The
-          // errno string is locale-dependent, so verify the lost-race
-          // invariant from the filesystem instead: the winner's dst
-          // exists AND our tmp is intact — then and only then is
-          // advancing to the next version safe. A vanished tmp or a
-          // read-only volume fails the check and still throws.
-          case _: java.nio.file.FileSystemException
-              if java.nio.file.Files.exists(
-                   java.nio.file.Paths.get(dst.toUri.getPath)) &&
-                 java.nio.file.Files.exists(
-                   java.nio.file.Paths.get(tmp.toUri.getPath)) => false
-        }
-      else {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          dst.toUri, conf)
-        try { fc.rename(tmp, dst); true }
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-               _: java.nio.file.FileAlreadyExistsException => false
-        }
-      }
-    }
-  }
-
-  /** Claim by CONDITIONAL PUT of an exclusive marker — the protocol
-    * for object stores WITHOUT atomic directory rename (raw S3, where
-    * the r15 verdict documented the rename claim degrading to
-    * check-then-write). The writer first claims the slot by creating
-    * the zero-byte marker `.claim-v=N` with create-IF-NOT-EXISTS
-    * semantics — on S3 that is `PutObject` with `If-None-Match: *`
-    * (public API since 2024), on GCS `x-goog-if-generation-match: 0`.
-    * This impl carries the primitive where the filesystem truly has
-    * one — nio `createFile` (O_EXCL) locally, `createNewFile` under
-    * the HDFS NameNode lock — and REFUSES other schemes outright
-    * (round-16 review): Hadoop's generic `createNewFile` is
-    * exists-then-create on object-store connectors, which would
-    * silently void the exactly-one-winner contract; a real S3/GCS
-    * deployment plugs a ClaimStore issuing the store's native
-    * conditional PUT. Exactly one racer's conditional put succeeds;
-    * only the winner then moves its data into `v=N`, which can no
-    * longer race. The dot-prefixed marker is invisible to
-    * [[versions]] and to Spark's file index.
-    *
-    * Trade-off vs [[RenameClaim]]: the claim and the data publish are
-    * now two steps, so WRITER serialization is exact (no lost or
-    * merged update — the `MaxConcurrentRuns: 2` requirement) but a
-    * reader can observe `v=N` mid-copy on a store whose "rename" is
-    * copy-per-object; full reader isolation there additionally wants
-    * a commit record per version (the transaction-log extension this
-    * seam was cut for). A crashed winner leaves an orphaned marker:
-    * younger than [[DefaultOrphanTtlMs]] its version number is simply
-    * skipped — numbering gaps are harmless to [[readLatest]] — while
-    * past the TTL the next [[append]] retry lap reclaims the slot via
-    * [[reclaimOrphan]] (ADVICE r16), and [[compact]] still clears
-    * markers for the versions it folds.
-    */
-  object ConditionalPutClaim extends ClaimStore {
-    def marker(dst: Path): Path =
-      new Path(dst.getParent, s".claim-${dst.getName}")
-
-    /** Lease TTL before an unpublished marker counts as orphaned. The
-      * reclaim deletes the marker of a winner that crashed pre-publish,
-      * so the TTL must dominate the longest plausible claim->rename
-      * gap — the gap holds ONE metadata rename, not the data write
-      * (tmp is fully written before any claim), so minutes of slack is
-      * orders of magnitude past it on any store.
-      */
-    val DefaultOrphanTtlMs: Long = 15L * 60 * 1000
-
-    override def reclaimOrphan(spark: SparkSession, dst: Path): Boolean =
-      reclaimOrphan(spark, dst, DefaultOrphanTtlMs)
-
-    /** TTL-parameterized reclaim (specs plant a crashed winner and
-      * reclaim at ttl 0). Orphan = marker present, data dir absent,
-      * marker older than `ttlMs`. The delete is the janitor's own
-      * race window: two appenders may both observe the orphan and
-      * both call delete — exactly one filesystem delete wins, and
-      * BOTH outcomes re-enter `tryClaim`, whose conditional put still
-      * admits exactly one winner, so the exactly-one-winner contract
-      * is untouched. A marker younger than the TTL is an ACTIVE claim
-      * (its winner may be mid-rename) and is never touched — the TTL
-      * is the standard lease assumption, stated in
-      * [[DefaultOrphanTtlMs]].
-      */
-    def reclaimOrphan(spark: SparkSession, dst: Path,
-        ttlMs: Long): Boolean = {
-      val f = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (f.exists(dst)) false // published: the slot is genuinely taken
-      else try {
-        val age = System.currentTimeMillis -
-          f.getFileStatus(marker(dst)).getModificationTime
-        age >= ttlMs && f.delete(marker(dst), false)
+  private def claim(spark: SparkSession, tmp: Path, dst: Path): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    // NOT FileSystem.rename: its contract MOVES src INTO an existing
+    // destination directory (mv-style), silently merging two racers'
+    // files under one v=N. On HDFS, FileContext.rename without
+    // OVERWRITE is atomic under the NameNode lock; on the local FS
+    // its exists-check is client-side (a residual TOCTOU window), so
+    // there we go straight to rename(2) via nio ATOMIC_MOVE — a
+    // claimed v=N is never empty, so a lost race surfaces as
+    // ENOTEMPTY, atomically.
+    if (dst.getFileSystem(conf).getScheme == "file")
+      try {
+        java.nio.file.Files.move(
+          java.nio.file.Paths.get(tmp.toUri.getPath),
+          java.nio.file.Paths.get(dst.toUri.getPath),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        true
       } catch {
-        // marker vanished between list and stat: another janitor (or
-        // the winner's own publish) got there first — not reclaimed
-        // by US, so advance rather than retry a contended slot
-        case _: java.io.FileNotFoundException => false
+        // ONLY the two shapes a lost race can take: the claimed dir
+        // already exists (ENOTEMPTY/EEXIST). A broader
+        // FileSystemException catch turned any persistent failure —
+        // vanished tmp dir, read-only volume, EIO — into an infinite
+        // claim loop instead of an error (round-15 review).
+        case _: java.nio.file.DirectoryNotEmptyException |
+             _: java.nio.file.FileAlreadyExistsException => false
+        // Known NON-race subclasses must not take the lost-race
+        // path below even when another writer coincidentally holds
+        // dst (ADVICE r15): an EXDEV atomic-move refusal, a
+        // permissions failure, or a vanished path is a persistent
+        // error — retrying it against v=N+1 would just re-fail one
+        // version later and report against the wrong path.
+        case e @ (_: java.nio.file.AtomicMoveNotSupportedException |
+             _: java.nio.file.AccessDeniedException |
+             _: java.nio.file.NoSuchFileException) => throw e
+        // Linux's atomic rename(2) surfaces ENOTEMPTY as a BARE
+        // FileSystemException (UnixException.rethrowAsIOException
+        // only mints DirectoryNotEmptyException on non-atomic
+        // paths), which the narrow catch above rethrew — the
+        // concurrent-append spec caught it losing a delivery. The
+        // errno string is locale-dependent, so verify the lost-race
+        // invariant from the filesystem instead: the winner's dst
+        // exists AND our tmp is intact — then and only then is
+        // advancing to the next version safe. A vanished tmp or a
+        // read-only volume fails the check and still throws.
+        case _: java.nio.file.FileSystemException
+            if java.nio.file.Files.exists(
+                 java.nio.file.Paths.get(dst.toUri.getPath)) &&
+               java.nio.file.Files.exists(
+                 java.nio.file.Paths.get(tmp.toUri.getPath)) => false
       }
-    }
-    def tryClaim(spark: SparkSession, tmp: Path, dst: Path): Boolean = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val f = dst.getFileSystem(conf)
-      val m = marker(dst)
-      val won =
-        if (f.getScheme == "file")
-          try {
-            java.nio.file.Files.createFile(
-              java.nio.file.Paths.get(m.toUri.getPath))
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-          }
-        else if (Set("hdfs", "viewfs").contains(f.getScheme))
-          // atomic under the NameNode lock
-          f.createNewFile(m)
-        else
-          // REFUSE rather than degrade (round-16 review): Hadoop's
-          // generic createNewFile is exists()-then-create on object
-          // stores — check-then-write, NOT a conditional put — so
-          // both racers' markers would "succeed" and the
-          // exactly-one-winner contract would silently break on the
-          // very stores this impl is advertised for. A real S3/GCS
-          // deployment plugs a ClaimStore whose tryClaim issues the
-          // store's native conditional PutObject (If-None-Match /
-          // generation 0); nothing in this sandbox can exercise one.
-          throw new UnsupportedOperationException(
-            s"ConditionalPutClaim has no atomic create-if-not-exists " +
-              s"for scheme '${f.getScheme}'. Provide a ClaimStore " +
-              "backed by the store's conditional PUT (S3 If-None-Match" +
-              ", GCS ifGenerationMatch=0) instead.")
-      if (won) {
-        // the slot is exclusively ours: a plain rename cannot race.
-        // dst existing anyway means a previous protocol violation
-        // (data without marker) — surface it, never merge into it.
-        if (f.exists(dst)) throw new IllegalStateException(
-          s"claim marker won for $dst but the version dir already " +
-            "exists — data written outside the claim protocol?")
-        if (!f.rename(tmp, dst)) throw new java.io.IOException(
-          s"rename $tmp -> $dst failed after winning the claim")
+    else {
+      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+        dst.toUri, conf)
+      try { fc.rename(tmp, dst); true }
+      catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+             _: java.nio.file.FileAlreadyExistsException => false
       }
-      won
     }
   }
 
@@ -263,35 +124,29 @@ object StateTable {
     * Concurrent-append safe (VERDICT r14 item 6 — the reference allows
     * `MaxConcurrentRuns: 2`, `template.yaml:209`): the data lands in a
     * hidden `.tmp-<uuid>` dir first (invisible to [[versions]] and to
-    * Spark's file index), then `claim.tryClaim` takes the `v=N` slot
-    * with the store's atomic primitive — [[RenameClaim]] (default)
-    * where rename is atomic, [[ConditionalPutClaim]] where only
-    * create-if-not-exists is. Two appenders racing for the same N
-    * cannot both win, and the loser retries at the next free version,
-    * so interleaved appends serialize into distinct versions with no
-    * lost or merged update. The old `errorifexists` write had a
-    * check-then-write window in which two writers could interleave
-    * files INTO one version dir. [[compact]] remains single-writer
-    * (it deletes old versions non-atomically, as documented).
+    * Spark's file index), then an atomic rename moves it into the
+    * `v=N` slot. Two appenders racing for the same N cannot both win,
+    * and the loser retries at the next free version, so interleaved
+    * appends serialize into distinct versions with no lost or merged
+    * update. The rename is atomic on the local filesystem (rename(2))
+    * and on HDFS (NameNode lock); an object store without atomic
+    * directory rename (raw S3, GCS) would need a conditional-put
+    * commit instead, which this table does not provide. [[compact]]
+    * remains single-writer (it deletes old versions non-atomically,
+    * as documented).
     */
-  def append(df: DataFrame, dir: String,
-      claim: ClaimStore = RenameClaim): Int = {
+  def append(df: DataFrame, dir: String): Int = {
     val spark = df.sparkSession
     val f = fs(spark, dir)
     val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID}")
     df.write.mode("errorifexists").parquet(tmp.toString)
     try {
       var v = versions(spark, dir).lastOption.getOrElse(-1) + 1
-      while (!claim.tryClaim(spark, tmp, new Path(dir, s"v=$v"))) {
-        // lost the race for v — or the slot is a crashed winner's
-        // orphan (marker without data, ADVICE r16): let the store's
-        // janitor TTL-reclaim it, in which case the SAME v is retried
-        // (no claim survives on it, so this terminates); otherwise
-        // re-list and move past both the racer and any later writer
-        if (!claim.reclaimOrphan(spark, new Path(dir, s"v=$v")))
-          v = math.max(v + 1,
-            versions(spark, dir).lastOption.getOrElse(-1) + 1)
-      }
+      // lost the race for v: re-list and move past both the racer and
+      // any later writer
+      while (!claim(spark, tmp, new Path(dir, s"v=$v")))
+        v = math.max(v + 1,
+          versions(spark, dir).lastOption.getOrElse(-1) + 1)
       v
     } catch { case e: Throwable => f.delete(tmp, true); throw e }
   }
@@ -317,30 +172,23 @@ object StateTable {
     * non-compacting sync.
     */
   def maybeCompact(spark: SparkSession, dir: String, keyCols: Seq[String],
-      maxVersions: Int, claim: ClaimStore = RenameClaim): Option[Int] =
+      maxVersions: Int): Option[Int] =
     if (versions(spark, dir).size > maxVersions)
-      Some(compact(spark, dir, keyCols, claim))
+      Some(compact(spark, dir, keyCols))
     else None
 
   /** Fold the version chain into a single snapshot version and drop the
-    * older dirs (plus their claim markers, when the
-    * [[ConditionalPutClaim]] protocol left any). Not atomic (a
-    * transaction log would make it so); safe under the
-    * single-sequential-writer assumption.
+    * older dirs. Not atomic (a transaction log would make it so); safe
+    * under the single-sequential-writer assumption.
     */
-  def compact(spark: SparkSession, dir: String, keyCols: Seq[String],
-      claim: ClaimStore = RenameClaim): Int = {
+  def compact(spark: SparkSession, dir: String, keyCols: Seq[String]): Int = {
     val old = versions(spark, dir)
     val snapshot = readLatest(spark, dir, keyCols).cache()
     try {
       snapshot.count() // materialize before deleting inputs
-      val v = append(snapshot, dir, claim)
+      val v = append(snapshot, dir)
       val f = fs(spark, dir)
-      old.foreach { n =>
-        f.delete(new Path(s"$dir/v=$n"), true)
-        f.delete(ConditionalPutClaim.marker(new Path(s"$dir/v=$n")),
-          false)
-      }
+      old.foreach(n => f.delete(new Path(s"$dir/v=$n"), true))
       v
     } finally snapshot.unpersist()
   }

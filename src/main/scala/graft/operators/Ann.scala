@@ -206,7 +206,7 @@ object Ann {
     * IVF's scale bend: [[ivfTopK]]'s nearest-centroid argmax inlines
     * all `nCells` centroids as literals, so assignment is O(N x
     * nCells) and the expression tree grows with the index — fine to
-    * ~10^3 cells, wrong past ~10^4 (the `AnnGraphProbe` cost law).
+    * ~10^3 cells, wrong past ~10^4.
     * Here the centroid set is SPLIT: `nCoarse` coarse centroids (the
     * first `nCoarse` fine centroids, deterministic) stay literal —
     * O(nCoarse) per row — and the fine centroids move into DATA: a

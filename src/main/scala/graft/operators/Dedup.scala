@@ -1090,8 +1090,8 @@ object Dedup {
       : DataFrame = {
     val level = cache.getOrElse(StorageLevel.MEMORY_AND_DISK)
     // every pin is collected so the terminal action below can free
-    // them all; jaccardCandidates' internal pins (the exploded gram
-    // frame, the rarest-first prefix) route through the same buffer.
+    // them all; jaccardCandidatesPinned's internal pins (the exploded
+    // gram frame, the rarest-first prefix) route through the same buffer.
     // With pinsOut the caller's buffer IS that collection.
     val pins = pinsOut.getOrElse(
       scala.collection.mutable.ArrayBuffer.empty[DataFrame])
@@ -1187,22 +1187,11 @@ object Dedup {
     }
   }
 
-  /** [[jaccardJoin]]'s candidate stage, exposed for the scale probe
-    * (VERDICT r15 #2): the candidate-pair count is the quantity that
-    * could go superlinear with corpus growth if the prefix filter
-    * degraded, so [[graft.JaccardProbe]] counts this frame alongside
-    * the join's wall time. Returns distinct (id_a, id_b), id_a < id_b.
-    */
-  private[graft] def jaccardCandidates(docs: DataFrame, idCol: String,
-      textCol: String, threshold: Double, shingleWidth: Int = 3,
-      cache: Option[StorageLevel] = None): DataFrame =
-    jaccardCandidatesPinned(docs, idCol, textCol, threshold,
-      shingleWidth, d => cache.fold(d)(d.persist))
-
-  /** [[jaccardCandidates]] with the pin policy injected: [[jaccardJoin]]
-    * routes the internal pins (gram explode, rarest-first prefix)
-    * through its own collector so they can be unpersisted after the
-    * terminal action instead of leaking (ADVICE r16).
+  /** [[jaccardJoin]]'s candidate stage with the pin policy injected:
+    * distinct (id_a, id_b), id_a < id_b. [[jaccardJoin]] routes the
+    * internal pins (gram explode, rarest-first prefix) through its own
+    * collector so they can be unpersisted after the terminal action
+    * instead of leaking (ADVICE r16).
     */
   private def jaccardCandidatesPinned(docs: DataFrame, idCol: String,
       textCol: String, threshold: Double, shingleWidth: Int,

@@ -222,8 +222,8 @@ object ItemSim {
     * inline state build duplicates the whole fan-out). For the daily
     * 100 TB regime use [[pairCountState]] once, persist the two
     * tables clustered by their keys, and run
-    * [[cosineNeighborsFromState]] per delta — ItemCfDeltaProbe
-    * measures that path's delta-proportional cost.
+    * [[cosineNeighborsFromState]] per delta, whose cost is
+    * proportional to the delta.
     */
   def cosineNeighborsIncremental(existing: DataFrame, delta: DataFrame,
       userCol: String = "user_id", itemCol: String = "item_id",

@@ -43,14 +43,22 @@ object FileRelay {
   /** S3-event -> enqueue equivalence: relay new connector-output files to
     * a queue sink, at-least-once per file with exactly-once file tracking
     * (strictly stronger than the reference's S3-event + Lambda-retry
-    * at-least-once).
+    * at-least-once). A micro-batch in which the transport reports any
+    * failed id throws, so its files stay uncommitted in the checkpoint
+    * and the next run replays them whole (ids that did go through are
+    * sent again — the at-least-once half of the contract).
     */
   def relayToQueue(spark: SparkSession, outputPath: String,
       schema: StructType, checkpointDir: String,
       transport: Sinks.QueueTransport, userIdCol: String,
       batchSize: Int = 10): Unit =
     processNewFiles(spark, outputPath, schema, checkpointDir,
-      globFilter = Some("*.json")) { (batch, _) =>
-      Sinks.queueSink(batch, transport, userIdCol, batchSize)
+      globFilter = Some("*.json")) { (batch, id) =>
+      val failed = spark.sparkContext.collectionAccumulator[String]
+      Sinks.queueSink(batch, transport, userIdCol, batchSize, Some(failed))
+      if (!failed.isZero) throw new java.io.IOException(
+        s"relay micro-batch $id: ${failed.value.size} message(s) failed " +
+          s"to send (e.g. ${failed.value.get(0)}); left uncommitted " +
+          "for replay")
     }
 }

@@ -86,12 +86,15 @@ class IoSpec extends SparkSpec {
       Seq("9.99", "19.50"))
   }
 
-  test("jsonlIfExists gates on path existence") {
+  test("jsonlInferIfExists gates on path existence and emptiness") {
     val dir = tmpDir("gate")
-    val schema = StructType(Seq(StructField("k", LongType)))
-    assert(Readers.jsonlIfExists(spark, s"$dir/nope", schema).isEmpty)
+    assert(Readers.jsonlInferIfExists(spark, s"$dir/nope").isEmpty)
+    // an existing but empty prefix is as absent as a missing one
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$dir/empty"))
+    assert(Readers.jsonlInferIfExists(spark, s"$dir/empty").isEmpty)
     Seq(1L).toDF("k").write.mode("overwrite").json(s"$dir/yes")
-    assert(Readers.jsonlIfExists(spark, s"$dir/yes", schema).isDefined)
+    val yes = Readers.jsonlInferIfExists(spark, s"$dir/yes")
+    assert(yes.map(_.select("k").as[Long].collect().toSeq) == Some(Seq(1L)))
   }
 
   test("csv reads header/quoted files with explicit schema") {
@@ -146,100 +149,29 @@ class IoSpec extends SparkSpec {
 
   test("StateTable.append: interleaved concurrent appends lose nothing") {
     // two writers, 8 appends each, racing for version slots — the
-    // claim protocol must serialize them into 16 DISTINCT versions
+    // atomic-rename claim must serialize them into 16 DISTINCT versions
     // with every key batch surviving (the reference allows
     // MaxConcurrentRuns: 2; the old errorifexists write could
-    // interleave two writers' files into one v=N dir). BOTH claim
-    // stores carry the same contract: the atomic-rename CAS and the
-    // conditional-put marker protocol (VERDICT r15 #4 — the raw-S3
-    // path, simulated here by its local primitive, O_EXCL create).
+    // interleave two writers' files into one v=N dir)
     import java.util.concurrent.Executors
-    for ((claim, tag) <- Seq(
-        (StateTable.RenameClaim, "rename"),
-        (StateTable.ConditionalPutClaim, "condput"))) {
-      val dir = tmpDir(s"state-cas-$tag")
-      val pool = Executors.newFixedThreadPool(2)
-      try {
-        val futs = (0 until 2).map { w =>
-          pool.submit(new java.util.concurrent.Callable[Seq[Int]] {
-            def call(): Seq[Int] = (0 until 8).map { i =>
-              StateTable.append(
-                Seq((w * 1000L + i, s"w$w-b$i")).toDF("k", "val"), dir,
-                claim)
-            }
-          })
-        }
-        val claimed = futs.flatMap(_.get())
-        assert(claimed.distinct.size == 16,
-          s"[$tag] version collision: $claimed")
-        assert(StateTable.versions(spark, dir) == claimed.sorted)
-        val state = StateTable.readLatest(spark, dir, Seq("k"))
-        assert(state.count() == 16) // no lost update, no duplicated key
-        assert(state.select("k").distinct().count() == 16)
-      } finally pool.shutdown()
-    }
-    // crashed-winner plant (ADVICE r16): a marker with NO data dir is
-    // what a winner that died between claim and publish leaves. Past
-    // the TTL the janitor in append's retry path must reclaim the
-    // slot — the next append lands at the PLANTED version, not past a
-    // permanent hole; before the TTL the marker is an active lease
-    // and the version is skipped (the old, still-safe behavior).
-    locally {
-      import org.apache.hadoop.fs.Path
-      val dir = tmpDir("state-cas-orphan")
-      val v0 = StateTable.append(Seq((1L, "a")).toDF("k", "val"), dir,
-        StateTable.ConditionalPutClaim)
-      assert(v0 == 0)
-      // plant the orphan at the next slot
-      val orphan = new Path(s"$dir/v=1")
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(
-        StateTable.ConditionalPutClaim.marker(orphan).toUri.getPath))
-      // fresh marker = active lease: never reclaimed by the direct
-      // call, and an append with the default store skips past it
-      // (the old, still-safe hole behavior)
-      assert(!StateTable.ConditionalPutClaim.reclaimOrphan(
-        spark, orphan, ttlMs = 60000L))
-      // ttl-0 store (the "15 minutes later" view): the next append
-      // finds the orphan AT the frontier, reclaims it, and lands on
-      // the planted version — no permanent hole
-      val janitor = new StateTable.ClaimStore {
-        def tryClaim(s: org.apache.spark.sql.SparkSession, t: Path,
-            d: Path): Boolean =
-          StateTable.ConditionalPutClaim.tryClaim(s, t, d)
-        override def reclaimOrphan(s: org.apache.spark.sql.SparkSession,
-            d: Path): Boolean =
-          StateTable.ConditionalPutClaim.reclaimOrphan(s, d, ttlMs = 0L)
+    val dir = tmpDir("state-cas")
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val futs = (0 until 2).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Int]] {
+          def call(): Seq[Int] = (0 until 8).map { i =>
+            StateTable.append(
+              Seq((w * 1000L + i, s"w$w-b$i")).toDF("k", "val"), dir)
+          }
+        })
       }
-      assert(StateTable.append(Seq((2L, "b")).toDF("k", "val"), dir,
-        janitor) == 1, "janitor did not reclaim the orphaned slot")
-      // a SECOND orphan, this time aged under the default TTL: the
-      // default store treats it as an active lease and advances past
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(
-        StateTable.ConditionalPutClaim.marker(new Path(s"$dir/v=2"))
-          .toUri.getPath))
-      assert(StateTable.append(Seq((3L, "c")).toDF("k", "val"), dir,
-        StateTable.ConditionalPutClaim) == 3)
-      assert(StateTable.versions(spark, dir) == Seq(0, 1, 3))
-      assert(StateTable.readLatest(spark, dir, Seq("k")).count() == 3)
-      // RenameClaim on the same dir: its default reclaim is a no-op
-      // (rename claims cannot orphan) and appends still serialize
-      assert(StateTable.append(Seq((4L, "d")).toDF("k", "val"), dir,
-        StateTable.RenameClaim) == 4)
-    }
-
-    // the marker protocol refuses to merge into a slot that holds
-    // data WITHOUT a marker (written outside the protocol — e.g. a
-    // mixed-store race where a RenameClaim writer took the slot):
-    // winning the marker must surface the violation, never interleave
-    val dirty = tmpDir("state-cas-dirty")
-    Seq((1L, "a")).toDF("k", "val").write.parquet(s"$dirty/v=0")
-    Seq((2L, "b")).toDF("k", "val").write.parquet(s"$dirty/.tmp-x")
-    val e = intercept[IllegalStateException] {
-      StateTable.ConditionalPutClaim.tryClaim(spark,
-        new org.apache.hadoop.fs.Path(s"$dirty/.tmp-x"),
-        new org.apache.hadoop.fs.Path(s"$dirty/v=0"))
-    }
-    assert(e.getMessage.contains("claim protocol"))
+      val claimed = futs.flatMap(_.get())
+      assert(claimed.distinct.size == 16, s"version collision: $claimed")
+      assert(StateTable.versions(spark, dir) == claimed.sorted)
+      val state = StateTable.readLatest(spark, dir, Seq("k"))
+      assert(state.count() == 16) // no lost update, no duplicated key
+      assert(state.select("k").distinct().count() == 16)
+    } finally pool.shutdown()
   }
 
   test("state write-back overwrites the previous snapshot") {

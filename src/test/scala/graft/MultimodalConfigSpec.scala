@@ -132,4 +132,43 @@ class MultimodalConfigSpec extends SparkSpec {
     val second = Sinks.InMemoryQueues.drain(qname).size
     assert(first == 2 && second == 0)
   }
+
+  test("file relay leaves a batch with failed sends uncommitted") {
+    val dir = tmpDir("relay-fail")
+    val qname = s"relay-${java.util.UUID.randomUUID()}"
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("userId",
+        org.apache.spark.sql.types.StringType)))
+    val users = (0 until 25).map(i => f"u$i%02d")
+    users.toDF("userId").coalesce(1).write.json(s"$dir/out")
+    def relay(): Seq[String] = {
+      FileRelay.relayToQueue(spark, s"$dir/out", schema, s"$dir/ckpt",
+        MultimodalConfigSpec.RejectFirstCall(qname), "userId")
+      Sinks.InMemoryQueues.drain(qname).map(_.id.split("-", 2)(1))
+    }
+    // the first send is rejected whole: the run fails rather than
+    // committing a file whose messages never reached the queue
+    val e = intercept[Exception](relay())
+    assert(e.getMessage.contains("failed to send"))
+    Sinks.InMemoryQueues.drain(qname) // the sends that went through
+    // the replay delivers every user in the file; then nothing is left
+    assert(relay().sorted == users)
+    assert(relay().isEmpty)
+  }
+}
+
+object MultimodalConfigSpec {
+  private val calls =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]()
+
+  /** Rejects every id of its first send, delivers every later one. */
+  final case class RejectFirstCall(name: String)
+      extends Sinks.QueueTransport {
+    def send(batch: Seq[Sinks.QueueMessage]): Seq[String] =
+      if (calls.computeIfAbsent(name,
+          _ => new java.util.concurrent.atomic.AtomicInteger)
+          .getAndIncrement() == 0) batch.map(_.id)
+      else Sinks.InMemoryQueueTransport(name).send(batch)
+  }
 }

@@ -12,8 +12,7 @@ class PlanRegressionSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
-      .toString
+    planString(SparkEntry.queries(name)(spark, sfDir))
 
   /** Bucketed candidate generation must never degenerate into an
     * all-pairs comparison: no cartesian product, no nested-loop join.
@@ -90,7 +89,7 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("q_bucketed_join: co-located join is exchange-free") {
     val df = SparkEntry.queries("q_bucketed_join")(spark, sfDir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planString(df)
     assert(p.contains("SortMergeJoin"))
     // both sides are bucketed on the join key: the join itself must not
     // repartition (the final orderBy's range exchange is the only one)
@@ -140,7 +139,7 @@ class PlanRegressionSpec extends SparkSpec {
 
   test("q_partition_pruned: the year filter prunes at the directory level") {
     val df = SparkEntry.queries("q_partition_pruned")(spark, sfDir)
-    val p = df.queryExecution.executedPlan.toString
+    val p = planString(df)
     assert(p.contains("PartitionFilters: [") && p.contains("o_year"),
       s"partition filter missing:\n$p")
     // the filter must NOT degrade to a post-scan data filter
