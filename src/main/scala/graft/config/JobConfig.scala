@@ -42,8 +42,10 @@ final case class JobConfig(
     stateFormat: String = "snapshot",
     connectors: Map[String, ConnectorConfig] = Map.empty
 ) {
-  // Fail fast: a typo ("Keyed", "key") must not silently fall back to
+  // Fail fast: a missing input path would only surface when Spark reads
+  // "", and a typo ("Keyed", "key") must not silently fall back to
   // snapshot semantics and write state in the wrong place/format.
+  require(batchInferencePath.nonEmpty, "batchInferencePath is required")
   require(JobConfig.StateFormats(stateFormat),
     s"stateFormat must be one of ${JobConfig.StateFormats.mkString("/")}, " +
       s"got '$stateFormat'")

@@ -21,6 +21,15 @@ import org.apache.spark.util.CollectionAccumulator
   */
 object Sinks {
 
+  /** Messages per queue send: SQS's batch limit (`enqueue.py:19`). */
+  val QueueBatchSize = 10
+
+  /** Attribute objects per REST call (`braze_dequeue_function/main.py:18`). */
+  val RestMaxAttributes = 75
+
+  /** Tries per REST batch: the queue's 5 receives (`template.yaml:337`). */
+  val RestMaxAttempts = 5
+
   /** One enqueued message: an idempotency id and the JSON payload.
     * Reference message id is `"{n}-{userId}"` per batch (`enqueue.py:58`),
     * which is NOT idempotent across retries; we key by (userId, seq-in-
@@ -35,8 +44,8 @@ object Sinks {
     def send(batch: Seq[QueueMessage]): Seq[String]
   }
   trait RestTransport extends Serializable {
-    /** POST one request of <=maxAttributes user-attribute JSON objects;
-      * returns true on success.
+    /** POST one request of <=[[RestMaxAttributes]] user-attribute JSON
+      * objects; returns true on success.
       */
     def post(attributeObjects: Seq[String]): Boolean
   }
@@ -70,24 +79,21 @@ object Sinks {
   }
 
   /** K3: queue sink. Serializes each row to a JSON line and sends in
-    * batches of `batchSize` (reference 10, `enqueue.py:19`). Failed ids
-    * are collected into `deadLetters` (caller-provided accumulator) —
-    * the engine-side stand-in for SQS redelivery+DLQ.
+    * batches of [[QueueBatchSize]]. Failed ids are collected into
+    * `deadLetters` — the engine-side stand-in for SQS redelivery+DLQ.
+    * The collector is required: a send that fails must be visible to the
+    * caller, who decides whether to retry, replay or fail.
     */
   def queueSink(df: DataFrame, transport: QueueTransport,
-      userIdCol: String, batchSize: Int = 10,
-      deadLetters: Option[CollectionAccumulator[String]] = None): Unit = {
+      userIdCol: String, deadLetters: CollectionAccumulator[String]): Unit = {
     val json = df.select(col(userIdCol).cast("string").as("__uid"),
       to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("__body"))
     json.foreachPartition { (rows: Iterator[Row]) =>
       rows.zipWithIndex
         .map { case (r, i) =>
           QueueMessage(s"$i-${r.getString(0)}", r.getString(1)) }
-        .grouped(batchSize)
-        .foreach { batch =>
-          val failed = transport.send(batch.toSeq)
-          deadLetters.foreach(acc => failed.foreach(acc.add))
-        }
+        .grouped(QueueBatchSize)
+        .foreach(batch => transport.send(batch.toSeq).foreach(deadLetters.add))
     }
   }
 
@@ -133,8 +139,7 @@ object Sinks {
     * An input the caller already persisted is left untouched.
     */
   def dequeueToRest(df: DataFrame, transport: RestTransport,
-      pivot: DataFrame => DataFrame, maxAttributes: Int = 75,
-      maxAttempts: Int = 5,
+      pivot: DataFrame => DataFrame,
       deadLetters: Option[CollectionAccumulator[String]] = None): Unit = {
     val spanPersist = deadLetters.nonEmpty &&
       df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
@@ -149,25 +154,22 @@ object Sinks {
             .as("__body"))
           .foreach((r: Row) => acc.add(r.getString(0)))
       }
-      restSink(pivot(valid), transport, maxAttributes, maxAttempts,
-        deadLetters)
+      restSink(pivot(valid), transport, deadLetters)
     } finally if (spanPersist) pinned.unpersist()
   }
 
   /** K4: REST sink with the U2 pivot applied upstream — takes rows that
     * are already flat attribute objects, posts them in groups of
-    * `maxAttributes` (reference 75, `braze_dequeue_function/main.py:18`),
-    * retries each batch up to `maxAttempts` (SQS gives 5 receives,
-    * `template.yaml:337`), then dead-letters the whole batch.
+    * [[RestMaxAttributes]], tries each batch up to [[RestMaxAttempts]]
+    * times, then dead-letters the whole batch.
     */
   def restSink(df: DataFrame, transport: RestTransport,
-      maxAttributes: Int = 75, maxAttempts: Int = 5,
       deadLetters: Option[CollectionAccumulator[String]] = None): Unit = {
     val json = df.select(
       to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as("__body"))
     json.foreachPartition { (rows: Iterator[Row]) =>
-      rows.map(_.getString(0)).grouped(maxAttributes).foreach { batch =>
-        val ok = (1 to maxAttempts).exists(_ => transport.post(batch.toSeq))
+      rows.map(_.getString(0)).grouped(RestMaxAttributes).foreach { batch =>
+        val ok = (1 to RestMaxAttempts).exists(_ => transport.post(batch.toSeq))
         if (!ok) deadLetters.foreach(acc => batch.foreach(acc.add))
       }
     }

@@ -22,8 +22,9 @@ object Ops {
   /** P1/P2/P3: split a batch-inference frame on `error` nullability
     * (reference `related_items_etl.py:111-136`). Callers read the success
     * side with `error` dropped plus the error side intact. The input must
-    * already be backfilled ([[graft.io.Readers.withBackfill]]) so `error`
-    * resolves even when absent from the files.
+    * carry an `error` column even when no file has one — read it with the
+    * declared schema ([[graft.io.Readers.jsonl]]), which returns absent
+    * fields as nulls.
     */
   def splitErrors(df: DataFrame): (DataFrame, DataFrame) =
     (df.where(col("error").isNull).drop("error"),
@@ -187,6 +188,9 @@ object Ops {
     }
   }
 
+  /** Prefix when sync directives name none (`main.py:18,71`). */
+  val DefaultAttributePrefix = "recommendation_"
+
   /** U2: dequeue pivot — transpose `recommendations: array<struct<...>>`
     * into flat per-user attributes `{prefix}{field}: array<fieldType>`
     * plus `external_id` (reference `braze_dequeue_function/main.py:57-83`,
@@ -207,7 +211,7 @@ object Ops {
   /** U2 with PER-RECORD sync directives (reference
     * `braze_dequeue_function/main.py:67-81`): each record's OWN
     * `syncDirectives.attributePrefix` names its pivoted keys (default
-    * `"recommendation_"`, `main.py:71`), and its own other attributes
+    * [[DefaultAttributePrefix]]), and its own other attributes
     * ride along — so one queue fed by connectors with different
     * prefixes pivots every record correctly, where [[pivotAttributes]]
     * would stamp one connector's prefix onto the other's records.
@@ -224,8 +228,7 @@ object Ops {
     * Records with no syncDirectives at all fall back to the defaults.
     */
   def pivotAttributesPerRecord(df: DataFrame, userIdCol: String,
-      recFields: Seq[String],
-      defaultPrefix: String = "recommendation_"): DataFrame = {
+      recFields: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.StructType
     val sdType: Option[StructType] = df.schema.fields
       .find(_.name == "syncDirectives")
@@ -234,8 +237,8 @@ object Ops {
     val prefix: Column = sdType
       .filter(_.fieldNames.contains("attributePrefix"))
       .map(_ => coalesce(col("syncDirectives.attributePrefix"),
-        lit(defaultPrefix)))
-      .getOrElse(lit(defaultPrefix))
+        lit(DefaultAttributePrefix)))
+      .getOrElse(lit(DefaultAttributePrefix))
 
     val reserved = Set("attributePrefix", "otherAttributes", "external_id")
     def scalarPairs(parent: String, st: StructType): Seq[(String, Column)] =

@@ -27,24 +27,16 @@ object Writers {
     s"year=$y/month=$m/day=$d/time=$t"
   }
 
-  /** K1: connector output sink.
-    *
-    * @param compression e.g. Some("gzip") — the reference's enqueue
-    *   stage consumes gzipped JSONL (`enqueue.py:40-43`), and at scale
-    *   compressed output is 5-10x fewer bytes to the object store
-    * @param maxRecordsPerFile bound file sizes independently of task
-    *   count, so a skewed task cannot emit one giant file that a
-    *   single downstream Lambda/consumer must stream alone
+  /** K1: connector output sink — plain JSON Lines, one `part-*.json`
+    * file per task (the reference writes plain JSONL per connector,
+    * `related_items_etl.py:301-315`). The queue relay
+    * ([[graft.streaming.FileRelay.relayToQueue]]) picks files up by that
+    * `*.json` name, so compressed output would never reach the queue.
     */
   def connectorOutput(df: DataFrame, outputRoot: String, connector: String,
-      runTime: LocalDateTime, compression: Option[String] = None,
-      maxRecordsPerFile: Option[Long] = None): String = {
+      runTime: LocalDateTime): String = {
     val dir = s"$outputRoot/$connector/${runTimePartition(runTime)}"
-    val w0 = df.write.mode("append")
-    val w1 = compression.fold(w0)(c => w0.option("compression", c))
-    val w2 = maxRecordsPerFile.fold(w1)(n =>
-      w1.option("maxRecordsPerFile", n.toString))
-    w2.json(dir)
+    df.write.mode("append").json(dir)
     dir
   }
 
@@ -92,8 +84,7 @@ object Writers {
     */
   def idempotentConnectorOutput(df: DataFrame, outputRoot: String,
       connector: String, runTime: LocalDateTime,
-      keyCols: Seq[String], manifestDir: String,
-      compression: Option[String] = None): DataFrame = {
+      keyCols: Seq[String], manifestDir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
     val once = df.dropDuplicates(keyCols)
@@ -110,8 +101,7 @@ object Writers {
     // batch per failed attempt (round-15 review)
     try {
       if (!pinned.isEmpty) {
-        connectorOutput(pinned, outputRoot, connector, runTime,
-          compression)
+        connectorOutput(pinned, outputRoot, connector, runTime)
         StateTable.append(
           pinned.select(keyCols.map(col): _*).distinct(), manifestDir)
       }

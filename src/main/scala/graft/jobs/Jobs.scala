@@ -174,12 +174,9 @@ object Jobs {
               if (StateTable.versions(spark, stateDir).nonEmpty)
                 Some(StateTable.readLatest(spark, stateDir, spec.groupKeys))
               else None
-            } else if (Readers.pathExists(spark, stateDir)) {
-              Some(Readers.withBackfill(
-                spark.read.option("recursiveFileLookup", "true")
-                  .schema(assembled.schema).json(stateDir),
-                assembled.schema))
-            } else None
+            } else if (Readers.pathExists(spark, stateDir))
+              Some(Readers.jsonl(spark, stateDir, assembled.schema))
+            else None
           val afterDelta = state match {
             case Some(_) if !config.deltaCheckFor(connector) => assembled
             case Some(st) if keyed =>

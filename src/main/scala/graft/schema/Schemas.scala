@@ -6,11 +6,11 @@ import org.apache.spark.sql.types._
   *
   * The reference never declares a schema (Glue DynamicFrame infers per record;
   * see reference `src/glue/related_items_etl.py:99-107`). We invert that:
-  * every source has an explicit [[StructType]] and the reader backfills
-  * columns the files happen to omit (see [[graft.io.Readers.withBackfill]]),
-  * which reproduces the one DynamicFrame behaviour plain `spark.read.json`
-  * lacks (an input set where no line carries `error` must still support
-  * `WHERE error IS NULL`).
+  * every source has an explicit [[StructType]], and reading with it
+  * ([[graft.io.Readers.jsonl]]) yields nulls for the fields the files
+  * happen to omit — the one DynamicFrame behaviour an inferred
+  * `spark.read.json` lacks (an input set where no line carries `error`
+  * must still support `WHERE error IS NULL`).
   */
 object Schemas {
 

@@ -46,16 +46,17 @@ object FileRelay {
     * at-least-once). A micro-batch in which the transport reports any
     * failed id throws, so its files stay uncommitted in the checkpoint
     * and the next run replays them whole (ids that did go through are
-    * sent again — the at-least-once half of the contract).
+    * sent again — the at-least-once half of the contract). Only
+    * `*.json` files relay, the name [[graft.io.Writers.connectorOutput]]
+    * writes; sends go out [[Sinks.QueueBatchSize]] messages at a time.
     */
   def relayToQueue(spark: SparkSession, outputPath: String,
       schema: StructType, checkpointDir: String,
-      transport: Sinks.QueueTransport, userIdCol: String,
-      batchSize: Int = 10): Unit =
+      transport: Sinks.QueueTransport, userIdCol: String): Unit =
     processNewFiles(spark, outputPath, schema, checkpointDir,
       globFilter = Some("*.json")) { (batch, id) =>
       val failed = spark.sparkContext.collectionAccumulator[String]
-      Sinks.queueSink(batch, transport, userIdCol, batchSize, Some(failed))
+      Sinks.queueSink(batch, transport, userIdCol, failed)
       if (!failed.isZero) throw new java.io.IOException(
         s"relay micro-batch $id: ${failed.value.size} message(s) failed " +
           s"to send (e.g. ${failed.value.get(0)}); left uncommitted " +

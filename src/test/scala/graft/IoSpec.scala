@@ -48,26 +48,26 @@ class IoSpec extends SparkSpec {
       Seq((1L, "a"), (2L, "b")))
   }
 
-  test("jsonl multiLine mode reads pretty-printed JSON documents") {
-    val dir = tmpDir("multiline")
-    // A pretty-printed array document — the shape that, read line-
-    // delimited, comes back as corrupt-record rows.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/batch.json"),
-      """[
-        |  { "k": 1,
-        |    "v": "a" },
-        |  { "k": 2,
-        |    "v": "b" }
-        |]""".stripMargin.getBytes("UTF-8"))
-    val schema = StructType(Seq(StructField("k", LongType),
-      StructField("v", StringType)))
-    val out = Readers.jsonl(spark, dir, schema, multiLine = true)
-    assert(out.orderBy("k").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a"), (2L, "b")))
-    // default line-delimited read of the same file yields no usable rows
-    val broken = Readers.jsonl(spark, dir, schema)
-    assert(broken.where(col("k").isNotNull).count() == 0)
+  test("jsonl returns the declared schema with nulls for absent fields") {
+    val dir = tmpDir("declared")
+    // no line has `error`, one lacks `output`, one lacks the nested
+    // `recommendedItems`, and one carries a field the schema omits
+    Seq(
+      """{"input":{"itemId":"i1"},"output":{"recommendedItems":["p1"]}}""",
+      """{"input":{"itemId":"i2"}}""",
+      """{"input":{"itemId":"i3","junk":1},"output":{}}"""
+    ).toDF("value").coalesce(1).write.mode("overwrite").text(dir)
+    val out = Readers.jsonl(spark, dir, Schemas.relatedItemsBatchInference)
+    assert(out.schema.simpleString ==
+      Schemas.relatedItemsBatchInference.simpleString)
+    val rows = out.orderBy("input.itemId").collect()
+    assert(rows.map(_.getStruct(0)).toSeq ==
+      Seq("i1", "i2", "i3").map(org.apache.spark.sql.Row(_)))
+    assert(rows(0).getStruct(1).getSeq[String](0) == Seq("p1"))
+    assert(rows(1).isNullAt(1))
+    assert(rows(2).getStruct(1).isNullAt(0))
+    assert(rows.forall(_.isNullAt(2)))
+    assert(out.where(col("error").isNull).count() == 3)
   }
 
   test("inferred read unions ragged field types across files to string") {
@@ -92,6 +92,10 @@ class IoSpec extends SparkSpec {
     // an existing but empty prefix is as absent as a missing one
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$dir/empty"))
     assert(Readers.jsonlInferIfExists(spark, s"$dir/empty").isEmpty)
+    // so is an export with no records: `_SUCCESS` plus an empty part file
+    Seq.empty[Long].toDF("k").coalesce(1).write.json(s"$dir/blank")
+    assert(Readers.pathExists(spark, s"$dir/blank"))
+    assert(Readers.jsonlInferIfExists(spark, s"$dir/blank").isEmpty)
     Seq(1L).toDF("k").write.mode("overwrite").json(s"$dir/yes")
     val yes = Readers.jsonlInferIfExists(spark, s"$dir/yes")
     assert(yes.map(_.select("k").as[Long].collect().toSeq) == Some(Seq(1L)))
@@ -262,20 +266,6 @@ class IoSpec extends SparkSpec {
       xs.min <= 3 && 0 <= xs.max && ys.min <= 3 && 0 <= ys.max
     }
     assert(hit < 4, "corner box should not intersect every file's stats")
-  }
-
-  test("connectorOutput honors compression and maxRecordsPerFile") {
-    val root = tmpDir("sink")
-    val df = (1 to 10).map(i => (i.toLong, s"u$i")).toDF("id", "user")
-      .coalesce(1)
-    val dir = Writers.connectorOutput(df, root, "braze",
-      LocalDateTime.of(2024, 1, 2, 3, 4, 5),
-      compression = Some("gzip"), maxRecordsPerFile = Some(4L))
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".json.gz"))
-    // 10 rows / max 4 per file from one task -> 3 gzipped parts
-    assert(files.length == 3)
-    assert(spark.read.json(dir).count() == 10) // codec-transparent read
   }
 
   test("StateTable.maybeCompact fires only past the version threshold") {

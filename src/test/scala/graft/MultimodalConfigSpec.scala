@@ -116,6 +116,11 @@ class MultimodalConfigSpec extends SparkSpec {
       .stateFormat == "snapshot")
   }
 
+  test("JobConfig requires batchInferencePath") {
+    val ex = intercept[IllegalArgumentException](JobConfig.parse("{}"))
+    assert(ex.getMessage.contains("batchInferencePath"))
+  }
+
   test("file relay processes each file exactly once across runs") {
     val dir = tmpDir("relay")
     val qname = s"relay-${java.util.UUID.randomUUID()}"
@@ -154,6 +159,32 @@ class MultimodalConfigSpec extends SparkSpec {
     // the replay delivers every user in the file; then nothing is left
     assert(relay().sorted == users)
     assert(relay().isEmpty)
+  }
+
+  test("file relay delivers every row Jobs.run writes for a connector") {
+    import java.time.LocalDateTime
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import graft.jobs.Jobs
+    val root = tmpDir("job-relay")
+    val qname = s"relay-${java.util.UUID.randomUUID()}"
+    Seq(
+      """{"input":{"userId":"u1"},"output":{"recommendedItems":["p1"]}}""",
+      """{"input":{"userId":"u2"},"output":{"recommendedItems":["p2","p3"]}}""",
+      """{"input":{"userId":"u3"},"output":{"recommendedItems":null}}""",
+      """{"input":{"userId":"u4"},"error":"SIMULATED"}"""
+    ).toDF("value").coalesce(1).write.text(s"$root/input/batch")
+    val cfg = JobConfig.parse(
+      s"""{"batchInferencePath": "$root/input/batch",
+         |"connectors": {"braze": {}}}""".stripMargin)
+    val out = Jobs.run(spark, Jobs.UserPersonalization, root, "up_job", cfg,
+      LocalDateTime.of(2024, 1, 2, 3, 4, 5)).connectors.head
+    FileRelay.relayToQueue(spark, out.outputDir,
+      StructType(Seq(StructField("queryUserId", StringType))),
+      s"$root/ckpt", Sinks.InMemoryQueueTransport(qname), "queryUserId")
+    val ids = Sinks.InMemoryQueues.drain(qname).map(_.id.split("-", 2)(1))
+    assert(out.rowsWritten == 3)
+    assert(ids.size.toLong == out.rowsWritten)
+    assert(ids.sorted == Seq("u1", "u2", "u3"))
   }
 }
 

@@ -10,10 +10,21 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("queueSink batches at most 10 messages per send") {
+    import scala.jdk.CollectionConverters._
     val name = s"q-${java.util.UUID.randomUUID()}"
+    val dead = spark.sparkContext.collectionAccumulator[String]("dl0")
+    val sizes = spark.sparkContext.collectionAccumulator[Int]("sizes")
+    val recording = new QueueTransport {
+      def send(batch: Seq[QueueMessage]): Seq[String] = {
+        sizes.add(batch.size)
+        Sinks.InMemoryQueueTransport(name).send(batch)
+      }
+    }
     val df = (1 to 23).map(_.toString).toDF("userId").repartition(1)
-    Sinks.queueSink(df, Sinks.InMemoryQueueTransport(name), "userId")
+    Sinks.queueSink(df, recording, "userId", dead)
     val got = Sinks.InMemoryQueues.drain(name)
+    assert(sizes.value.asScala.toSeq == Seq(10, 10, 3))
+    assert(dead.isZero)
     assert(got.size == 23)
     assert(got.forall(_.body.contains("userId")))
   }
@@ -25,7 +36,7 @@ class SinksSpec extends SparkSpec {
         batch.filter(_.id.endsWith("-2")).map(_.id)
     }
     val df = Seq("1", "2", "3").toDF("userId").repartition(1)
-    Sinks.queueSink(df, FailEven, "userId", deadLetters = Some(dead))
+    Sinks.queueSink(df, FailEven, "userId", dead)
     assert(dead.value.size == 1 && dead.value.get(0).endsWith("-2"))
   }
 
@@ -189,8 +200,10 @@ class SinksSpec extends SparkSpec {
         .withColumn("recommendations",
           expr("array(named_struct('itemId', 'p9'))")),
       "up_job", "2024-01-01T00:00:00.000", None)
-    Sinks.queueSink(ri, qt, "userId")
-    Sinks.queueSink(up, qt, "queryUserId")
+    val dead = spark.sparkContext.collectionAccumulator[String]("mdead")
+    Sinks.queueSink(ri, qt, "userId", dead)
+    Sinks.queueSink(up, qt, "queryUserId", dead)
+    assert(dead.isZero)
 
     val drained = spark.read.json(Sinks.drainToDF(spark, qname))
     val posted = spark.sparkContext.collectionAccumulator[String]("mposts")
@@ -217,9 +230,10 @@ class SinksSpec extends SparkSpec {
       def post(objs: Seq[String]): Boolean = { attempts.add(1); false }
     }
     val df = Seq("1", "2").toDF("external_id").repartition(1)
-    Sinks.restSink(df, alwaysFail, maxAttempts = 3,
-      deadLetters = Some(dead))
-    assert(attempts.value == 3)  // retried exactly maxAttempts times
+    Sinks.restSink(df, alwaysFail, deadLetters = Some(dead))
+    // tried exactly the reference's 5 receives (`template.yaml:337`)
+    assert(Sinks.RestMaxAttempts == 5)
+    assert(attempts.value == 5)
     assert(dead.value.size == 2) // whole batch dead-lettered
   }
 }
