@@ -30,10 +30,15 @@ object Ops {
     (df.where(col("error").isNull).drop("error"),
      df.where(col("error").isNotNull))
 
-  /** J1 + P4: reverse-map item-keyed recommendations to users — inner join
-    * on the nested key `input.itemId = ITEM_ID`, then drop the redundant
-    * join key (reference `related_items_etl.py:159-172`). The mapping side
-    * fans out one row per (item, user) pair.
+  /** J1 + P4 in the reference's order: reverse-map item-keyed batch lines
+    * to users BEFORE explode — inner join on the nested key
+    * `input.itemId = ITEM_ID`, then drop the redundant join key (reference
+    * `related_items_etl.py:159-172`). The mapping side fans out one row
+    * per (item, user) pair, so everything downstream runs once per mapped
+    * user. `graft.jobs.Jobs` fans out after assembly instead
+    * ([[fanOutToUsers]]); this form stays for the `Queries` catalog and
+    * as the old-order reference the benchmark's staged pass and the
+    * differential test in `JobsSpec` compare against.
     *
     * At scale the recs side (one row per query item) is small next to the
     * mapping (users x items); Catalyst/AQE picks the join strategy, and we
@@ -42,6 +47,49 @@ object Ops {
   def mapUsers(recs: DataFrame, mapping: DataFrame): DataFrame =
     recs.join(mapping, col("input.itemId") === col("ITEM_ID"), "inner")
       .drop("ITEM_ID")
+
+  /** The user-item mapping reduced to one row per distinct pair:
+    * `(ITEM_ID, USER_ID, m)` where `m` counts the pair's lines. A null
+    * `USER_ID` groups as one key, as it does in the reference's
+    * `groupBy(queryItemId, userId)`. Input to [[fanOutToUsers]].
+    */
+  def mappingPairCounts(mapping: DataFrame): DataFrame =
+    mapping.groupBy("ITEM_ID", "USER_ID")
+      .agg(count(lit(1)).cast("int").as("m")) // array_repeat takes an int
+
+  /** J1 + P4 after assembly: join each query item's assembled list to the
+    * users mapped to it (eager aggregation before the fan-out join, Yan &
+    * Larson, VLDB 1995). The reference joins the mapping first
+    * (`related_items_etl.py:159-172`) and then explodes, decorates and
+    * assembles per (item, user) (`:202-214`); every user of an item gets
+    * the same list, so doing that work once per item is equivalent:
+    *
+    *  - several batch lines for one item land in one per-item group, as
+    *    they land in each of its (item, user) groups;
+    *  - a pair listed `m` times contributed every element `m` times to
+    *    the old group; each element is repeated `m` times here. The old
+    *    list is sorted on `(pos, recItem)`, which keeps equal elements
+    *    adjacent, so repeating the sorted list's elements in place gives
+    *    the same order;
+    *  - a null `USER_ID` is one group key in both forms (see
+    *    [[mappingPairCounts]]), null keys never match the inner join, and
+    *    a null or empty rec array gives `[]` either way.
+    *
+    * Output columns are those of the old plan, in its order:
+    * `queryItemId, userId, recommendations`. Both sides stay unhinted so
+    * AQE picks the strategy and splits a hot item's partition.
+    *
+    * @param perItem `(queryItemId, recommendations)` from
+    *   [[assembleRecommendations]] grouped by `queryItemId`
+    * @param pairs   output of [[mappingPairCounts]]
+    */
+  def fanOutToUsers(perItem: DataFrame, pairs: DataFrame): DataFrame = {
+    val (recs, m) = (col("recommendations"), col("m"))
+    perItem.join(pairs, col("queryItemId") === col("ITEM_ID"), "inner")
+      .select(col("queryItemId"), col("USER_ID").as("userId"),
+        when(m > 1, flatten(transform(recs, r => array_repeat(r, m))))
+          .otherwise(recs).as("recommendations"))
+  }
 
   /** G1 + P5/P6: project the query key and unnest the ordered rec array,
     * keeping parents whose array is null/empty (reference
@@ -86,16 +134,19 @@ object Ops {
         val fields =
           if (metadataFields.nonEmpty) metadataFields
           else meta.columns.filter(_ != "id").toSeq
-        val structCols = col("recItemId").as("itemId") +:
+        val recItemId = col("exploded.recItemId")
+        val structCols = recItemId.as("itemId") +:
           fields.map(f => col(s"meta.$f").as(f))
-        exploded
+        // An explicit select of the exploded side's columns: dropping the
+        // metadata columns by name would also drop an exploded column that
+        // a metadata field happens to share a name with (`pos`, the key).
+        val kept = exploded.columns.toSeq.filter(_ != "recItemId")
+          .map(c => col(s"exploded.`$c`"))
+        exploded.alias("exploded")
           .join(broadcast(meta.alias("meta")),
-            col("recItemId") === col("meta.id"), "left_outer")
-          .withColumn("recItem",
-            when(col("recItemId").isNull, lit(null))
-              .otherwise(struct(structCols: _*)))
-          .drop("recItemId")
-          .drop(meta.columns.toIndexedSeq: _*)
+            recItemId === col("meta.id"), "left_outer")
+          .select(kept :+ when(recItemId.isNull, lit(null))
+            .otherwise(struct(structCols: _*)).as("recItem"): _*)
     }
 
   /** W1 + A1, optimized shape (SURVEY.md §4.3#2): one hash aggregate with

@@ -23,18 +23,25 @@ final case class JobResult(jobName: String, runDateTime: String,
 /** The two ETL jobs (reference `src/glue/related_items_etl.py` and
   * `user_personalization_etl.py`) as one parameterized dataflow:
   *
-  *   read -> split errors -> [map users] -> explode -> decorate
-  *        -> assemble -> [delta check] -> stamp -> write [-> state]
+  *   read -> split errors -> explode -> decorate -> assemble
+  *        -> [fan out to users] -> [delta check] -> stamp -> write
+  *        [-> state]
   *
-  * Differences handled by [[JobSpec]]: related-items joins a user-item
-  * mapping and keys groups by (queryItemId, userId); user-personalization
-  * has no mapping and keys by queryUserId alone. Reference quirks fixed,
-  * not replicated (SURVEY.md §2.13): paths derive from the job's own type
-  * (#1), the decorate routine is shared so the wrong-window-key bug can't
-  * recur (#2), `performDeltaCheck` accepts both scopes (#3), and state IS
-  * written back after a sync (#4). The exploded frame is persisted across
-  * the connector loop and decorate+assemble is memoized per metadata
-  * field list, so N connectors cost ONE scan of the batch input (#5).
+  * Differences handled by [[JobSpec]]: related-items fans each query
+  * item's list out to the users a user-item mapping gives it and keys
+  * groups by (queryItemId, userId); user-personalization has no mapping
+  * and keys by queryUserId alone. Explode, decorate and assemble run once
+  * per query key: the reference joins the mapping first and repeats them
+  * for every mapped user (`related_items_etl.py:159-172`, then
+  * `:202-214`); [[graft.etl.Ops.fanOutToUsers]] gives the same rows.
+  * Reference quirks fixed, not replicated (SURVEY.md §2.13): paths derive
+  * from the job's own type (#1), the decorate routine is shared so the
+  * wrong-window-key bug can't recur (#2), `performDeltaCheck` accepts both
+  * scopes (#3), and state IS written back after a sync (#4). The exploded
+  * frame and the aggregated mapping are persisted across the connector
+  * loop and decorate+assemble+fan-out is memoized per metadata field
+  * list, so N connectors cost ONE scan of the batch input and ONE of the
+  * mapping (#5).
   */
 object Jobs {
 
@@ -102,17 +109,10 @@ object Jobs {
     val (ok, _) = Ops.splitErrors(observedRaw)
     val (_, errs) = Ops.splitErrors(raw)
 
-    val mapped =
-      if (spec.usesMapping) {
-        val mapping = Readers.csv(spark,
-          s"$jobRoot/input/user_item_mapping", Schemas.userItemMapping)
-        Ops.mapUsers(ok, mapping)
-      } else ok
-
-    val carry: Seq[(String, String)] =
-      if (spec.usesMapping) Seq("USER_ID" -> "userId") else Nil
-    val exploded = Ops.explodeRecs(mapped, spec.queryKeyPath,
-      spec.queryKeyAlias, carry)
+    // Explode, decorate and assemble per query key; related-items jobs
+    // fan the per-item lists out to their users only after assembly.
+    val exploded = Ops.explodeRecs(ok, spec.queryKeyPath,
+      spec.queryKeyAlias, Nil)
 
     // Item metadata is optional and open-schema (existence-gated read,
     // reference `related_items_etl.py:175-189`).
@@ -120,18 +120,27 @@ object Jobs {
       s"$jobRoot/input/item_metadata")
 
     val outputRoot = s"$jobRoot/output"
-    // Shared upstream: every connector consumes the same exploded frame,
-    // and connectors that request the same metadata field list share one
-    // decorate+assemble subtree — N connectors cost ONE scan of the batch
-    // input, not N (the reference re-runs the whole Glue dataflow per
-    // connector).
+    // Shared upstream: every connector consumes the same exploded frame
+    // and the same aggregated mapping, and connectors that request the
+    // same metadata field list share one decorate+assemble+fan-out
+    // subtree — N connectors cost ONE scan of the batch input and ONE of
+    // the mapping, not N (the reference re-runs the whole Glue dataflow
+    // per connector).
     val persistedExploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
+    val persistedPairs: Option[DataFrame] =
+      if (spec.usesMapping)
+        Some(Ops.mappingPairCounts(Readers.csv(spark,
+          s"$jobRoot/input/user_item_mapping", Schemas.userItemMapping))
+          .persist(StorageLevel.MEMORY_AND_DISK))
+      else None
     val assembledByFields =
       scala.collection.mutable.Map.empty[Seq[String], DataFrame]
     def assembledFor(fields: Seq[String]): DataFrame =
       assembledByFields.getOrElseUpdate(fields, {
         val decorated = Ops.decorate(persistedExploded, metadata, fields)
-        Ops.assembleRecommendations(decorated, spec.groupKeys)
+        val perKey = Ops.assembleRecommendations(decorated,
+          Seq(spec.queryKeyAlias))
+        persistedPairs.fold(perKey)(Ops.fanOutToUsers(perKey, _))
           .persist(StorageLevel.MEMORY_AND_DISK)
       })
     // Error diagnostics must survive a mid-loop connector failure (the
@@ -240,6 +249,7 @@ object Jobs {
     } finally {
       assembledByFields.values.foreach(_.unpersist())
       persistedExploded.unpersist()
+      persistedPairs.foreach(_.unpersist())
     }
   }
 }

@@ -5,11 +5,14 @@ import java.time.LocalDateTime
 import org.apache.spark.sql.functions._
 
 import graft.config.JobConfig
+import graft.etl.Ops
+import graft.io.{Readers, Writers}
 import graft.jobs.Jobs
+import graft.schema.Schemas
 
 /** Golden end-to-end test of the full job dataflow: read -> split ->
-  * map -> explode -> decorate -> assemble -> [delta] -> stamp -> write
-  * -> state, against a reference-shaped jobRoot layout.
+  * explode -> decorate -> assemble -> [fan out] -> [delta] -> stamp ->
+  * write -> state, against a reference-shaped jobRoot layout.
   */
 class JobsSpec extends SparkSpec {
   import spark.implicits._
@@ -76,6 +79,68 @@ class JobsSpec extends SparkSpec {
     assert(stamp.toSeq == Seq(
       org.apache.spark.sql.Row("ri_job", "2024-01-02T03:04:05.000",
         "rec_", "US")))
+  }
+
+  test("related-items output equals the map-users-first formulation") {
+    val root = tmpDir("jobdiff")
+    Seq(
+      """{"input":{"itemId":"i1"},"output":{"recommendedItems":["p1","p2"]}}""",
+      // two batch lines for i2
+      """{"input":{"itemId":"i2"},"output":{"recommendedItems":["p2"]}}""",
+      """{"input":{"itemId":"i2"},"output":{"recommendedItems":["p3","p1"]}}""",
+      """{"input":{"itemId":"i3"},"output":{"recommendedItems":null}}""",
+      """{"input":{"itemId":"i4"},"output":{"recommendedItems":[]}}""",
+      """{"input":{"itemId":"i5"},"error":"SIMULATED"}""",
+      // no mapping rows for i6
+      """{"input":{"itemId":"i6"},"output":{"recommendedItems":["p1"]}}"""
+    ).toDF("value").coalesce(1).write.mode("overwrite")
+      .text(s"$root/input/batch")
+    // (u1,i1) listed twice, an empty USER_ID twice for i1 and once for
+    // i2, and i9 mapped with no batch line.
+    Seq("USER_ID,ITEM_ID", "u1,i1", "u2,i1", "u1,i1", ",i1", ",i1",
+      "u1,i2", "u3,i2", ",i2", "u3,i3", "u4,i4", "u5,i9")
+      .toDF("value").coalesce(1).write.mode("overwrite")
+      .text(s"$root/input/user_item_mapping")
+    // p2 is a decorate miss.
+    Seq("""{"id":"p1","brand":"B1","price":"9.99"}""",
+      """{"id":"p3","brand":"B3","price":"1.50"}""").toDF("value")
+      .coalesce(1).write.mode("overwrite")
+      .text(s"$root/input/item_metadata")
+    val cfg = JobConfig.parse(
+      s"""{"batchInferencePath": "$root/input/batch",
+         |"connectors": {"brand": {"itemMetadataFields": ["brand"],
+         |  "attributePrefix": "rec_", "otherAttributes": {"c": "US"}},
+         |  "all": {}}}""".stripMargin)
+    val clock = LocalDateTime.of(2024, 1, 2, 3, 4, 5)
+    val result = Jobs.run(spark, Jobs.RelatedItems, root, "j", cfg, clock)
+
+    val (ok, _) = Ops.splitErrors(Readers.jsonl(spark,
+      s"$root/input/batch", Schemas.relatedItemsBatchInference))
+    val mapping = Readers.csv(spark, s"$root/input/user_item_mapping",
+      Schemas.userItemMapping)
+    val meta = Readers.jsonlInferIfExists(spark, s"$root/input/item_metadata")
+    val exploded = Ops.explodeRecs(Ops.mapUsers(ok, mapping), "input.itemId",
+      "queryItemId", Seq("USER_ID" -> "userId"))
+    for (out <- result.connectors) {
+      val cc = cfg.connectors(out.connector)
+      val old = Ops.assembleRecommendations(
+        Ops.decorate(exploded, meta, cc.itemMetadataFields),
+        Seq("queryItemId", "userId"))
+      val oldDir = Writers.connectorOutput(
+        Ops.stampJobInfo(old, "j", Jobs.runDateTimeFmt.format(clock),
+          Some((cc.attributePrefix, cc.otherAttributes))),
+        s"$root/old_output", out.connector, clock)
+      val got = spark.read.text(out.outputDir)
+      val want = spark.read.text(oldDir)
+      // (i1,u1) (i1,u2) (i1,null) (i2,u1) (i2,u3) (i2,null) (i3,u3) (i4,u4)
+      assert(out.rowsWritten == 8 && want.count() == 8)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        s"${out.connector}: Jobs.run output differs from the old order")
+    }
+    val i1u1 = spark.read.json(result.connectors.head.outputDir)
+      .where(col("queryItemId") === "i1" && col("userId") === "u1")
+      .select(col("recommendations.itemId")).as[Seq[String]].collect()
+    assert(i1u1.toSeq == Seq(Seq("p1", "p1", "p2", "p2")))
   }
 
   test("delta check across runs: second unchanged run emits zero rows") {
@@ -213,6 +278,44 @@ class JobsSpec extends SparkSpec {
     // The second connector must reuse the persisted upstream: it may read
     // the (small) cached assembled frame again, but NOT re-scan the batch
     // input and rebuild the chain — which would roughly double the reads.
+    assert(rr2 < (rr1 * 1.6).toLong,
+      s"two-connector run read $rr2 records vs $rr1 for one connector")
+  }
+
+  test("related-items connectors share ONE scan of the user-item mapping") {
+    // 500 items x 4 users: a per-field-list re-read of the mapping CSV
+    // would add 2000 records to the second connector's reads.
+    def fixture(tag: String): String = {
+      val root = tmpDir(tag)
+      (1 to 500).map(i =>
+        s"""{"input":{"itemId":"i$i"},"output":{"recommendedItems":["a$i","b$i"]}}""")
+        .toDF("value").coalesce(1).write.mode("overwrite")
+        .text(s"$root/input/batch")
+      (for (i <- 1 to 500; u <- 1 to 4) yield (s"u$u", s"i$i"))
+        .toDF("USER_ID", "ITEM_ID").coalesce(1).write.mode("overwrite")
+        .option("header", "true").csv(s"$root/input/user_item_mapping")
+      (1 to 50).map(i => s"""{"id":"a$i","brand":"B$i","price":"$i"}""")
+        .toDF("value").coalesce(1).write.mode("overwrite")
+        .text(s"$root/input/item_metadata")
+      root
+    }
+    def cfg(root: String, connectors: String) = JobConfig.parse(
+      s"""{"batchInferencePath": "$root/input/batch",
+         |"connectors": {$connectors}}""".stripMargin)
+    val clock = LocalDateTime.of(2024, 1, 1, 0, 0, 0)
+
+    val root1 = fixture("mapshare1")
+    val rr1 = recordsReadDuring {
+      Jobs.run(spark, Jobs.RelatedItems, root1, "j",
+        cfg(root1, """"a": {"itemMetadataFields": ["brand"]}"""), clock)
+    }
+    val root2 = fixture("mapshare2")
+    val rr2 = recordsReadDuring {
+      val r = Jobs.run(spark, Jobs.RelatedItems, root2, "j",
+        cfg(root2, """"a": {"itemMetadataFields": ["brand"]},
+          |"b": {"itemMetadataFields": ["price"]}""".stripMargin), clock)
+      assert(r.connectors.map(_.rowsWritten) == Seq(2000L, 2000L))
+    }
     assert(rr2 < (rr1 * 1.6).toLong,
       s"two-connector run read $rr2 records vs $rr1 for one connector")
   }

@@ -83,6 +83,47 @@ class OpsSpec extends SparkSpec {
     assert(out.columns.toSeq == Seq("itemId", "brand", "price"))
   }
 
+  test("decorate keeps exploded columns a metadata field shares a name with") {
+    val exploded = Ops.explodeRecs(
+      batch(("1", Seq("a", "b"), null), ("2", null, null)),
+      "input.itemId", "queryItemId", Nil)
+    val plain = Seq(("a", "BrandA")).toDF("id", "brand")
+    val clashing = Seq(("a", "BrandA", 7L, "q")).toDF(
+      "id", "brand", "pos", "queryItemId")
+    def decorated(meta: org.apache.spark.sql.DataFrame) =
+      Ops.decorate(exploded, Some(meta), Seq("brand"))
+    val (want, got) = (decorated(plain), decorated(clashing))
+    assert(got.columns.toSeq == Seq("queryItemId", "pos", "recItem"))
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    val assembled = Ops.assembleRecommendations(got, Seq("queryItemId"))
+      .orderBy("queryItemId").select("recommendations.itemId")
+      .as[Seq[String]].collect()
+    assert(assembled.toSeq == Seq(Seq("a", "b"), Nil))
+  }
+
+  test("fanOutToUsers repeats a duplicated pair's list, keeps null users") {
+    val perItem = Seq(("i1", Seq("a", "b")), ("i2", Nil), ("i3", Seq("c")))
+      .toDF("queryItemId", "ids")
+      .select(col("queryItemId"),
+        transform(col("ids"), x => struct(x.as("itemId")))
+          .as("recommendations"))
+    val mapping = Seq(("u1", "i1"), ("u1", "i1"), ("u2", "i1"),
+      (null, "i1"), (null, "i1"), ("u1", "i2"), ("u9", "i9"))
+      .toDF("USER_ID", "ITEM_ID")
+    val out = Ops.fanOutToUsers(perItem, Ops.mappingPairCounts(mapping))
+    assert(out.columns.toSeq == Seq("queryItemId", "userId",
+      "recommendations"))
+    val got = out.select(col("queryItemId"), col("userId"),
+      col("recommendations.itemId")).collect()
+      .map(r => (r.getString(0), Option(r.getString(1)), r.getSeq[String](2)))
+      .toSet
+    assert(got == Set(
+      ("i1", Some("u1"), Seq("a", "a", "b", "b")),
+      ("i1", Some("u2"), Seq("a", "b")),
+      ("i1", None, Seq("a", "a", "b", "b")),
+      ("i2", Some("u1"), Seq.empty[String])))
+  }
+
   test("assemble groupBy and windowed shapes agree (differential)") {
     val decorated = Seq(
       ("1", 1L, "b"), ("1", 0L, "a"), ("2", 0L, "x"))
