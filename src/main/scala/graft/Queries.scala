@@ -10,6 +10,8 @@ import graft.config.JobConfig
 import graft.connector.Sinks
 import graft.etl.Ops
 import graft.io.{Bucketing, Readers, StateTable, Writers, ZOrder}
+import graft.jobs.Jobs
+import graft.operators.Skew
 import graft.streaming.{Attribution, DriftMonitor, FileRelay, StreamingDedup}
 
 /** Oracle-checked queries over /root/testdata, one per SURVEY.md §2
@@ -126,7 +128,8 @@ object Queries {
   /** Flatten an assembled recommendations frame to oracle-comparable
     * columns.
     */
-  private def flattenRecs(df: DataFrame, keys: Seq[String]): DataFrame =
+  private[graft] def flattenRecs(df: DataFrame, keys: Seq[String])
+      : DataFrame =
     df.select(keys.map(col) ++ Seq(
       size(col("recommendations")).cast("long").as("n_recs"),
       when(size(col("recommendations")) === 0, lit(null))
@@ -141,17 +144,16 @@ object Queries {
   // ---- pipeline queries ------------------------------------------------
 
   /** Flagship: the full related-items dataflow (S1,P1-P7,J1,J2,G1,W1/A1
-    * rewrite,U1) — reference `related_items_etl.py:99-315`.
+    * rewrite,U1) — reference `related_items_etl.py:99-315`. Runs the
+    * production composition ([[graft.jobs.Jobs.assemble]]): one list per
+    * query item, fanned out to its mapped users after assembly.
     */
   def riPipeline(s: SparkSession, dir: String): DataFrame = {
     val (ok, _) = Ops.splitErrors(riBatch(s, dir, rebalance = true))
-    val merged = Ops.mapUsers(ok, riMapping(s, dir))
-    val exploded = Ops.explodeRecs(merged, "input.itemId", "queryItemId",
-      Seq("USER_ID" -> "userId"))
-    val decorated = Ops.decorate(exploded, Some(partMetadata(s, dir)),
-      Seq("p_brand"))
-    val assembled =
-      Ops.assembleRecommendations(decorated, Seq("queryItemId", "userId"))
+    val exploded = Ops.explodeRecs(ok, "input.itemId", "queryItemId", Nil)
+    val assembled = Jobs.assemble(exploded, "queryItemId",
+      Some(partMetadata(s, dir)), Seq("p_brand"),
+      Some(Ops.mappingPairCounts(riMapping(s, dir))))
     val stamped = Ops.stampJobInfo(assembled, "related_items_job", RunTs,
       Some(("recommendation_", Map("country" -> "US"))))
     flattenRecs(stamped, Seq("queryItemId", "userId"))
@@ -161,7 +163,8 @@ object Queries {
   }
 
   /** User-personalization variant (`user_personalization_etl.py:157-263`
-    * with quirks §2.13#1-2 fixed): keyed by queryUserId, no mapping join.
+    * with quirks §2.13#1-2 fixed): keyed by queryUserId, no mapping join,
+    * through the production composition ([[graft.jobs.Jobs.assemble]]).
     * "Users" are customers; their recs = parts across their orders.
     */
   def upPipeline(s: SparkSession, dir: String): DataFrame = {
@@ -179,10 +182,8 @@ object Queries {
         lit(null).cast("string").as("error"))
     val (ok, _) = Ops.splitErrors(batch)
     val exploded = Ops.explodeRecs(ok, "input.userId", "queryUserId", Nil)
-    val decorated = Ops.decorate(exploded, Some(partMetadata(s, dir)),
-      Seq("p_brand"))
-    val assembled =
-      Ops.assembleRecommendations(decorated, Seq("queryUserId"))
+    val assembled = Jobs.assemble(exploded, "queryUserId",
+      Some(partMetadata(s, dir)), Seq("p_brand"), None)
     flattenRecs(assembled, Seq("queryUserId")).orderBy("queryUserId")
   }
 
@@ -1074,13 +1075,13 @@ object Queries {
       .orderBy("rule")
   }
 
-  /** Skew-safe salted equi-join (Ops.saltedJoin): lineitem facts
+  /** Skew-safe salted equi-join (Skew.saltedJoin): lineitem facts
     * scattered over 8 salted sub-partitions, orders dim replicated per
     * salt. Row-identical to the plain join, so the oracle is the plain
     * join.
     */
   def saltedJoinQ(s: SparkSession, dir: String): DataFrame =
-    Ops.saltedJoin(
+    Skew.saltedJoin(
         t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"),
           col("l_linenumber")),
         t(s, dir, "orders").select(col("o_orderkey"),
@@ -2483,14 +2484,14 @@ object Queries {
           "o_orderstatus", "o_orderpriority", "o_orderdate"))
       .orderBy("col_name")
 
-  /** Skew-safe two-phase top-k per group (Ops.topKPerGroup): top-3
+  /** Skew-safe two-phase top-k per group (Skew.topKPerGroup): top-3
     * cheap-quantity lineitems per order by price, with (partkey,
     * linenumber) tiebreakers for a total order. The salted shape is
     * exact regardless of salt assignment, so the oracle is a plain
     * window row_number.
     */
   def topkGroup(s: SparkSession, dir: String): DataFrame =
-    Ops.topKPerGroup(
+    Skew.topKPerGroup(
         t(s, dir, "lineitem").where(col("l_quantity") < 10),
         groupKeys = Seq("l_orderkey"),
         payload = Seq("l_extendedprice", "l_partkey", "l_linenumber"),
@@ -2502,7 +2503,7 @@ object Queries {
     * same result, different physical shape.
     */
   def topkBounded(s: SparkSession, dir: String): DataFrame =
-    Ops.topKPerGroup(
+    Skew.topKPerGroup(
         t(s, dir, "lineitem").where(col("l_quantity") < 10),
         groupKeys = Seq("l_orderkey"),
         payload = Seq("l_extendedprice", "l_partkey", "l_linenumber"),

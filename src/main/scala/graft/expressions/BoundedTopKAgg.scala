@@ -20,14 +20,14 @@ import org.apache.spark.sql.types._
   * buffer, emitted as a descending array.
   *
   * This is the memory-bounded alternative to
-  * `sort_array(collect_list(...))[1..k]` ([[graft.etl.Ops.topKPerGroup]]
-  * phase 1), whose collect_list buffer grows O(rows-per-key) before the
-  * slice: a hot key's buffer here never exceeds k rows regardless of
-  * input skew, and map-side partial aggregation ships at most k rows
-  * per (key, mapper) into the shuffle. The trade is leaving whole-stage
-  * codegen for the aggregate (TypedImperativeAggregate is interpreted),
-  * which is why the operator exposes it behind a flag instead of
-  * defaulting to it.
+  * `sort_array(collect_list(...))[1..k]`
+  * ([[graft.operators.Skew.topKPerGroup]] phase 1), whose collect_list
+  * buffer grows O(rows-per-key) before the slice: a hot key's buffer
+  * here never exceeds k rows regardless of input skew, and map-side
+  * partial aggregation ships at most k rows per (key, mapper) into the
+  * shuffle. The trade is leaving whole-stage codegen for the aggregate
+  * (TypedImperativeAggregate is interpreted), which is why the operator
+  * exposes it behind a flag instead of defaulting to it.
   *
   * Buffer rows are defensively projected+copied UnsafeRows (input rows
   * are reused by the scan); serialization is length-prefixed UnsafeRow

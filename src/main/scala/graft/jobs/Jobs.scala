@@ -34,6 +34,8 @@ final case class JobResult(jobName: String, runDateTime: String,
   * per query key: the reference joins the mapping first and repeats them
   * for every mapped user (`related_items_etl.py:159-172`, then
   * `:202-214`); [[graft.etl.Ops.fanOutToUsers]] gives the same rows.
+  * [[assemble]] is the one definition of decorate -> assemble -> [fan
+  * out]; every caller of that dataflow goes through it.
   * Reference quirks fixed, not replicated (SURVEY.md §2.13): paths derive
   * from the job's own type (#1), the decorate routine is shared so the
   * wrong-window-key bug can't recur (#2), `performDeltaCheck` accepts both
@@ -71,6 +73,21 @@ object Jobs {
     val queryKeyAlias = "queryUserId"
     val groupKeys = Seq("queryUserId")
     val usesMapping = false
+  }
+
+  /** Decorate `exploded` ([[graft.etl.Ops.explodeRecs]] keyed by
+    * `keyAlias`, nothing carried), assemble one list per key, then fan
+    * the lists out to the users in `pairs`
+    * ([[graft.etl.Ops.mappingPairCounts]]) when given. Called by [[run]],
+    * `Queries.riPipeline`/`upPipeline` and
+    * [[graft.streaming.StreamingJob.runIncremental]].
+    */
+  def assemble(exploded: DataFrame, keyAlias: String,
+      metadata: Option[DataFrame], fields: Seq[String],
+      pairs: Option[DataFrame]): DataFrame = {
+    val perKey = Ops.assembleRecommendations(
+      Ops.decorate(exploded, metadata, fields), Seq(keyAlias))
+    pairs.fold(perKey)(Ops.fanOutToUsers(perKey, _))
   }
 
   /** Run a job end-to-end against a root directory laid out like the
@@ -136,13 +153,9 @@ object Jobs {
     val assembledByFields =
       scala.collection.mutable.Map.empty[Seq[String], DataFrame]
     def assembledFor(fields: Seq[String]): DataFrame =
-      assembledByFields.getOrElseUpdate(fields, {
-        val decorated = Ops.decorate(persistedExploded, metadata, fields)
-        val perKey = Ops.assembleRecommendations(decorated,
-          Seq(spec.queryKeyAlias))
-        persistedPairs.fold(perKey)(Ops.fanOutToUsers(perKey, _))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+      assembledByFields.getOrElseUpdate(fields,
+        assemble(persistedExploded, spec.queryKeyAlias, metadata, fields,
+          persistedPairs).persist(StorageLevel.MEMORY_AND_DISK))
     // Error diagnostics must survive a mid-loop connector failure (the
     // reference writes errors BEFORE any connector send,
     // `related_items_etl.py:114-132`): the write fires as soon as the

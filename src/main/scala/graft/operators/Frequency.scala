@@ -102,7 +102,7 @@ object Frequency {
       .withColumn("lift", round(
         (col("n_co") * lit(nBaskets)).cast("double") /
           (col("c_a") * col("c_b")).cast("double"), 6))
-    graft.etl.Ops.topKPerGroup(scored, Seq("item"),
+    Skew.topKPerGroup(scored, Seq("item"),
         Seq("n_co", "lift", "related"), k)
       .select(col("item"), col("rank"), col("n_co"), col("lift"),
         col("related"))

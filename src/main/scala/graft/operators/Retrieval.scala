@@ -73,7 +73,7 @@ object Retrieval {
     * not a `count over (partition by term)` window — the window
     * formulation buffers every row of a hot term ("the" ~ one row per
     * document) on one reducer, the aggregate collapses them map-side.
-    * The per-doc head reuses [[graft.etl.Ops.topKPerGroup]] — salted
+    * The per-doc head reuses [[Skew.topKPerGroup]] — salted
     * two-phase top-k, immune to the million-token document.
     *
     * @param cache storage level for the tf subtree, which both the
@@ -96,7 +96,7 @@ object Retrieval {
     val scored = tf.join(dfTerm, "term")
       .withColumn("score", round(col("tf") *
         (log(lit(n + 1.0) / (col("df").cast("double") + 1.0)) + 1.0), 6))
-    graft.etl.Ops.topKPerGroup(scored, Seq("doc_id"),
+    Skew.topKPerGroup(scored, Seq("doc_id"),
       Seq("score", "term"), k)
   }
 
@@ -160,7 +160,7 @@ object Retrieval {
     *
     * Determinism: products accumulate in DECIMAL(28,12), scores round
     * to 6 BEFORE the head, ties break doc_id-desc inside the salted
-    * two-phase [[graft.etl.Ops.topKPerGroup]] — engine-exact, skew-
+    * two-phase [[Skew.topKPerGroup]] — engine-exact, skew-
     * immune (a stop-word-heavy bucket cannot pin one reducer).
     *
     * @param vecs (idCol, ix, w) unit-norm long-form vectors
@@ -184,7 +184,7 @@ object Retrieval {
       .groupBy(col("query_id"), col(idCol))
       .agg(round(sum((col("w") * col("qw")).cast("decimal(28,12)"))
         .cast("double"), 6).as("cosine"))
-    graft.etl.Ops.topKPerGroup(scored, Seq("query_id"),
+    Skew.topKPerGroup(scored, Seq("query_id"),
       Seq("cosine", idCol), k)
   }
 

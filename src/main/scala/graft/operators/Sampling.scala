@@ -320,7 +320,7 @@ object Sampling {
     * growing the corpus only ever SWAPS members in deterministically —
     * reruns and engines agree row for row.
     *
-    * Scale shape: the head reuses [[graft.etl.Ops.topKPerGroup]]
+    * Scale shape: the head reuses [[Skew.topKPerGroup]]
     * (salted two-phase, O(rows/salts) buffers per hot stratum), then
     * one equi-join restores the full-width rows — only (stratum, key,
     * rank) ever shuffles for the selection itself. The restore join
@@ -445,7 +445,7 @@ object Sampling {
       : org.apache.spark.sql.DataFrame = {
     val slim = df.select(col(stratumCol), col(keyCol))
       .withColumn("nb", -saltedBucket(col(keyCol), SampleSalt))
-    val picked = graft.etl.Ops.topKPerGroup(slim, Seq(stratumCol),
+    val picked = Skew.topKPerGroup(slim, Seq(stratumCol),
         Seq("nb", keyCol), quota)
       .select(col(stratumCol).as("__qs_stratum"),
         col(keyCol).as("__qs_key"), col("rank"))
@@ -479,7 +479,7 @@ object Sampling {
     * instead of materializing the full catalog before refusing with a
     * pointer to the bounded alternative. The interaction anti-join
     * shuffles (user, item) keys only; the per-user head reuses
-    * [[graft.etl.Ops.topKPerGroup]].
+    * [[Skew.topKPerGroup]].
     *
     * @return (userCol, rank 1..k, itemCol)
     */
@@ -509,7 +509,7 @@ object Sampling {
     val fresh = cand.join(
       interactions.select(col(userCol), col(itemCol)).distinct(),
       Seq(userCol, itemCol), "left_anti")
-    graft.etl.Ops.topKPerGroup(fresh, Seq(userCol),
+    Skew.topKPerGroup(fresh, Seq(userCol),
         Seq("h", itemCol), k)
       .select(col(userCol), col("rank"), col(itemCol))
   }
@@ -527,7 +527,7 @@ object Sampling {
     * stratified candidate set, not the full catalog); the user side
     * streams one row per (user x pool item) through a codegen'd
     * cosine projection, positives leave via a key-only anti-join,
-    * and the per-user head reuses [[graft.etl.Ops.topKPerGroup]].
+    * and the per-user head reuses [[Skew.topKPerGroup]].
     * Nothing corpus-sized ever shuffles with vectors attached except
     * the user's own single vector row. As in [[negativeSample]], the
     * bounded-pool contract is enforced by ONE construction-time
@@ -569,7 +569,7 @@ object Sampling {
     val fresh = scored.join(
       interactions.select(col(userCol), col(itemCol)).distinct(),
       Seq(userCol, itemCol), "left_anti")
-    graft.etl.Ops.topKPerGroup(fresh, Seq(userCol),
+    Skew.topKPerGroup(fresh, Seq(userCol),
         Seq("cosine", itemCol), k)
       .select(col(userCol), col("rank"), col(itemCol), col("cosine"))
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.etl.Ops
 import graft.io.Writers
+import graft.jobs.Jobs
 
 /** Incremental connector sync: the batch job's operator chain (split ->
   * explode -> decorate -> assemble -> stamp -> write) applied per
@@ -36,12 +37,11 @@ object StreamingJob {
       (batch, id) =>
         val (ok, _) = Ops.splitErrors(batch)
         val exploded = Ops.explodeRecs(ok, queryKeyPath, queryKeyAlias, Nil)
-        val decorated = Ops.decorate(exploded, metadata, metadataFields)
-        val assembled =
-          Ops.assembleRecommendations(decorated, Seq(queryKeyAlias))
+        val assembled = Jobs.assemble(exploded, queryKeyAlias, metadata,
+          metadataFields, None)
         val runTime = clock.plusSeconds(id)
         val stamped = Ops.stampJobInfo(assembled, jobName,
-          graft.jobs.Jobs.runDateTimeFmt.format(runTime), None)
+          Jobs.runDateTimeFmt.format(runTime), None)
         Writers.connectorOutput(stamped, outputRoot, connector, runTime)
         batches += 1
     }

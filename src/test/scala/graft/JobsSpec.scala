@@ -1,7 +1,11 @@
 package graft
 
 import java.time.LocalDateTime
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.config.JobConfig
@@ -35,6 +39,20 @@ class JobsSpec extends SparkSpec {
     Seq("""{"id":"p1","brand":"B1","price":"9.99"}""").toDF("value")
       .coalesce(1).write.mode("overwrite")
       .text(s"$root/input/item_metadata")
+  }
+
+  /** The reference's related-items order (`related_items_etl.py:159-172`,
+    * then `:202-214`): join the mapping first, explode carrying the user,
+    * then decorate and assemble once per (item, user). `Jobs.assemble`
+    * assembles once per item and fans out afterwards; the differential
+    * tests below compare the two.
+    */
+  private def mapUsersFirst(ok: DataFrame, mapping: DataFrame,
+      meta: Option[DataFrame], fields: Seq[String]): DataFrame = {
+    val exploded = Ops.explodeRecs(Ops.mapUsers(ok, mapping), "input.itemId",
+      "queryItemId", Seq("USER_ID" -> "userId"))
+    Ops.assembleRecommendations(Ops.decorate(exploded, meta, fields),
+      Seq("queryItemId", "userId"))
   }
 
   private def config(root: String, delta: Boolean) = JobConfig.parse(
@@ -119,13 +137,9 @@ class JobsSpec extends SparkSpec {
     val mapping = Readers.csv(spark, s"$root/input/user_item_mapping",
       Schemas.userItemMapping)
     val meta = Readers.jsonlInferIfExists(spark, s"$root/input/item_metadata")
-    val exploded = Ops.explodeRecs(Ops.mapUsers(ok, mapping), "input.itemId",
-      "queryItemId", Seq("USER_ID" -> "userId"))
     for (out <- result.connectors) {
       val cc = cfg.connectors(out.connector)
-      val old = Ops.assembleRecommendations(
-        Ops.decorate(exploded, meta, cc.itemMetadataFields),
-        Seq("queryItemId", "userId"))
+      val old = mapUsersFirst(ok, mapping, meta, cc.itemMetadataFields)
       val oldDir = Writers.connectorOutput(
         Ops.stampJobInfo(old, "j", Jobs.runDateTimeFmt.format(clock),
           Some((cc.attributePrefix, cc.otherAttributes))),
@@ -141,6 +155,20 @@ class JobsSpec extends SparkSpec {
       .where(col("queryItemId") === "i1" && col("userId") === "u1")
       .select(col("recommendations.itemId")).as[Seq[String]].collect()
     assert(i1u1.toSeq == Seq(Seq("p1", "p1", "p2", "p2")))
+  }
+
+  test("riPipeline equals the map-users-first formulation on sf0.001") {
+    val dir = "/root/testdata/sf0.001"
+    val (ok, _) = Ops.splitErrors(Queries.riBatch(spark, dir))
+    val old = mapUsersFirst(ok, Queries.riMapping(spark, dir),
+      Some(Queries.partMetadata(spark, dir)), Seq("p_brand"))
+    val want = Queries.flattenRecs(old, Seq("queryItemId", "userId"))
+      .withColumn("jobName", lit("related_items_job"))
+      .withColumn("runDateTime", lit(Queries.RunTs))
+    val got = Queries.riPipeline(spark, dir)
+    assert(!got.isEmpty)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      "riPipeline differs from the map-users-first formulation")
   }
 
   test("delta check across runs: second unchanged run emits zero rows") {
@@ -223,17 +251,11 @@ class JobsSpec extends SparkSpec {
     assert(st.where(col("queryItemId") === "i3").count() == 0)
   }
 
-  /** Total external+cached records read by tasks while `body` runs; polls
-    * the async listener bus until the counter goes quiet.
+  /** Runs `body` with `listener` registered, then polls the async
+    * listener bus until `acc`, which the listener feeds, goes quiet.
     */
-  private def recordsReadDuring(body: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          acc.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
+  private def countedDuring(acc: AtomicLong, listener: SparkListener)(
+      body: => Unit): Long = {
     spark.sparkContext.addSparkListener(listener)
     try {
       body
@@ -246,6 +268,63 @@ class JobsSpec extends SparkSpec {
       }
       acc.get
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Total external+cached records read by tasks while `body` runs. */
+  private def recordsReadDuring(body: => Unit): Long = {
+    val acc = new AtomicLong
+    countedDuring(acc, new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          acc.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    })(body)
+  }
+
+  /** Spark jobs submitted while `body` runs. */
+  private def jobsDuring(body: => Unit): Long = {
+    val acc = new AtomicLong
+    countedDuring(acc, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        acc.incrementAndGet()
+    })(body)
+  }
+
+  test("a sync submits a pinned number of Spark jobs") {
+    val clock = LocalDateTime.of(2024, 1, 2, 3, 4, 5)
+    // Related-items, two field lists, snapshot state, one error record.
+    val ri = (1 to 3).map { i =>
+      val root = tmpDir(s"jobcountri$i")
+      writeFixtures(root)
+      val cfg = JobConfig.parse(
+        s"""{"batchInferencePath": "$root/input/batch",
+           |"connectors": {"a": {"itemMetadataFields": ["brand"]},
+           |  "b": {"itemMetadataFields": ["price"]}}}""".stripMargin)
+      jobsDuring(Jobs.run(spark, Jobs.RelatedItems, root, "j", cfg, clock))
+    }
+    // User-personalization, keyed state with the delta check: a cold run,
+    // then a resync against its state with one changed user.
+    val up = (1 to 3).map { i =>
+      val root = tmpDir(s"jobcountup$i")
+      val cfgs = Seq("p1", "p2").map { u2 =>
+        Seq(
+          """{"input":{"userId":"u1"},"output":{"recommendedItems":["p1"]}}""",
+          s"""{"input":{"userId":"u2"},"output":{"recommendedItems":["$u2"]}}""")
+          .toDF("value").coalesce(1).write.mode("overwrite")
+          .text(s"$root/input/batch_$u2")
+        JobConfig.parse(
+          s"""{"batchInferencePath": "$root/input/batch_$u2",
+             |"performDeltaCheck": true, "stateFormat": "keyed",
+             |"connectors": {"braze": {}}}""".stripMargin)
+      }
+      jobsDuring(cfgs.zipWithIndex.foreach { case (cfg, day) =>
+        Jobs.run(spark, Jobs.UserPersonalization, root, "j", cfg,
+          clock.plusDays(day))
+      })
+    }
+    // A change that adds a job (an extra scan, an eager count, a cache
+    // materialized twice) moves these counts.
+    assert(ri == Seq.fill(3)(17L), s"related-items sync jobs: $ri")
+    assert(up == Seq.fill(3)(17L), s"keyed resync jobs: $up")
   }
 
   test("connector loop shares ONE scan of the batch input across connectors") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.Ops
 import graft.io.Readers
+import graft.operators.Skew
 import graft.schema.Schemas
 
 /** Per-operator specs for the relational core (SURVEY.md §2.3-§2.10),
@@ -189,7 +190,7 @@ class OpsSpec extends SparkSpec {
     val rows = (1 to 40).map(i => ("k1", i.toDouble % 7, i.toLong)) ++
       Seq(("k2", 5.0, 1L), ("k2", 5.0, 2L), ("k3", 1.0, 1L))
     val df = rows.toDF("key", "score", "id").repartition(4)
-    val twoPhase = Ops.topKPerGroup(df, Seq("key"), Seq("score", "id"),
+    val twoPhase = Skew.topKPerGroup(df, Seq("key"), Seq("score", "id"),
         k = 3, salts = 4)
       .select("key", "rank", "score", "id").as[(String, Long, Double, Long)]
       .collect().toSet
@@ -210,7 +211,7 @@ class OpsSpec extends SparkSpec {
       Seq(("k2", 5.0, 1L), ("k2", 5.0, 2L), ("k3", 1.0, 1L))
     val df = rows.toDF("key", "score", "id").repartition(4)
     def run(bounded: Boolean) =
-      Ops.topKPerGroup(df, Seq("key"), Seq("score", "id"), k = 3,
+      Skew.topKPerGroup(df, Seq("key"), Seq("score", "id"), k = 3,
           salts = 4, boundedBuffers = bounded)
         .select("key", "rank", "score", "id")
         .as[(String, Long, Double, Long)].collect().toSet
@@ -220,7 +221,7 @@ class OpsSpec extends SparkSpec {
     // exactly the global top 3.
     val hot = (1 to 10000).map(i => ("h", i.toLong)).toDF("key", "v")
       .repartition(8)
-    val top = Ops.topKPerGroup(hot, Seq("key"), Seq("v"), k = 3,
+    val top = Skew.topKPerGroup(hot, Seq("key"), Seq("v"), k = 3,
         boundedBuffers = true)
       .select("rank", "v").as[(Long, Long)].collect().toSet
     assert(top == Set((1L, 10000L), (2L, 9999L), (3L, 9998L)))
@@ -296,7 +297,7 @@ class OpsSpec extends SparkSpec {
       Seq(("cold", 1), ("orphan", 9))).toDF("k", "v").repartition(4)
     val dim = Seq(("hot", "H"), ("cold", "C"), ("unused", "U"))
       .toDF("dk", "tag")
-    val salted = Ops.saltedJoin(fact, dim, "k", "dk", salts = 4)
+    val salted = Skew.saltedJoin(fact, dim, "k", "dk", salts = 4)
       .select("k", "v", "tag").as[(String, Int, String)].collect().sorted
     val plain = fact.join(dim, col("k") === col("dk"))
       .select("k", "v", "tag").as[(String, Int, String)].collect().sorted

@@ -63,9 +63,10 @@ class PlanRegressionSpec extends SparkSpec {
   test("q_ri_pipeline: dimension joins broadcast, filters reach the scan") {
     val p = plan("q_ri_pipeline")
     assert(!p.contains("CartesianProduct"))
-    // metadata decorate + mapping joins resolve to broadcast hash joins
-    // (dimension sides are small); the big exploded side never shuffles
-    // for them.
+    // the metadata decorate join resolves to a broadcast hash join
+    // (dimension side is small), so the big exploded side never shuffles
+    // for it. The mapping join is the fan-out after per-item assembly
+    // (`Jobs.assemble`), left unhinted for AQE.
     assert(p.contains("BroadcastHashJoin"))
     // the qty<48 rec filter is pushed into the lineitem parquet scan
     assert(p.contains("PushedFilters: [") &&

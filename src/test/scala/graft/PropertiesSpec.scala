@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.Ops
 import graft.functions.{HashFunctions => H}
-import graft.operators.AsofJoin
+import graft.operators.{AsofJoin, Skew}
 
 /** Randomized invariants for the operators whose correctness arguments
   * are algebraic (metric axioms, formulation equivalence) — seeded, so
@@ -51,7 +51,7 @@ class PropertiesSpec extends SparkSpec {
       val rows = List.fill(30)((s"g${rnd.nextInt(3)}", rnd.nextInt(6),
         rnd.nextInt(100).toLong))
       val df = rows.toDF("k", "score", "id").repartition(3)
-      val two = Ops.topKPerGroup(df, Seq("k"), Seq("score", "id"),
+      val two = Skew.topKPerGroup(df, Seq("k"), Seq("score", "id"),
           k = 2, salts = 3)
         .select("k", "score", "id")
         .as[(String, Int, Long)].collect().sorted.toSeq
@@ -72,7 +72,7 @@ class PropertiesSpec extends SparkSpec {
       val rows = List.fill(40)((s"g${rnd.nextInt(3)}", rnd.nextInt(6),
         rnd.nextInt(100).toLong))
       val df = rows.toDF("k", "score", "id").repartition(4)
-      def run(b: Boolean) = Ops.topKPerGroup(df, Seq("k"),
+      def run(b: Boolean) = Skew.topKPerGroup(df, Seq("k"),
           Seq("score", "id"), k = 2, salts = 3, boundedBuffers = b)
         .select("k", "rank", "score", "id")
         .as[(String, Long, Int, Long)].collect().sorted.toSeq
