@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.StateTable
+
 /** The reference's relational operators as composable
   * `DataFrame => DataFrame` functions (SURVEY.md §2.3-§2.10).
   *
@@ -202,26 +204,58 @@ object Ops {
 
   /** A4 at 100 TB (SURVEY.md §4.3#3): keyed variant — compare a 64-bit
     * payload hash per key instead of shuffling whole `array<struct>` rows
-    * through EXCEPT's aggregate. Emits current rows whose key is absent
-    * from state or whose payload hash changed. Equivalent to
-    * [[deltaCheck]] when `keys` identify rows uniquely in both frames
-    * (proven differentially in DeltaCheckSpec), except it keeps current-
-    * side duplicates; pair with `dropDuplicates(keys)` for exact parity.
+    * through EXCEPT's aggregate. The non-tombstone side of
+    * [[keyedChanges]] ([[changedRows]]): current rows whose key is absent
+    * from state or whose payload hash changed, keys matched null-safe.
+    * Equivalent to [[deltaCheck]] when `keys` identify rows uniquely in
+    * both frames (OpsSpec differential), except it keeps current-side
+    * duplicates; pair with `dropDuplicates(keys)` for exact parity.
     */
   def deltaCheckKeyed(current: DataFrame, state: DataFrame,
+      keys: Seq[String]): DataFrame =
+    changedRows(keyedChanges(current, state, keys))
+
+  /** A4 with the keyed state's tombstones, from ONE join (the shape of
+    * Delta Lake's `MERGE`, Armbrust et al., VLDB 2020): a full outer join
+    * of the current rows against `state` on `keys`, matched null-safe
+    * (`<=>`) so a null key meets its state row as it does under
+    * [[deltaCheck]]'s EXCEPT and the reference's `groupBy`. Each side is
+    * reduced to its key and `xxhash64(to_json(struct(sorted non-key
+    * columns)))` before the join. Emits
+    *
+    *  - current rows that are new or whose payload hash changed, with
+    *    `_deleted = false` (current-side duplicates are all kept);
+    *  - tombstones: keys in `state` but not in `current`, with
+    *    `_deleted = true` and null non-key columns.
+    *
+    * Columns: `keys`, then current's other columns in order, then
+    * [[graft.io.StateTable.DeletedCol]]. The output is what
+    * [[graft.io.StateTable.append]] takes for a keyed sync.
+    */
+  def keyedChanges(current: DataFrame, state: DataFrame,
       keys: Seq[String]): DataFrame = {
     val payload = (df: DataFrame) =>
       xxhash64(to_json(struct(
         df.columns.sorted.filterNot(keys.contains).map(col).toIndexedSeq: _*)))
-    val stateHashed = state
-      .select(keys.map(col) :+ payload(state).as("__stateHash"): _*)
-    current
-      .withColumn("__curHash", payload(current))
-      .join(stateHashed, keys, "left_outer")
-      .where(col("__stateHash").isNull ||
-        col("__curHash") =!= col("__stateHash"))
-      .drop("__curHash", "__stateHash")
+    val stateKey = (k: String) => s"__state_$k"
+    val (curHash, stateHash) = (col("__curHash"), col("__stateHash"))
+    val stateHashed = state.select(keys.map(k => col(k).as(stateKey(k))) :+
+      payload(state).as("__stateHash"): _*)
+    val sameKey = keys.map(k => col(k) <=> col(stateKey(k))).reduce(_ && _)
+    // The hashes are never null, so a null hash marks the absent side.
+    current.withColumn("__curHash", payload(current))
+      .join(stateHashed, sameKey, "full_outer")
+      .where(stateHash.isNull || curHash.isNull || curHash =!= stateHash)
+      .select(keys.map(k => coalesce(col(k), col(stateKey(k))).as(k)) ++
+        current.columns.filterNot(keys.contains).map(col) :+
+        curHash.isNull.as(StateTable.DeletedCol): _*)
   }
+
+  /** The new and changed current rows of [[keyedChanges]]: tombstones
+    * and the `_deleted` column dropped.
+    */
+  def changedRows(changes: DataFrame): DataFrame =
+    changes.where(!col(StateTable.DeletedCol)).drop(StateTable.DeletedCol)
 
   /** U1 as constant-folded columns, not a row closure (reference uses a
     * per-record Python `Map.apply` at `related_items_etl.py:277-297`,

@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * the write-back). A snapshot rewrite is O(state) per sync; at 100 TB
   * the right shape is Delta-style merge-on-read:
   *
-  *  - [[append]] writes only the CHANGED rows (exactly what
-  *    `Ops.deltaCheck` already computes) as a new `v=N` partition —
-  *    O(delta) per sync, plus an optional `_deleted` tombstone column;
+  *  - [[append]] writes only the CHANGED rows and the tombstones (what
+  *    `Ops.keyedChanges` computes from one join) as a new `v=N`
+  *    partition — O(delta) per sync. A tombstone carries its key and
+  *    `_deleted = true` only; its payload columns are null, because
+  *    [[readLatest]] never reads a tombstone's payload;
   *  - [[readLatest]] resolves current state as newest-version-per-key
   *    (one hash shuffle on the key, partition-pruned to live versions);
   *  - [[compact]] folds the version chain back into one snapshot when
@@ -119,7 +121,9 @@ object StateTable {
 
   /** Append `df` as the next version; returns the version written.
     * Rows must be unique per key within one append (the delta-check
-    * output is).
+    * output is). An optional [[DeletedCol]] marks tombstones, which need
+    * only their key columns: the payload of a `_deleted = true` row may be
+    * null.
     *
     * Concurrent-append safe (VERDICT r14 item 6 — the reference allows
     * `MaxConcurrentRuns: 2`, `template.yaml:209`): the data lands in a

@@ -43,7 +43,11 @@ final case class JobResult(jobName: String, runDateTime: String,
   * frame and the aggregated mapping are persisted across the connector
   * loop and decorate+assemble+fan-out is memoized per metadata field
   * list, so N connectors cost ONE scan of the batch input and ONE of the
-  * mapping (#5).
+  * mapping (#5). A keyed-state resync reads its state ONCE per connector:
+  * [[graft.etl.Ops.keyedChanges]] joins it against the assembled rows
+  * into changed rows and tombstones; that frame is persisted for the
+  * output write (its changed rows) and the state append (all of it), and
+  * unpersisted with the others when the run ends.
   */
 object Jobs {
 
@@ -167,6 +171,7 @@ object Jobs {
     // errors write precedes every connector and its failure fails the
     // whole job) — diagnostics are part of the run's contract, not
     // best-effort.
+    val persistedChanges = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var errorsDir: Option[String] = None
     var errorsWritten = false
     def writeErrors(known: Option[Long]): Unit =
@@ -188,8 +193,8 @@ object Jobs {
           // it only under deltaCheck would mean keyed state with the check
           // disabled never deletes anything (silent divergence from the
           // snapshot format, which rewrites state wholesale).
-          val needState = config.deltaCheckFor(connector) ||
-            (keyed && config.writeStateAfterSync)
+          val deltaOn = config.deltaCheckFor(connector)
+          val needState = deltaOn || (keyed && config.writeStateAfterSync)
           val state: Option[DataFrame] =
             if (!needState) None
             else if (keyed) {
@@ -199,12 +204,22 @@ object Jobs {
             } else if (Readers.pathExists(spark, stateDir))
               Some(Readers.jsonl(spark, stateDir, assembled.schema))
             else None
-          val afterDelta = state match {
-            case Some(_) if !config.deltaCheckFor(connector) => assembled
-            case Some(st) if keyed =>
-              Ops.deltaCheckKeyed(assembled, st, spec.groupKeys)
-            case Some(st) => Ops.deltaCheck(assembled, st)
-            case None => assembled
+          // Keyed format reads the state ONCE: one join of the current rows
+          // against it gives the changed rows and the tombstones. With the
+          // delta check and the state write both on, the output write and
+          // the state append each consume it, so it is persisted here (the
+          // output write materializes it) and unpersisted in the finally.
+          val changes =
+            if (keyed) state.map(Ops.keyedChanges(assembled, _, spec.groupKeys))
+            else None
+          if (deltaOn && config.writeStateAfterSync)
+            changes.foreach(ch =>
+              persistedChanges += ch.persist(StorageLevel.MEMORY_AND_DISK))
+          val afterDelta = (state, changes) match {
+            case (Some(_), _) if !deltaOn => assembled
+            case (_, Some(ch)) => Ops.changedRows(ch)
+            case (Some(st), None) => Ops.deltaCheck(assembled, st)
+            case (None, _) => assembled
           }
 
           val stamped = Ops.stampJobInfo(afterDelta, jobName, runDateTime,
@@ -231,12 +246,14 @@ object Jobs {
               // O(delta) state maintenance: the changed rows upsert, and
               // keys that left the snapshot tombstone — merge-on-read
               // then reconstructs exactly the reference's full-snapshot
-              // semantics without ever rewriting unchanged state.
-              val tombstones = state.map(
-                _.join(assembled, spec.groupKeys.toSeq, "left_anti")
-                  .withColumn(StateTable.DeletedCol, lit(true)))
-              val delta = tombstones.fold(afterDelta)(t =>
-                afterDelta.unionByName(t, allowMissingColumns = true))
+              // semantics without ever rewriting unchanged state. Without
+              // the delta check every current row is re-written, and only
+              // the tombstones come from the changes.
+              val delta = changes.fold(assembled)(ch =>
+                if (deltaOn) ch
+                else assembled.unionByName(
+                  ch.where(col(StateTable.DeletedCol)),
+                  allowMissingColumns = true))
               StateTable.append(delta, stateDir)
               // bound merge-on-read cost; amortized across syncs
               StateTable.maybeCompact(spark, stateDir, spec.groupKeys,
@@ -263,6 +280,7 @@ object Jobs {
       assembledByFields.values.foreach(_.unpersist())
       persistedExploded.unpersist()
       persistedPairs.foreach(_.unpersist())
+      persistedChanges.foreach(_.unpersist())
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.etl.Ops
-import graft.io.Readers
+import graft.io.{Readers, StateTable}
 import graft.operators.Skew
 import graft.schema.Schemas
 
@@ -166,6 +166,34 @@ class OpsSpec extends SparkSpec {
       .select("k", "v", "w").orderBy("k").collect().toSeq
     assert(except == keyed)
     assert(keyed.map(_.getInt(0)) == Seq(2, 3))
+  }
+
+  test("keyedChanges: changed rows and tombstones from one null-safe join") {
+    // k=1 unchanged, 2 changed, 3 new, 4 departed, null key unchanged,
+    // 5 changed and duplicated on the current side
+    val cur = Seq((Some(1), "a"), (Some(2), "b"), (Some(3), "c"),
+      (None, "n"), (Some(5), "e"), (Some(5), "e"))
+      .toDF("k", "v").select($"v", $"k") // key not first on input
+    val state = Seq((Some(1), "a"), (Some(2), "OLD"), (Some(4), "d"),
+      (None, "n"), (Some(5), "OLD")).toDF("k", "v")
+    val ch = Ops.keyedChanges(cur, state, Seq("k"))
+    assert(ch.columns.toSeq == Seq("k", "v", StateTable.DeletedCol))
+    val rows = ch.as[(Option[Int], Option[String], Boolean)].collect()
+      .sortBy(_._1).toSeq
+    assert(rows == Seq((Some(2), Some("b"), false), (Some(3), Some("c"), false),
+      (Some(4), None, true), (Some(5), Some("e"), false),
+      (Some(5), Some("e"), false)))
+    // deltaCheckKeyed is the non-tombstone side, in current's key-first
+    // column order
+    val live = Ops.deltaCheckKeyed(cur, state, Seq("k"))
+    assert(live.columns.toSeq == Seq("k", "v"))
+    assert(live.as[(Int, String)].collect().sorted.toSeq ==
+      Seq((2, "b"), (3, "c"), (5, "e"), (5, "e")))
+    // a null key with a changed payload is re-sent, not tombstoned
+    val nullChanged = Ops.keyedChanges(Seq((Option.empty[Int], "m"))
+      .toDF("k", "v"), state, Seq("k")).where($"k".isNull)
+      .as[(Option[Int], Option[String], Boolean)].collect().toSeq
+    assert(nullChanged == Seq((None, Some("m"), false)))
   }
 
   test("canonicalizeColumns sorts column order only") {
