@@ -1178,10 +1178,10 @@ object Queries {
     import s.implicits._
     val d = tmp("relay")
     val qname = s"relay-${java.util.UUID.randomUUID()}"
-    t(s, dir, "supplier")
+    Writers.connectorOutput(t(s, dir, "supplier")
       .select(col("s_suppkey").cast("string").as("userId"),
-        col("s_name").as("name"))
-      .write.mode("overwrite").json(s"$d/out")
+        col("s_name").as("name")), d, "out",
+      java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0))
     val schema = StructType(Seq(StructField("userId", StringType),
       StructField("name", StringType)))
     FileRelay.relayToQueue(s, s"$d/out", schema, s"$d/ckpt",

@@ -29,10 +29,11 @@ final case class ConnectorConfig(
 /** Job configuration (reference `sample/config.json:1-14`, read driver-side
   * at `related_items_etl.py:72-88`).
   *
-  * @param stateFormat `"snapshot"` (reference semantics: full JSONL
-  *   state rewrite per sync) or `"keyed"` (the 100 TB path: versioned
-  *   keyed state table, O(delta) writes + keyed hash delta check —
-  *   `io.StateTable` + `Ops.deltaCheckKeyed`)
+  * @param stateFormat where sync state is stored, nothing else: the delta
+  *   (`Ops.keyedChanges`) and the rows sent are the same in both.
+  *   `"snapshot"` rewrites a full JSONL snapshot per sync (the reference's
+  *   declared write-back); `"keyed"` appends the changed rows and
+  *   tombstones to a versioned `io.StateTable`, O(delta) per sync
   */
 final case class JobConfig(
     batchInferencePath: String,

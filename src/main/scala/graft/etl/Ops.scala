@@ -197,7 +197,10 @@ object Ops {
     * last-sync state over whole rows, after column canonicalization
     * (reference `related_items_etl.py:262-266`). Note EXCEPT also
     * de-duplicates the current side; that is observable reference
-    * behaviour and preserved (SURVEY.md §7.4#3).
+    * behaviour and preserved (SURVEY.md §7.4#3). The reference
+    * formulation, kept for `q_delta_except` and as the oracle of the
+    * `JobsSpec` differential: [[graft.jobs.Jobs.run]] computes the delta
+    * with [[keyedChanges]] in both state formats instead.
     */
   def deltaCheck(current: DataFrame, state: DataFrame): DataFrame =
     canonicalizeColumns(current).except(canonicalizeColumns(state))

@@ -60,17 +60,6 @@ object VectorFunctions {
       }
     }
 
-  /** Sign-LSH bucket key: one bit per hyperplane (sign of the dot
-    * product), packed into a long. Vectors with high cosine similarity
-    * agree on most signs, so equal keys (or keys from [[signLshBands]])
-    * concentrate near neighbours into shared buckets.
-    */
-  def signLshKey(v: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val plane = array(p.map(lit(_)): _*)
-      when(dot(v, plane) >= 0.0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
   /** Multi-probe style banding for sign-LSH: split the `numPlanes` sign
     * bits into `bands` groups; a candidate pair must agree on ALL bits of
     * at least one band. More bands -> higher recall, more candidates.

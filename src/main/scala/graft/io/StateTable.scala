@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
   *
   *  - [[append]] writes only the CHANGED rows and the tombstones (what
   *    `Ops.keyedChanges` computes from one join) as a new `v=N`
-  *    partition — O(delta) per sync. A tombstone carries its key and
+  *    partition — O(delta) per sync, with or without the delta check:
+  *    an unchanged key already holds the same payload, so [[readLatest]]
+  *    is the same as after a full rewrite. A tombstone carries its key and
   *    `_deleted = true` only; its payload columns are null, because
   *    [[readLatest]] never reads a tombstone's payload;
   *  - [[readLatest]] resolves current state as newest-version-per-key

@@ -27,11 +27,17 @@ object Writers {
     s"year=$y/month=$m/day=$d/time=$t"
   }
 
+  /** Glob of every [[runTimePartition]] under a connector's output root:
+    * the connector output the queue relay reads, without the state dirs
+    * beside it.
+    */
+  def runPartitions(connectorRoot: String): String =
+    s"$connectorRoot/year=*/month=*/day=*/time=*"
+
   /** K1: connector output sink — plain JSON Lines, one `part-*.json`
     * file per task (the reference writes plain JSONL per connector,
-    * `related_items_etl.py:301-315`). The queue relay
-    * ([[graft.streaming.FileRelay.relayToQueue]]) picks files up by that
-    * `*.json` name, so compressed output would never reach the queue.
+    * `related_items_etl.py:301-315`), in the run partition the queue relay
+    * ([[graft.streaming.FileRelay.relayToQueue]]) picks up.
     */
   def connectorOutput(df: DataFrame, outputRoot: String, connector: String,
       runTime: LocalDateTime): String = {

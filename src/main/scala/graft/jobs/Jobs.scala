@@ -4,7 +4,8 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
 import graft.config.JobConfig
@@ -43,11 +44,17 @@ final case class JobResult(jobName: String, runDateTime: String,
   * frame and the aggregated mapping are persisted across the connector
   * loop and decorate+assemble+fan-out is memoized per metadata field
   * list, so N connectors cost ONE scan of the batch input and ONE of the
-  * mapping (#5). A keyed-state resync reads its state ONCE per connector:
-  * [[graft.etl.Ops.keyedChanges]] joins it against the assembled rows
-  * into changed rows and tombstones; that frame is persisted for the
-  * output write (its changed rows) and the state append (all of it), and
-  * unpersisted with the others when the run ends.
+  * mapping (#5).
+  *
+  * The delta check is one path in both state formats: the last sync's
+  * state is read ONCE per connector and [[graft.etl.Ops.keyedChanges]]
+  * joins it against the assembled rows into changed rows and tombstones
+  * (the reference's EXCEPT, `related_items_etl.py:262-266`, gives the
+  * same rows barring a 64-bit hash collision). The output gets the changed
+  * rows; a keyed state append gets all of it, with or without the check.
+  * `stateFormat` decides only where the state lives: which reader gives
+  * the last state and which call commits the new one. Every persisted
+  * frame is unpersisted when the run ends.
   */
 object Jobs {
 
@@ -108,7 +115,16 @@ object Jobs {
       case RelatedItems => Schemas.relatedItemsBatchInference
       case UserPersonalization => Schemas.userPersonalizationBatchInference
     }
-    val raw = Readers.jsonl(spark, config.batchInferencePath, schema)
+    // A line that does not parse reads back with only Spark's PERMISSIVE
+    // `_corrupt_record` column set. Giving it an `error` sends it, raw
+    // text included, to the errors sink and the error count instead of
+    // syncing an all-null row. The text is renamed `rawLine`: Spark's JSON
+    // reader would read a `_corrupt_record` field in `errors/` back as null.
+    val raw = Readers.jsonl(spark, config.batchInferencePath,
+        schema.add("_corrupt_record", StringType))
+      .withColumnRenamed("_corrupt_record", "rawLine")
+      .withColumn("error", coalesce(col("error"),
+        when(col("rawLine").isNotNull, lit("malformed JSON line"))))
 
     // Error count piggybacks on the first connector write: the observe
     // node sits BELOW the split's filters, so the action that
@@ -119,21 +135,11 @@ object Jobs {
     // probe was a full extra input pass on every clean run at 100 TB).
     // The errs lineage deliberately comes from the UN-observed raw so
     // the errors write is a second, independent query.
-    val observeErrors =
-      config.saveBatchInferenceErrors && config.connectors.nonEmpty
     val errObs = Observation(
       s"errcnt_${java.util.UUID.randomUUID().toString.take(8)}")
-    val observedRaw =
-      if (observeErrors)
-        raw.observe(errObs, count(col("error")).as("errors"))
-      else raw
-    val (ok, _) = Ops.splitErrors(observedRaw)
+    val (ok, _) = Ops.splitErrors(
+      raw.observe(errObs, count(col("error")).as("errors")))
     val (_, errs) = Ops.splitErrors(raw)
-
-    // Explode, decorate and assemble per query key; related-items jobs
-    // fan the per-item lists out to their users only after assembly.
-    val exploded = Ops.explodeRecs(ok, spec.queryKeyPath,
-      spec.queryKeyAlias, Nil)
 
     // Item metadata is optional and open-schema (existence-gated read,
     // reference `related_items_etl.py:175-189`).
@@ -141,25 +147,13 @@ object Jobs {
       s"$jobRoot/input/item_metadata")
 
     val outputRoot = s"$jobRoot/output"
-    // Shared upstream: every connector consumes the same exploded frame
-    // and the same aggregated mapping, and connectors that request the
-    // same metadata field list share one decorate+assemble+fan-out
-    // subtree — N connectors cost ONE scan of the batch input and ONE of
-    // the mapping, not N (the reference re-runs the whole Glue dataflow
-    // per connector).
-    val persistedExploded = exploded.persist(StorageLevel.MEMORY_AND_DISK)
-    val persistedPairs: Option[DataFrame] =
-      if (spec.usesMapping)
-        Some(Ops.mappingPairCounts(Readers.csv(spark,
-          s"$jobRoot/input/user_item_mapping", Schemas.userItemMapping))
-          .persist(StorageLevel.MEMORY_AND_DISK))
-      else None
-    val assembledByFields =
-      scala.collection.mutable.Map.empty[Seq[String], DataFrame]
-    def assembledFor(fields: Seq[String]): DataFrame =
-      assembledByFields.getOrElseUpdate(fields,
-        assemble(persistedExploded, spec.queryKeyAlias, metadata, fields,
-          persistedPairs).persist(StorageLevel.MEMORY_AND_DISK))
+    // Every persisted frame goes through `pin` and is unpersisted when the
+    // run ends, however it ends.
+    val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      pinned += df
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
     // Error diagnostics must survive a mid-loop connector failure (the
     // reference writes errors BEFORE any connector send,
     // `related_items_etl.py:114-132`): the write fires as soon as the
@@ -171,56 +165,62 @@ object Jobs {
     // errors write precedes every connector and its failure fails the
     // whole job) — diagnostics are part of the run's contract, not
     // best-effort.
-    val persistedChanges = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var errorsDir: Option[String] = None
     var errorsWritten = false
-    def writeErrors(known: Option[Long]): Unit =
+    def writeErrors(known: => Option[Long]): Unit =
       if (!errorsWritten) {
         errorsDir = Writers.errors(errs, s"$jobRoot/errors", spec.jobType,
           clock, config.saveBatchInferenceErrors, knownCount = known)
         errorsWritten = true
       }
     try {
+      // Shared upstream: every connector consumes the same exploded frame
+      // and the same aggregated mapping, and connectors that request the
+      // same metadata field list share one decorate+assemble+fan-out
+      // subtree — N connectors cost ONE scan of the batch input and ONE of
+      // the mapping, not N (the reference re-runs the whole Glue dataflow
+      // per connector).
+      val exploded = pin(Ops.explodeRecs(ok, spec.queryKeyPath,
+        spec.queryKeyAlias, Nil))
+      val pairs = Option.when(spec.usesMapping)(pin(Ops.mappingPairCounts(
+        Readers.csv(spark, s"$jobRoot/input/user_item_mapping",
+          Schemas.userItemMapping))))
+      val assembledByFields =
+        scala.collection.mutable.Map.empty[Seq[String], DataFrame]
       val results = config.connectors.toSeq.sortBy(_._1).map {
         case (connector, cc) =>
-          val assembled = assembledFor(cc.itemMetadataFields)
+          val assembled = assembledByFields.getOrElseUpdate(
+            cc.itemMetadataFields, pin(assemble(exploded, spec.queryKeyAlias,
+              metadata, cc.itemMetadataFields, pairs)))
+          val deltaOn = config.deltaCheckFor(connector)
+          val writeState = config.writeStateAfterSync
+          // The state format decides only where state lives: where the
+          // last sync's state is read from here, and how this sync's is
+          // committed below. A keyed commit tombstones the keys that left,
+          // so it reads the state even without the delta check; a snapshot
+          // commit rewrites it whole.
           val keyed = config.stateFormat == "keyed"
           val stateDir =
             if (keyed) s"$outputRoot/$connector/state_keyed"
             else s"$outputRoot/$connector/state"
-          // Previous state is needed for the delta check AND — in keyed
-          // format — for tombstoning keys that left the snapshot. Reading
-          // it only under deltaCheck would mean keyed state with the check
-          // disabled never deletes anything (silent divergence from the
-          // snapshot format, which rewrites state wholesale).
-          val deltaOn = config.deltaCheckFor(connector)
-          val needState = deltaOn || (keyed && config.writeStateAfterSync)
-          val state: Option[DataFrame] =
-            if (!needState) None
-            else if (keyed) {
-              if (StateTable.versions(spark, stateDir).nonEmpty)
-                Some(StateTable.readLatest(spark, stateDir, spec.groupKeys))
-              else None
-            } else if (Readers.pathExists(spark, stateDir))
-              Some(Readers.jsonl(spark, stateDir, assembled.schema))
-            else None
-          // Keyed format reads the state ONCE: one join of the current rows
-          // against it gives the changed rows and the tombstones. With the
-          // delta check and the state write both on, the output write and
-          // the state append each consume it, so it is persisted here (the
-          // output write materializes it) and unpersisted in the finally.
+          val state =
+            if (keyed)
+              Option.when((deltaOn || writeState) &&
+                StateTable.versions(spark, stateDir).nonEmpty)(
+                StateTable.readLatest(spark, stateDir, spec.groupKeys))
+            else
+              Option.when(deltaOn && Readers.pathExists(spark, stateDir))(
+                Readers.jsonl(spark, stateDir, assembled.schema))
+          // Either state is read ONCE: one join against the current rows
+          // gives the changed rows and the tombstones. When the output
+          // write and a keyed append both consume them, they are pinned
+          // (the output write materializes them).
           val changes =
-            if (keyed) state.map(Ops.keyedChanges(assembled, _, spec.groupKeys))
-            else None
-          if (deltaOn && config.writeStateAfterSync)
-            changes.foreach(ch =>
-              persistedChanges += ch.persist(StorageLevel.MEMORY_AND_DISK))
-          val afterDelta = (state, changes) match {
-            case (Some(_), _) if !deltaOn => assembled
-            case (_, Some(ch)) => Ops.changedRows(ch)
-            case (Some(st), None) => Ops.deltaCheck(assembled, st)
-            case (None, _) => assembled
-          }
+            state.map(Ops.keyedChanges(assembled, _, spec.groupKeys))
+          if (keyed && deltaOn && writeState) changes.foreach(pin)
+          val afterDelta =
+            if (deltaOn) changes.fold(assembled)(Ops.changedRows)
+            else assembled
 
           val stamped = Ops.stampJobInfo(afterDelta, jobName, runDateTime,
             Some((cc.attributePrefix, cc.otherAttributes)))
@@ -237,30 +237,22 @@ object Jobs {
           // The first connector write has completed, so the observed
           // error count is available — persist errors NOW, before any
           // further connector/state write gets a chance to fail.
-          writeErrors(
-            if (observeErrors) Some(errObs.get("errors").asInstanceOf[Long])
-            else None)
+          writeErrors(Some(errObs.get("errors").asInstanceOf[Long]))
 
-          if (config.writeStateAfterSync) {
+          if (writeState) {
             if (keyed) {
-              // O(delta) state maintenance: the changed rows upsert, and
-              // keys that left the snapshot tombstone — merge-on-read
-              // then reconstructs exactly the reference's full-snapshot
-              // semantics without ever rewriting unchanged state. Without
-              // the delta check every current row is re-written, and only
-              // the tombstones come from the changes.
-              val delta = changes.fold(assembled)(ch =>
-                if (deltaOn) ch
-                else assembled.unionByName(
-                  ch.where(col(StateTable.DeletedCol)),
-                  allowMissingColumns = true))
-              StateTable.append(delta, stateDir)
+              // O(delta) state maintenance, with or without the check:
+              // the changed rows upsert and the keys that left tombstone
+              // (a cold sync appends every row). An unchanged key already
+              // holds the same payload, so merge-on-read gives the
+              // reference's full-snapshot semantics without rewriting it.
+              StateTable.append(changes.getOrElse(assembled), stateDir)
               // bound merge-on-read cost; amortized across syncs
               StateTable.maybeCompact(spark, stateDir, spec.groupKeys,
                 maxVersions = 16)
             } else
               // State = the full (pre-delta) assembled snapshot, so the
-              // next run's EXCEPT sees everything synced so far.
+              // next run's delta sees everything synced so far.
               Writers.state(assembled, outputRoot, connector)
           }
 
@@ -276,11 +268,6 @@ object Jobs {
         try writeErrors(None)
         catch { case e2: Throwable => e.addSuppressed(e2) }
         throw e
-    } finally {
-      assembledByFields.values.foreach(_.unpersist())
-      persistedExploded.unpersist()
-      persistedPairs.foreach(_.unpersist())
-      persistedChanges.foreach(_.unpersist())
-    }
+    } finally pinned.foreach(_.unpersist())
   }
 }

@@ -18,13 +18,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Metadata carried alongside every binary payload. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("kind", StringType),      // image | audio | video
-    StructField("format", StringType),    // jpeg | png | wav | mp4 ...
-    StructField("sizeBytes", LongType)
-  ))
-
   /** Wrap a string column as a media row: payload = utf8 bytes, metadata
     * derived. Test-data adapter — real pipelines read binary files via
     * `spark.read.format("binaryFile")`.

@@ -49,24 +49,4 @@ object Schemas {
     StructField("USER_ID", StringType, nullable = false),
     StructField("ITEM_ID", StringType, nullable = false)
   ))
-
-  /** jobInfo struct stamped onto every output record
-    * (reference `related_items_etl.py:278-283`).
-    */
-  val jobInfo: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("runDateTime", StringType, nullable = false)
-  ))
-
-  /** syncDirectives struct (reference `related_items_etl.py:284-291`). */
-  def syncDirectives(otherAttributeKeys: Seq[String]): StructType =
-    StructType(
-      StructField("attributePrefix", StringType) +:
-        otherAttributeKeys.map(k => StructField(k, StringType))
-    )
 }
-
-/** Typed views used at module boundaries where type safety helps. */
-final case class UserItemMapping(USER_ID: String, ITEM_ID: String)
-
-final case class JobInfo(name: String, runDateTime: String)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.connector.Sinks
+import graft.io.Writers
 
 /** Streaming/incremental layer (SURVEY.md §2.11).
   *
@@ -20,19 +21,16 @@ import graft.connector.Sinks
 object FileRelay {
 
   /** Bookmark-equivalent incremental read: stream new JSONL files under
-    * `path`, tracked by `checkpointDir`, handing each micro-batch to
-    * `process`. Returns when all currently-available files are consumed.
-    * The reference's key-regex gate (`braze_enqueue_function/main.py:19`)
-    * becomes `pathGlobFilter`.
+    * `path` (a glob is expanded), tracked by `checkpointDir`, handing each
+    * micro-batch to `process`. Returns when all currently-available files
+    * are consumed.
     */
   def processNewFiles(spark: SparkSession, path: String, schema: StructType,
-      checkpointDir: String, globFilter: Option[String] = None)(
-      process: (DataFrame, Long) => Unit): Unit = {
-    val reader = spark.readStream.schema(schema)
+      checkpointDir: String)(process: (DataFrame, Long) => Unit): Unit = {
+    val q = spark.readStream.schema(schema)
       .option("recursiveFileLookup", "true")
-    val src = globFilter.fold(reader)(g => reader.option("pathGlobFilter", g))
       .json(path)
-    val q = src.writeStream
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) => process(batch, id) }
@@ -46,15 +44,18 @@ object FileRelay {
     * at-least-once). A micro-batch in which the transport reports any
     * failed id throws, so its files stay uncommitted in the checkpoint
     * and the next run replays them whole (ids that did go through are
-    * sent again — the at-least-once half of the contract). Only
-    * `*.json` files relay, the name [[graft.io.Writers.connectorOutput]]
-    * writes; sends go out [[Sinks.QueueBatchSize]] messages at a time.
+    * sent again — the at-least-once half of the contract). Only the run
+    * partitions under the connector root `outputPath` relay
+    * ([[graft.io.Writers.runPartitions]], the reference's key-regex gate,
+    * `braze_enqueue_function/main.py:19`), so the state the sync keeps
+    * next to them never reaches the queue; sends go out
+    * [[Sinks.QueueBatchSize]] messages at a time.
     */
   def relayToQueue(spark: SparkSession, outputPath: String,
       schema: StructType, checkpointDir: String,
       transport: Sinks.QueueTransport, userIdCol: String): Unit =
-    processNewFiles(spark, outputPath, schema, checkpointDir,
-      globFilter = Some("*.json")) { (batch, id) =>
+    processNewFiles(spark, Writers.runPartitions(outputPath), schema,
+      checkpointDir) { (batch, id) =>
       val failed = spark.sparkContext.collectionAccumulator[String]
       Sinks.queueSink(batch, transport, userIdCol, failed)
       if (!failed.isZero) throw new java.io.IOException(

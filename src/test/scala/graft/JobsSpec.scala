@@ -249,6 +249,12 @@ class JobsSpec extends SparkSpec {
       s"$root/output/braze/state_keyed", Seq("queryItemId", "userId"))
     assert(st.count() == 3)
     assert(st.where(col("queryItemId") === "i3").count() == 0)
+    // The unchanged keys already hold their payload: the second version
+    // is the tombstone alone.
+    val v1 = spark.read.parquet(s"$root/output/braze/state_keyed/v=1")
+    assert(v1.count() == 1)
+    assert(v1.where(col("queryItemId") === "i3" && col(StateTable.DeletedCol))
+      .count() == 1)
   }
 
   private def writeBatch(root: String, lines: Seq[String]): Unit =
@@ -303,8 +309,13 @@ class JobsSpec extends SparkSpec {
     val sorted = (df: DataFrame) => df.select(df.columns.sorted.map(col): _*)
     def same(a: DataFrame, b: DataFrame): Boolean =
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    val snapStateDir = s"$snapRoot/output/braze/state"
+    def snapStateLines(): Seq[String] =
+      if (!Readers.pathExists(spark, snapStateDir)) Nil
+      else spark.read.text(snapStateDir).as[String].collect().toSeq
     val written = batches.zipWithIndex.map { case (batch, i) =>
       val clock = LocalDateTime.of(2024, 1, i + 1, 0, 0, 0)
+      val stateBefore = snapStateLines()
       val Seq(keyed, snap) = Seq(keyedRoot -> "keyed", snapRoot -> "snapshot")
         .map { case (root, format) =>
           writeBatch(root, batch)
@@ -312,14 +323,27 @@ class JobsSpec extends SparkSpec {
             deltaConfig(root, format), clock).connectors.head
         }
       assert(keyed.rowsWritten == snap.rowsWritten, s"run ${i + 1}")
-      if (snap.rowsWritten > 0)
+      if (snap.rowsWritten > 0) {
         assert(same(sorted(spark.read.json(keyed.outputDir)),
           sorted(spark.read.json(snap.outputDir))), s"run ${i + 1} output")
+        // the same lines, byte for byte: one column order in both formats
+        assert(same(spark.read.text(keyed.outputDir),
+          spark.read.text(snap.outputDir)), s"run ${i + 1} output lines")
+      }
       val latest = sorted(StateTable.readLatest(spark,
         s"$keyedRoot/output/braze/state_keyed", Jobs.RelatedItems.groupKeys))
-      val snapState = sorted(Readers.jsonl(spark,
-        s"$snapRoot/output/braze/state", latest.schema))
+      val snapState = sorted(Readers.jsonl(spark, snapStateDir,
+        latest.schema))
       assert(same(latest, snapState), s"run ${i + 1} state")
+      // The reference's delta, EXCEPT of this snapshot against the last
+      // one, is the oracle for the rows the snapshot format sends.
+      val parse = (lines: Seq[String]) =>
+        spark.read.schema(latest.schema).json(lines.toDS())
+      val oracle = Ops.deltaCheck(snapState, parse(stateBefore))
+      assert(oracle.count() == snap.rowsWritten, s"run ${i + 1} EXCEPT rows")
+      if (snap.rowsWritten > 0)
+        assert(same(spark.read.schema(oracle.schema).json(snap.outputDir),
+          oracle), s"run ${i + 1} output = EXCEPT")
       snap.rowsWritten
     }
     // i1 x 3 + i2 + i3; i1 x 3 changed + i4 x 2 new; i3 back + i4 x 2
@@ -580,6 +604,23 @@ class JobsSpec extends SparkSpec {
       s"$root/errors/related_items/year=2024/month=01/day=02/time=030405"
     assert(spark.read.json(errDir).count() == 1,
       "first-connector failure lost the error records")
+  }
+
+  test("an unparseable batch line goes to errors with its raw text") {
+    val root = tmpDir("jobmalformed")
+    val bad = """{"input":"""
+    writeBatch(root, Seq(
+      """{"input":{"userId":"u1"},"output":{"recommendedItems":["p1"]}}""",
+      """{"input":{"userId":"u2"},"output":{"recommendedItems":["p2"]}}""",
+      bad))
+    val cfg = JobConfig.parse(
+      s"""{"batchInferencePath": "$root/input/batch",
+         |"connectors": {"braze": {}}}""".stripMargin)
+    val r = Jobs.run(spark, Jobs.UserPersonalization, root, "up", cfg,
+      LocalDateTime.of(2024, 1, 1, 0, 0, 0))
+    assert(r.connectors.head.rowsWritten == 2)
+    val errs = spark.read.json(r.errorsDir.get)
+    assert(errs.select("rawLine").as[String].collect().toSeq == Seq(bad))
   }
 
   test("user-personalization spec: no mapping, keyed by queryUserId") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.config.JobConfig
+import graft.io.Writers
 import graft.operators.Multimodal
 import graft.streaming.FileRelay
 import graft.connector.Sinks
@@ -121,13 +122,16 @@ class MultimodalConfigSpec extends SparkSpec {
     assert(ex.getMessage.contains("batchInferencePath"))
   }
 
+  /** Run time of the connector output the relay tests write. */
+  private val clock = java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0)
+
   test("file relay processes each file exactly once across runs") {
     val dir = tmpDir("relay")
     val qname = s"relay-${java.util.UUID.randomUUID()}"
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("userId",
         org.apache.spark.sql.types.StringType)))
-    Seq("a", "b").toDF("userId").write.mode("overwrite").json(s"$dir/out")
+    Writers.connectorOutput(Seq("a", "b").toDF("userId"), dir, "out", clock)
     FileRelay.relayToQueue(spark, s"$dir/out", schema, s"$dir/ckpt",
       Sinks.InMemoryQueueTransport(qname), "userId")
     val first = Sinks.InMemoryQueues.drain(qname).size
@@ -145,7 +149,8 @@ class MultimodalConfigSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("userId",
         org.apache.spark.sql.types.StringType)))
     val users = (0 until 25).map(i => f"u$i%02d")
-    users.toDF("userId").coalesce(1).write.json(s"$dir/out")
+    Writers.connectorOutput(users.toDF("userId").coalesce(1), dir, "out",
+      clock)
     def relay(): Seq[String] = {
       FileRelay.relayToQueue(spark, s"$dir/out", schema, s"$dir/ckpt",
         MultimodalConfigSpec.RejectFirstCall(qname), "userId")
@@ -178,13 +183,44 @@ class MultimodalConfigSpec extends SparkSpec {
          |"connectors": {"braze": {}}}""".stripMargin)
     val out = Jobs.run(spark, Jobs.UserPersonalization, root, "up_job", cfg,
       LocalDateTime.of(2024, 1, 2, 3, 4, 5)).connectors.head
-    FileRelay.relayToQueue(spark, out.outputDir,
+    FileRelay.relayToQueue(spark, s"$root/output/braze",
       StructType(Seq(StructField("queryUserId", StringType))),
       s"$root/ckpt", Sinks.InMemoryQueueTransport(qname), "queryUserId")
     val ids = Sinks.InMemoryQueues.drain(qname).map(_.id.split("-", 2)(1))
     assert(out.rowsWritten == 3)
     assert(ids.size.toLong == out.rowsWritten)
     assert(ids.sorted == Seq("u1", "u2", "u3"))
+  }
+
+  test("file relay sends each delta sync's rows and never the state") {
+    import java.time.LocalDateTime
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import graft.jobs.Jobs
+    val root = tmpDir("delta-relay")
+    val qname = s"relay-${java.util.UUID.randomUUID()}"
+    val cfg = JobConfig.parse(
+      s"""{"batchInferencePath": "$root/input/batch",
+         |"performDeltaCheck": true,
+         |"connectors": {"braze": {}}}""".stripMargin)
+    def line(user: String, item: String) =
+      s"""{"input":{"userId":"$user"},"output":{"recommendedItems":["$item"]}}"""
+    // Snapshot state lives under output/braze/state, next to the runs.
+    def syncAndRelay(day: Int, lines: String*): (Long, Seq[String]) = {
+      lines.toDF("value").coalesce(1).write.mode("overwrite")
+        .text(s"$root/input/batch")
+      val out = Jobs.run(spark, Jobs.UserPersonalization, root, "up_job",
+        cfg, LocalDateTime.of(2024, 1, day, 0, 0, 0)).connectors.head
+      FileRelay.relayToQueue(spark, s"$root/output/braze",
+        StructType(Seq(StructField("queryUserId", StringType))),
+        s"$root/ckpt", Sinks.InMemoryQueueTransport(qname), "queryUserId")
+      (out.rowsWritten,
+        Sinks.InMemoryQueues.drain(qname).map(_.id.split("-", 2)(1)).sorted)
+    }
+    assert(syncAndRelay(1, line("u1", "p1"), line("u2", "p2"),
+      line("u3", "p3")) == ((3L, Seq("u1", "u2", "u3"))))
+    // only u2's list changed
+    assert(syncAndRelay(2, line("u1", "p1"), line("u2", "p9"),
+      line("u3", "p3")) == ((1L, Seq("u2"))))
   }
 }
 
