@@ -32,6 +32,23 @@ object Ops {
     (df.where(col("error").isNull).drop("error"),
      df.where(col("error").isNotNull))
 
+  /** The column Spark's PERMISSIVE JSON reader sets, alone, on a line it
+    * cannot parse. A batch-inference read adds it to the declared schema
+    * so that [[markMalformed]] can see such lines.
+    */
+  val CorruptRecord = "_corrupt_record"
+
+  /** Give a line that did not parse an `error`, so [[splitErrors]] sends
+    * it, raw text included, to the error side instead of syncing an
+    * all-null row. `df` was read with [[CorruptRecord]] in its schema. The
+    * text is renamed `rawLine`: Spark's JSON reader would read a
+    * `_corrupt_record` field in `errors/` back as null.
+    */
+  def markMalformed(df: DataFrame): DataFrame =
+    df.withColumnRenamed(CorruptRecord, "rawLine")
+      .withColumn("error", coalesce(col("error"),
+        when(col("rawLine").isNotNull, lit("malformed JSON line"))))
+
   /** J1 + P4 in the reference's order: reverse-map item-keyed batch lines
     * to users BEFORE explode — inner join on the nested key
     * `input.itemId = ITEM_ID`, then drop the redundant join key (reference

@@ -119,16 +119,14 @@ object Writers {
     * (reference `related_items_etl.py:114-133`). Returns the path if
     * anything was written.
     *
-    * @param knownCount error-row count the caller already measured —
-    *   typically a `Dataset.observe` aggregate piggybacked on another
-    *   action over the same input ([[graft.jobs.Jobs.run]]). When given,
-    *   the emptiness gate is a driver-side comparison: the no-errors
-    *   happy path costs ZERO extra input scans, where the `isEmpty`
-    *   probe below would re-scan the whole filtered input to prove
-    *   emptiness (a full extra pass at 100 TB on every clean run).
-    *   Without it the probe is `isEmpty` (pushed limit 1) — cheap when
-    *   errors exist, full-scan when none do; standalone callers that
-    *   cannot piggyback a count keep that fallback.
+    * Without `knownCount` the gate is `isEmpty` (pushed limit 1): cheap
+    * when errors exist, a full pass when none do. [[graft.jobs.Jobs.run]]
+    * runs it over its pinned parsed batch, so that pass fills the cache
+    * the connectors read next instead of scanning the input again.
+    *
+    * @param knownCount error-row count the caller already measured; the
+    *   gate is then a driver-side comparison. Only the benchmark's staged
+    *   pass (`perfbench/.../Staged.scala`) passes it.
     */
   def errors(df: DataFrame, errorRoot: String, jobType: String,
       runTime: LocalDateTime, enabled: Boolean,

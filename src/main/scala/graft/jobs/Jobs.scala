@@ -4,7 +4,7 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
@@ -40,11 +40,11 @@ final case class JobResult(jobName: String, runDateTime: String,
   * Reference quirks fixed, not replicated (SURVEY.md §2.13): paths derive
   * from the job's own type (#1), the decorate routine is shared so the
   * wrong-window-key bug can't recur (#2), `performDeltaCheck` accepts both
-  * scopes (#3), and state IS written back after a sync (#4). The exploded
-  * frame and the aggregated mapping are persisted across the connector
-  * loop and decorate+assemble+fan-out is memoized per metadata field
-  * list, so N connectors cost ONE scan of the batch input and ONE of the
-  * mapping (#5).
+  * scopes (#3), and state IS written back after a sync (#4). The parsed
+  * batch and the aggregated mapping are persisted across the errors write
+  * and the connector loop, and decorate+assemble+fan-out is memoized per
+  * metadata field list, so the errors write and N connectors cost ONE scan
+  * of the batch input and ONE of the mapping (#5).
   *
   * The delta check is one path in both state formats: the last sync's
   * state is read ONCE per connector and [[graft.etl.Ops.keyedChanges]]
@@ -115,31 +115,9 @@ object Jobs {
       case RelatedItems => Schemas.relatedItemsBatchInference
       case UserPersonalization => Schemas.userPersonalizationBatchInference
     }
-    // A line that does not parse reads back with only Spark's PERMISSIVE
-    // `_corrupt_record` column set. Giving it an `error` sends it, raw
-    // text included, to the errors sink and the error count instead of
-    // syncing an all-null row. The text is renamed `rawLine`: Spark's JSON
-    // reader would read a `_corrupt_record` field in `errors/` back as null.
-    val raw = Readers.jsonl(spark, config.batchInferencePath,
-        schema.add("_corrupt_record", StringType))
-      .withColumnRenamed("_corrupt_record", "rawLine")
-      .withColumn("error", coalesce(col("error"),
-        when(col("rawLine").isNotNull, lit("malformed JSON line"))))
-
-    // Error count piggybacks on the first connector write: the observe
-    // node sits BELOW the split's filters, so the action that
-    // materializes the persisted exploded frame flows every raw row
-    // through it and counts non-null `error`s for free. The errors sink
-    // then gates on that driver-side count — a clean run never scans the
-    // input again just to prove there were no errors (the old `isEmpty`
-    // probe was a full extra input pass on every clean run at 100 TB).
-    // The errs lineage deliberately comes from the UN-observed raw so
-    // the errors write is a second, independent query.
-    val errObs = Observation(
-      s"errcnt_${java.util.UUID.randomUUID().toString.take(8)}")
-    val (ok, _) = Ops.splitErrors(
-      raw.observe(errObs, count(col("error")).as("errors")))
-    val (_, errs) = Ops.splitErrors(raw)
+    // A line that does not parse goes to errors, not to the connectors.
+    val raw = Ops.markMalformed(Readers.jsonl(spark, config.batchInferencePath,
+      schema.add(Ops.CorruptRecord, StringType)))
 
     // Item metadata is optional and open-schema (existence-gated read,
     // reference `related_items_etl.py:175-189`).
@@ -154,34 +132,22 @@ object Jobs {
       pinned += df
       df.persist(StorageLevel.MEMORY_AND_DISK)
     }
-    // Error diagnostics must survive a mid-loop connector failure (the
-    // reference writes errors BEFORE any connector send,
-    // `related_items_etl.py:114-132`): the write fires as soon as the
-    // observed count resolves — immediately after the FIRST connector
-    // write — and the failure path falls back to the probe-gated write,
-    // so a crashed run still persists the records needed to debug it.
-    // Deliberate consequence: an errors-SINK failure aborts the
-    // remaining connectors, exactly as in the reference (where the
-    // errors write precedes every connector and its failure fails the
-    // whole job) — diagnostics are part of the run's contract, not
-    // best-effort.
-    var errorsDir: Option[String] = None
-    var errorsWritten = false
-    def writeErrors(known: => Option[Long]): Unit =
-      if (!errorsWritten) {
-        errorsDir = Writers.errors(errs, s"$jobRoot/errors", spec.jobType,
-          clock, config.saveBatchInferenceErrors, knownCount = known)
-        errorsWritten = true
-      }
     try {
-      // Shared upstream: every connector consumes the same exploded frame
-      // and the same aggregated mapping, and connectors that request the
-      // same metadata field list share one decorate+assemble+fan-out
-      // subtree — N connectors cost ONE scan of the batch input and ONE of
-      // the mapping, not N (the reference re-runs the whole Glue dataflow
-      // per connector).
-      val exploded = pin(Ops.explodeRecs(ok, spec.queryKeyPath,
-        spec.queryKeyAlias, Nil))
+      // The parsed batch is pinned and split once. Errors are written
+      // before any connector output, as in the reference
+      // (`related_items_etl.py:111-136`): a connector that fails later
+      // leaves the diagnostics on disk, and an errors-sink failure fails
+      // the run. The errors write and every connector read the same
+      // pinned frame, so N connectors cost ONE scan of the batch input.
+      val (ok, errs) = Ops.splitErrors(pin(raw))
+      val errorsDir = Writers.errors(errs, s"$jobRoot/errors", spec.jobType,
+        clock, config.saveBatchInferenceErrors)
+      // Every connector consumes the same exploded frame and the same
+      // aggregated mapping, and connectors that request the same metadata
+      // field list share one decorate+assemble+fan-out subtree (the
+      // reference re-runs the whole Glue dataflow per connector).
+      val exploded = Ops.explodeRecs(ok, spec.queryKeyPath,
+        spec.queryKeyAlias, Nil)
       val pairs = Option.when(spec.usesMapping)(pin(Ops.mappingPairCounts(
         Readers.csv(spark, s"$jobRoot/input/user_item_mapping",
           Schemas.userItemMapping))))
@@ -234,11 +200,6 @@ object Jobs {
             connector, clock)
           val rows = obs.get("rows").asInstanceOf[Long]
 
-          // The first connector write has completed, so the observed
-          // error count is available — persist errors NOW, before any
-          // further connector/state write gets a chance to fail.
-          writeErrors(Some(errObs.get("errors").asInstanceOf[Long]))
-
           if (writeState) {
             if (keyed) {
               // O(delta) state maintenance, with or without the check:
@@ -258,16 +219,7 @@ object Jobs {
 
           ConnectorResult(connector, outDir, rows)
       }
-      // Connector-less job: no write to piggyback on — probe-gated.
-      writeErrors(None)
       JobResult(jobName, runDateTime, errorsDir, results)
-    } catch {
-      case e: Throwable =>
-        // The failing action may BE the first connector write, in which
-        // case the observation never resolves — use the probe fallback.
-        try writeErrors(None)
-        catch { case e2: Throwable => e.addSuppressed(e2) }
-        throw e
     } finally pinned.foreach(_.unpersist())
   }
 }

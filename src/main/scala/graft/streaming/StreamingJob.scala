@@ -3,7 +3,7 @@ package graft.streaming
 import java.time.LocalDateTime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.etl.Ops
 import graft.io.Writers
@@ -33,9 +33,10 @@ object StreamingJob {
       queryKeyAlias: String, jobName: String, clock: LocalDateTime)
       : Long = {
     var batches = 0L
-    FileRelay.processNewFiles(spark, inputPath, schema, checkpointDir) {
+    FileRelay.processNewFiles(spark, inputPath,
+        schema.add(Ops.CorruptRecord, StringType), checkpointDir) {
       (batch, id) =>
-        val (ok, _) = Ops.splitErrors(batch)
+        val (ok, _) = Ops.splitErrors(Ops.markMalformed(batch))
         val exploded = Ops.explodeRecs(ok, queryKeyPath, queryKeyAlias, Nil)
         val assembled = Jobs.assemble(exploded, queryKeyAlias, metadata,
           metadataFields, None)

@@ -553,12 +553,48 @@ class JobsSpec extends SparkSpec {
         cfg(rootOn, save = true), clock)
       assert(r.errorsDir.isEmpty)
     }
-    // The observe-based gate decides emptiness driver-side: enabling the
-    // errors sink on a clean run must NOT re-scan the batch input. The
-    // old isEmpty probe re-read all 500 input records to prove emptiness.
+    // The emptiness gate runs over the pinned parsed batch, so its pass
+    // fills the cache the connector then reads: enabling the errors sink
+    // on a clean run must NOT re-scan the batch input. A gate over the
+    // unpinned input would re-read all 500 records to prove emptiness.
     assert(rrOn < rrOff + 250,
       s"clean run with errors sink enabled read $rrOn records vs $rrOff " +
         "with it disabled — the emptiness gate is scanning the input")
+  }
+
+  test("a sync with error records reads its batch input once") {
+    // 500 good lines and 50 error lines: a second pass over the input for
+    // the errors write would add all 550 records to the reads.
+    def fixture(tag: String): String = {
+      val root = tmpDir(tag)
+      val good = (1 to 500).map(i =>
+        s"""{"input":{"userId":"u$i"},"output":{"recommendedItems":["a$i"]}}""")
+      val bad = (1 to 50).map(i => s"""{"input":{"userId":"e$i"},"error":"E$i"}""")
+      (good ++ bad).toDF("value").coalesce(1).write.mode("overwrite")
+        .text(s"$root/input/batch")
+      root
+    }
+    def cfg(root: String, save: Boolean) = JobConfig.parse(
+      s"""{"batchInferencePath": "$root/input/batch",
+         |"saveBatchInferenceErrors": $save,
+         |"connectors": {"a": {}}}""".stripMargin)
+    val clock = LocalDateTime.of(2024, 1, 1, 0, 0, 0)
+
+    val rootOff = fixture("errscanoff")
+    val rrOff = recordsReadDuring {
+      Jobs.run(spark, Jobs.UserPersonalization, rootOff, "j",
+        cfg(rootOff, save = false), clock)
+    }
+    val rootOn = fixture("errscanon")
+    var errorsDir: Option[String] = None
+    val rrOn = recordsReadDuring {
+      errorsDir = Jobs.run(spark, Jobs.UserPersonalization, rootOn, "j",
+        cfg(rootOn, save = true), clock).errorsDir
+    }
+    assert(spark.read.json(errorsDir.get).count() == 50)
+    assert(rrOn < rrOff + 275,
+      s"sync with the errors sink read $rrOn records vs $rrOff without " +
+        "it — the errors write is scanning the batch input again")
   }
 
   test("errors survive a mid-loop connector failure") {
@@ -586,8 +622,8 @@ class JobsSpec extends SparkSpec {
   }
 
   test("errors survive a failure of the FIRST connector write") {
-    // The failing action IS the one carrying the error-count observation,
-    // so the fallback probe path must kick in on the failure path.
+    // The only connector write fails: the errors write, which runs
+    // before the connector loop, must already have landed.
     val root = tmpDir("joberrfirst")
     writeFixtures(root)
     val cfg = JobConfig.parse(

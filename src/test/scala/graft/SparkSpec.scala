@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole forked test JVM — the same
@@ -10,10 +12,23 @@ object TestSpark {
   lazy val spark: SparkSession = SparkBoot.session("4", logLevel = "ERROR")
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
-  def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-test-$tag-").toString
+
+  private val tmpDirs = scala.collection.mutable.ListBuffer.empty[java.io.File]
+
+  /** A fresh `graft-test-<tag>-*` dir under the system temp dir, deleted
+    * with everything in it when the suite ends.
+    */
+  def tmpDir(tag: String): String = synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-test-$tag-")
+    tmpDirs += dir.toFile
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try synchronized(tmpDirs.foreach(FileUtils.deleteQuietly))
+    finally super.afterAll()
 
   /** `df`'s full executed plan. The session caps plan strings (see
     * [[SparkBoot.session]]); plan-shape assertions need the whole

@@ -213,6 +213,24 @@ class StreamingSpec extends SparkSpec {
       .json(s"$root/out/braze").count() == before)
   }
 
+  test("incremental connector job drops an unparseable line") {
+    import java.time.LocalDateTime
+    import graft.schema.Schemas
+    import graft.streaming.StreamingJob
+    val root = tmpDir("sjobbad")
+    Seq("""{"input":{"itemId":"i1"},"output":{"recommendedItems":["p1"]}}""",
+      """{"input":""").toDF("value").coalesce(1).write.text(s"$root/in/f1")
+    StreamingJob.runIncremental(spark, s"$root/in",
+      Schemas.relatedItemsBatchInference, s"$root/ckpt", s"$root/out",
+      "braze", None, Nil, "input.itemId", "queryItemId", "sj",
+      LocalDateTime.of(2024, 2, 1, 0, 0, 0))
+    // A malformed line must not reach the output as a null-keyed row.
+    val keys = spark.read.option("recursiveFileLookup", "true")
+      .json(s"$root/out/braze").select("queryItemId").as[String]
+      .collect().toSeq
+    assert(keys == Seq("i1"), s"output keys: $keys")
+  }
+
   test("stream-stream interval join emits view->purchase attributions") {
     val dir = tmpDir("ssjoin")
     val evSchema = StructType(Seq(
