@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract (SURVEY.md §7): a smoke entry, the query registry
+  * and its DuckDB oracles.
+  */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the full related-items dataflow (reference
@@ -8,11 +10,11 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame =
     Queries.riPipeline(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2 ([[Queries]])
-    * plus the LLM-training-data pipeline families ([[QueriesLlm]]).
+  /** One entry per implemented operator from SURVEY.md §2, plus the
+    * event, streaming and recommendation families ([[Queries]]).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all ++ QueriesLlm.all
+    Queries.all
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

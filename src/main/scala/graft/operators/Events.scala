@@ -400,8 +400,7 @@ object Events {
     * to the accumulator (one row per surviving key, O(keys)) and
     * takes another conditional min — `stages` key-partitioned
     * shuffles of ever-shrinking slices, each map-side combinable.
-    * The projected event frame is pinned across the per-stage scans
-    * (the [[Graph.pageRank]] consumer pattern).
+    * The projected event frame is pinned across the per-stage scans.
     *
     * Output: (keyCol, t1 .. tN).
     */

@@ -186,8 +186,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("writeRangeSorted: per-file spans are disjoint and internally sorted") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-rangesort-").toString
+    val dir = tmpDir("rangesort")
     val rnd = new scala.util.Random(7)
     val rows = rnd.shuffle((1L to 1000L).toVector).map(i => (i, s"p$i"))
     Bucketing.writeRangeSorted(rows.toDF("k", "payload"), dir, "k",
@@ -230,8 +229,7 @@ class IoSpec extends SparkSpec {
 
   test("writeZOrdered: files are z-disjoint and bound BOTH columns") {
     import graft.io.ZOrder
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-zorder-").toString
+    val dir = tmpDir("zorder")
     val rnd = new scala.util.Random(11)
     val rows = rnd.shuffle(
       (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y)).toVector)

@@ -96,6 +96,28 @@ class TestdataContractSpec extends SparkSpec {
       }: DataType => Boolean, "array<float|double>"),
       "label" -> (integral _, "integral")))
 
+  /** The SURVEY.md §2 connector inventory (COVERAGE.md's first table). */
+  private val surveyQueries = Seq("q_jsonl_backfill", "q_csv_scan",
+    "q_metadata_gated", "q_config_parse", "q_jsonl_gzip",
+    "q_schema_evolution", "q_sink_runtime_partition", "q_errors_sink",
+    "q_queue_relay", "q_rest_sink", "q_error_split_ok",
+    "q_error_split_err", "q_join_mapusers", "q_ri_pipeline",
+    "q_up_pipeline", "q_posexplode_outer", "q_join_decorate_left",
+    "q_canonicalize", "q_window_prefix", "q_assemble_window",
+    "q_assemble_groupby", "q_counts", "q_delta_except", "q_delta_keyed",
+    "q_date_format", "q_prefix_attrs", "q_stamp_jobinfo",
+    "q_pivot_attributes", "q_pivot_per_record", "q_state_table")
+
+  test("registry: one oracle per query, the SURVEY §2 inventory kept") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(queries == oracles,
+      s"queries without an oracle: ${(queries -- oracles).toSeq.sorted}; " +
+        s"oracles without a query: ${(oracles -- queries).toSeq.sorted}")
+    val missing = surveyQueries.filterNot(queries)
+    assert(missing.isEmpty, s"SURVEY §2 queries not registered: $missing")
+  }
+
   for ((table, cols) <- contract.toSeq.sortBy(_._1))
     test(s"$table carries the engine-read columns with admissible types") {
       val schema = spark.read.parquet(s"$root/$table.parquet").schema
