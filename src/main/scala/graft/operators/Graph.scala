@@ -17,12 +17,9 @@ import org.apache.spark.storage.StorageLevel
   * compile-time-bounded loop of declarative plans; the only driver
   * materialization is a COUNT (one scalar).
   *
-  * The edge frame feeds one join per iteration, so it is pinned. With
-  * `pinsOut` ownership of that pin transfers to the caller's buffer and
-  * the returned frame is UNPINNED and UNMATERIALIZED: a caller composing
-  * several operators pays one terminal action at the end, then
-  * unpersists the buffer. Without it the result is materialized and the
-  * pin released.
+  * The edge frame feeds one join per iteration, so it is pinned
+  * (MEMORY_AND_DISK); the result is materialized and the pin released
+  * before returning.
   */
 object Graph {
 
@@ -45,14 +42,11 @@ object Graph {
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, seedCol: String, iters: Int,
-      damping: Double = 0.85, cache: Option[StorageLevel] = None,
-      pinsOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None)
-      : DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping in (0,1), got $damping")
-    val level = cache.getOrElse(StorageLevel.MEMORY_AND_DISK)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .persist(level)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     val seedNodes = seeds.select(col(seedCol).as("node"))
@@ -82,17 +76,11 @@ object Graph {
           (when(col("__seed").isNotNull, lit(tele)).otherwise(lit(0.0)) +
             lit(damping) * coalesce(col("s"), lit(0.0))).as("r"))
     }
-    pinsOut match {
-      case Some(buf) => // lazy composition: see the header
-        buf += e
-        r.select(col("node"), col("r").as("rank"))
-      case None =>
-        val out = r.select(col("node"), col("r").as("rank"))
-          .persist(level)
-        out.count()
-        e.unpersist(blocking = false)
-        out
-    }
+    val out = r.select(col("node"), col("r").as("rank"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    out.count() // terminal action: materialize, then free the pin
+    e.unpersist(blocking = false)
+    out
   }
 
   /** Multi-source BFS hop distances over the symmetrized graph:
@@ -114,19 +102,15 @@ object Graph {
     * [[personalizedPageRank]].
     */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxHops: Int,
-      cache: Option[StorageLevel] = None,
-      pinsOut: Option[scala.collection.mutable.Buffer[DataFrame]] = None)
-      : DataFrame = {
+      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val level = cache.getOrElse(StorageLevel.MEMORY_AND_DISK)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
     val und = e0
       .union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .persist(level) // feeds one join per hop
+      .persist(StorageLevel.MEMORY_AND_DISK) // feeds one join per hop
     var dist = seeds.select(col(seedCol).as("node"))
       .where(col("node").isNotNull).distinct()
       .withColumn("dist", lit(0L))
@@ -136,15 +120,9 @@ object Graph {
       dist = dist.unionByName(relaxed)
         .groupBy("node").agg(min("dist").as("dist"))
     }
-    pinsOut match {
-      case Some(buf) => // lazy composition: see the header
-        buf += und
-        dist
-      case None =>
-        val out = dist.persist(level)
-        out.count() // terminal action: materialize, then free the pin
-        und.unpersist(blocking = false)
-        out
-    }
+    val out = dist.persist(StorageLevel.MEMORY_AND_DISK)
+    out.count() // terminal action: materialize, then free the pin
+    und.unpersist(blocking = false)
+    out
   }
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Mergeable sketches — HyperLogLog registers for bounded-state
   * cardinality estimation at 100 TB, where exact `count(distinct)`
   * shuffles every distinct key, and count-min cells for frequencies.
-  * Both sketches hash with the engine-wide md5-derived
-  * 60-bit idiom (`('0x'||substr(md5(x),1,15))::BIGINT` in SQL), so the
-  * whole construction — hashing, register/min selection, the estimate
+  * Both sketches hash with the engine-wide md5-derived 60-bit idiom
+  * (`('0x'||substr(md5(x),1,15))::BIGINT` in SQL), so the whole
+  * construction — hashing, register/cell selection, the estimate
   * arithmetic — is replayed exactly by an md5-equipped SQL oracle; no
   * JVM PRNG, no engine-private hash.
   *
