@@ -3,21 +3,20 @@
 
 Usage: python3 scripts/synthgen.py <seed> <outDir>
 
-The registry's oracles replay on the driver's fixed testdata; this
-writes a full seeded synthetic tenth-scale testdata set (documents,
+All 135 oracles replay on the driver's fixed testdata; this writes a
+full seeded synthetic tenth-scale testdata set (documents,
 embeddings, events, and the seven TPC-H tables) with the shapes that
-fixed data never exercises, so the sensitive operators are re-checked
-against DuckDB on inputs with different collision/tie structure each
-seed. The documents get exact-duplicate and one-token-edit
-near-duplicate texts at random positions, empty texts, single-token
-and punctuation-only documents, heavy token skew (zipf), null
-lang/source, a dominant source (~60%) and tie-heavy n_chars; those
-shapes served the text and near-duplicate families, which have left
-the registry, and the tables are still written because their schemas
-mirror the driver's testdata. Same routine as the driver after:
+fixed data never exercises — exact-duplicate and
+one-token-edit near-duplicate texts at RANDOM positions (not the
+fixtures' planted +100000 twins), empty texts, single-token and
+punctuation-only documents, heavy token skew (zipf), null lang/source,
+a dominant source (~60%), and tie-heavy n_chars — so the sensitive
+operators (minhash/simhash sketching, n-gram jaccard, equi-depth,
+PSI drift) are re-checked against DuckDB on inputs with different
+collision/tie structure each seed. Same routine as the driver after:
 
     python3 scripts/synthgen.py 1 /tmp/synth1
-    SPARK_GRAFT_ONLY=q_sessionize,... sbt "runMain graft.Verify \
+    SPARK_GRAFT_ONLY=q_dedup_minhash,... sbt "runMain graft.Verify \
         /tmp/synth1 /tmp/synth1_out"
     python3 scripts/selfcheck.py /tmp/synth1 /tmp/synth1_out
 
@@ -58,16 +57,21 @@ orphan FKs, quantity plants at filter edges, and millisecond
 year-boundary dates — see gen_tpch's docstring for the fixture
 contracts it honors.
 
-Replayable subset = the full registry. Round-13 status (then a
-135-query suite): 135/135 green on seeds 1 and 2. The replays
-surfaced and fixed seven real divergences: six oracle bugs (NaN
-fallback shingles, NULL category join rows, two variant-distinctness
-construction shortcuts, NULLS LAST ordering under null lang /
-event_type, and a falsified session_window boundary claim - Spark
-merges an event arriving exactly at the previous session's end, the
-`>=` replay split it) and one operator bug in a sampling operator
-that has since left the registry (a null-unsafe equi-join dropped a
-NULL stratum's entire quota).
+Replayable subset = the FULL 135-query suite. (q_embed_neardup's
+oracle was the last construction-bound one — it asserted exactly the
+planted +100000 twins; it now replays the whole sign-LSH pipeline
+generically, since the hyperplanes are md5-derived and DuckDB can
+rebuild the exact band keys.) Round-13 status: 135/135 green on
+seeds 1 and 2. The replays surfaced and fixed seven real
+divergences: six oracle bugs (NaN fallback shingles, NULL category
+join rows, two variant-distinctness construction shortcuts, NULLS
+LAST ordering under null lang / event_type, and a falsified
+session_window boundary claim - Spark merges an event arriving
+exactly at the previous session's end, the `>=` replay split it) and
+ONE operator bug — quotaSample's restore join dropped a NULL
+stratum's entire quota (null-unsafe equi-join after a window head
+that counted NULL as a group; no driver fixture has a NULL lang, so
+135-green never reached it).
 """
 import sys
 import numpy as np

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,10 +13,11 @@ import graft.etl.Ops
 import graft.io.{Bucketing, Readers, StateTable, Writers, ZOrder}
 import graft.jobs.Jobs
 import graft.operators.Skew
-import graft.streaming.{Attribution, DriftMonitor, FileRelay}
+import graft.streaming.{Attribution, DriftMonitor, FileRelay, StreamingDedup}
 
 /** Oracle-checked queries over /root/testdata, one per SURVEY.md §2
-  * operator plus the event, streaming and recommendation families.
+  * operator (ETL/connector families; LLM-pipeline families live in
+  * [[QueriesLlm]]).
   *
   * Conventions shared with the DuckDB oracle SQL in [[SparkEntry.oracleSql]]:
   *  - IDs cast to string (the reference's IDs are strings, README.md:170);
@@ -61,7 +62,7 @@ object Queries {
     * everything in it when the JVM exits — not sooner, because the frame
     * a query returns reads it lazily.
     */
-  private def tmp(tag: String): String = tmpDirs.synchronized {
+  private[graft] def tmp(tag: String): String = tmpDirs.synchronized {
     val dir = Files.createTempDirectory(s"graft-$tag-").toFile
     tmpDirs += dir
     dir.toString
@@ -941,7 +942,7 @@ object Queries {
           graft.operators.Events.tsMicros(raw).as("ts_us")),
         Seq(key), "ts_us")
       // HALF_UP to 6 places matches DuckDB's round() on the oracle
-      // side
+      // side (same convention as the keySkew share)
       val share = new java.math.BigDecimal(d.topShare)
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
       (label, d.nRows, d.nKeys, d.topRows, share, d.bucketed)
@@ -1026,7 +1027,8 @@ object Queries {
   /** Advisor-routed equi-join (JoinAdvisor.autoJoin): the decided
     * strategy enters the plan as a hint; every strategy is
     * output-identical, so the oracle is the plain join + rollup
-    * (decimal accumulation for bit-stable totals).
+    * (the [[bloomJoinQ]] convention — decimal accumulation for
+    * bit-stable totals).
     */
   def autoJoinQ(s: SparkSession, dir: String): DataFrame = {
     val (joined, _) = graft.operators.JoinAdvisor.autoJoin(
@@ -1264,6 +1266,87 @@ object Queries {
         delay = "2 hours")
       .select(col("user_id"), col("view_id"), col("conv_id"))
       .orderBy("user_id", "view_id", "conv_id")
+  }
+
+  /** §2.12 streaming dedup, driver-checkable: an AvailableNow streaming
+    * run of [[StreamingDedup.dedupByContent]] over a JSONL fixture
+    * (documents plus case/whitespace-mangled duplicates of doc_id < 100,
+    * the q_dedup_exact corpus), equivalent to batch `dropDuplicates` on
+    * the content fingerprint. Output is the surviving fingerprint set —
+    * identical whichever duplicate of a group arrives first, so the
+    * oracle is `SELECT DISTINCT md5(normalized text)`.
+    */
+  def streamingDedupEquiv(s: SparkSession, dir: String): DataFrame = {
+    val d = tmp("sdedupq")
+    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val dups = docs.where(col("doc_id") < 100)
+      .select((col("doc_id") + 200000).as("doc_id"),
+        concat(upper(col("text").substr(lit(1), lit(10))),
+          col("text").substr(lit(11), lit(Int.MaxValue)),
+          lit("  ")).as("text"))
+    docs.unionByName(dups)
+      .withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
+      .write.mode("overwrite").json(s"$d/in")
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("ts", TimestampType), StructField("text", StringType)))
+    val src = s.readStream.schema(schema).json(s"$d/in")
+    val table =
+      "sdedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = StreamingDedup.dedupByContent(src, "text", "ts", "10 minutes")
+      .writeStream.format("memory").queryName(table)
+      .outputMode("append")
+      .option("checkpointLocation", s"$d/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    s.table(table).select(col("fp")).orderBy("fp")
+  }
+
+  /** §2.11 streaming NEAR-dup ([[graft.streaming.StreamingDedup
+    * .nearDupByMinhash]]), driver-checkable: an AvailableNow run over
+    * documents at T0 and their 90%-truncation twins one hour later,
+    * flagged by first-wins MinHash banding with the q_dedup_minhash
+    * sketch params (32 hashes x 16 bands — the regime whose batch
+    * oracle proves banding catches every planted pair). The per-band
+    * verdicts reduce to per-doc flags in batch (all of a doc's
+    * verdicts share its micro-batch); output is the flagged planted
+    * twins, and the oracle states the complete twin list — a lost
+    * band collision, an expired lease, or a double-emitted verdict
+    * all break the gate.
+    */
+  def streamingMinhashQ(s: SparkSession, dir: String): DataFrame = {
+    val d = tmp("sminhash")
+    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val twins = QueriesLlm.docsWithTwins(s, dir, 90)
+      .where(col("doc_id") >= 100000)
+    docs.withColumn("ts", lit("2024-01-01 00:00:00").cast("timestamp"))
+      .write.mode("overwrite").json(s"$d/in/f1")
+    twins.withColumn("ts", lit("2024-01-01 01:00:00").cast("timestamp"))
+      .write.mode("overwrite").json(s"$d/in/f2")
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("ts", TimestampType), StructField("text", StringType)))
+    val table =
+      "sminhash_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    withShufflePartitions(s, 4) {
+      val src = s.readStream.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", "1").json(s"$d/in")
+        .withWatermark("ts", "4 hours")
+      val q = StreamingDedup.nearDupByMinhash(src, "doc_id", "text",
+          "ts", ttlMs = 4L * 3600 * 1000, shingleWidth = 3,
+          numHashes = 32, bands = 16)
+        .toDF()
+        .writeStream.format("memory").queryName(table)
+        .outputMode("append")
+        .option("checkpointLocation", s"$d/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    s.table(table).groupBy(col("docId").as("doc_id"))
+      .agg(max(col("dup")).as("dup"))
+      .where(col("dup") && col("doc_id") >= 100000)
+      .select("doc_id").orderBy("doc_id")
   }
 
   /** Streaming distinct-count sketch, driver-checkable: the MERGEABLE
@@ -1623,7 +1706,10 @@ object Queries {
     * entry point, which computes the rebuild-equivalent form directly
     * (ONE fan-out over existing ∪ delta — see its scaladoc for why a
     * one-shot evaluation must not build state it immediately
-    * discards). Round 21 fixture note: the delta is the 1998
+    * discards). The TRUE maintenance path (state − touched-old +
+    * touched-full) lives in [[graft.operators.ItemSim
+    * .cosineNeighborsFromState]]; ItemSimSpec proves it
+    * output-identical. Round 21 fixture note: the delta is the 1998
     * orders of the `user_id % 101 == 0` slice — a plain date split
     * cannot model the daily-delta regime on this fixture (TPC-H
     * customers order uniformly across the window, so even one month
@@ -2537,6 +2623,8 @@ object Queries {
     "q_stream_enrich" -> (streamEnrich _),
     "q_attribution" -> (attribution _),
     "q_attribution_outer" -> (attributionOuter _),
+    "q_streaming_dedup_equiv" -> (streamingDedupEquiv _),
+    "q_streaming_minhash" -> (streamingMinhashQ _),
     "q_streaming_hll" -> (streamingHllQ _),
     "q_streaming_cms" -> (streamingCmsQ _),
     "q_streaming_quantile" -> (streamingQuantileQ _),

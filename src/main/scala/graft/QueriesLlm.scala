@@ -892,8 +892,7 @@ object QueriesLlm {
   def nearDupAgainstIndex(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
     val corpus = t(s, dir, "documents").select("doc_id", "text")
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-mhidx-").toString + "/bands"
+    val idx = Queries.tmp("mhidx") + "/bands"
     val mid = 250L
     Dedup.minhashIndexWrite(corpus.where(col("doc_id") < mid),
       "doc_id", "text", idx, numHashes = 32, bands = 16)

@@ -10,11 +10,11 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame =
     Queries.riPipeline(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2, plus the
-    * event, streaming and recommendation families ([[Queries]]).
+  /** One entry per implemented operator from SURVEY.md §2 ([[Queries]])
+    * plus the LLM-training-data pipeline families ([[QueriesLlm]]).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all
+    Queries.all ++ QueriesLlm.all
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

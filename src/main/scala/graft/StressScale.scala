@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   * across replicas become disjoint) and circularly shifts each
   * embedding by i positions (random vectors decorrelate at lag >= 1).
   * Replica 0 stays byte-identical to the source, so fixtures that
-  * plant twins in the low-id range keep their planted structure, and each replica carries its own
+  * plant twins in the low-id range (docsWithTwins / vecsWithTwins)
+  * keep their planted structure, and each replica carries its own
   * natural near-dup population — pair counts scale ~N, like a corpus
   * that actually grew.
   *
@@ -196,7 +197,7 @@ object StressScale {
         "event_id" -> stride(t("events"), "event_id"),
         "user_id" -> stride(t("events"), "user_id"))),
       "documents" -> (() => Map("doc_id" -> stride(t("documents"), "doc_id"))),
-      // embeddings stride must clear a +100000 planted-twin id range
+      // embeddings stride must clear vecsWithTwins' +100000 twin range
       "embeddings" -> (() => Map("vec_id" ->
         math.max(stride(t("embeddings"), "vec_id"), 1000000L))))
     val allDims = Seq("part", "customer", "supplier", "nation", "region")

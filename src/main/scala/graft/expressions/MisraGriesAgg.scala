@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * each surviving counter undercounts by at most N/(capacity+1). The
   * emitted set is therefore a guaranteed SUPERSET of the heavy hitters
   * at that threshold — callers re-count candidates exactly for an
-  * exact, deterministic final answer.
+  * exact, deterministic final answer ([[graft.operators.Frequency]]).
   *
   * Merge is the offset-subtract construction (sum counters; if over
   * capacity, subtract the (capacity+1)-th largest and drop non-

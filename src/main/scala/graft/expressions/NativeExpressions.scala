@@ -142,8 +142,8 @@ object NativeExpressions {
   }
 
   /** (array<double>, array<double>) -> double cosine similarity.
-    * Inputs MUST already be array<double> (callers cast the arrays
-    * themselves) — AbstractDataType is
+    * Inputs MUST already be array<double> (callers cast via
+    * [[graft.functions.VectorFunctions.toDouble]]) — AbstractDataType is
     * private[sql] in Spark 4, so no implicit-cast contract here.
     */
   case class CosineSimilarity(left: Expression, right: Expression)
@@ -286,7 +286,8 @@ object NativeExpressions {
       extends UnaryExpression {
     // an EMPTY merge table is legal: no merge ever applies, so the
     // expression degrades to pure code-point segmentation — exactly
-    // the iteration-0 state BPE TRAINING needs
+    // the iteration-0 state BPE TRAINING needs ([[graft.operators
+    // .Tokenizer.bpeTrain]])
     private lazy val ranks: java.util.HashMap[String, Integer] = {
       val m = new java.util.HashMap[String, Integer](merges.size * 2)
       merges.zipWithIndex.foreach { case ((l, r), k) =>

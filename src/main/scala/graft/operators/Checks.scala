@@ -80,6 +80,8 @@ object Checks {
   final case class RefIntegrity(column: String, dim: DataFrame,
       pkCol: String) extends Rule { val name = "ref_integrity" }
 
+  private def round6(c: Column): Column = round(c, 6)
+
   /** Evaluate the rules; see the object scaladoc for the pass
     * structure. Empty input: ratio rules report metric 1.0 (nothing
     * violated nothing), uniqueness and RI likewise pass.

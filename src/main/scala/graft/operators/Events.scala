@@ -400,7 +400,8 @@ object Events {
     * to the accumulator (one row per surviving key, O(keys)) and
     * takes another conditional min — `stages` key-partitioned
     * shuffles of ever-shrinking slices, each map-side combinable.
-    * The projected event frame is pinned across the per-stage scans.
+    * The projected event frame is pinned across the per-stage scans
+    * (the [[Graph.pageRank]] consumer pattern).
     *
     * Output: (keyCol, t1 .. tN).
     */

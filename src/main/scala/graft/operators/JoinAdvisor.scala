@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
   *
   * 100 TB shape: the profile shuffles <= 2^p rows per side and
   * collects one <= 2^p-row register array per side (bounded by
-  * construction); the routed
+  * construction, the [[Ann]] centroid-matrix contract); the routed
   * join then avoids the two classic cliffs — sort-merging a
   * broadcastable dim, and broadcasting a "dim" that is secretly 500M
   * rows (the static-hint failure this replaces).

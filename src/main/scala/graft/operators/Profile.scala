@@ -136,6 +136,228 @@ object Profile {
     }
   }
 
+  /** Distribution drift between two snapshots of a corpus (population
+    * stability index): both sides are binned on ONE shared integer
+    * grid derived from their union, then each bin contributes
+    * `(pa - pb) * ln(pa / pb)` with add-1-smoothed shares
+    * `p = (n + 1) / (N + bins)` — smoothing keeps empty bins finite.
+    * ALL `bins` grid bins are emitted, occupied or not (ADVICE r10): a
+    * bin empty on both sides still carries smoothing mass
+    * `(1/(nA+bins) - 1/(nB+bins)) * ln(...)` whenever the totals
+    * differ, and emitting the whole grid is what makes each side's
+    * smoothed shares sum to exactly 1 — so the summed `psi` is the
+    * true full-grid PSI, not an occupied-bins approximation. The
+    * per-bin expression is one fixed IEEE tree over integers any
+    * engine reproduces; callers sum `psi` for the headline number
+    * (> 0.2 conventionally = drifted).
+    *
+    * Scale shape: same as [[histogram]] twice — two scalars collected
+    * for the grid, two counts for the totals, one map-side-combinable
+    * groupBy per side, and a bins-sized outer join.
+    *
+    * @return (bin, lo, hi, n_a, n_b, psi) for every grid bin 0..bins-1
+    */
+  def distributionDrift(dfA: DataFrame, dfB: DataFrame,
+      valueCol: String, bins: Int): DataFrame = {
+    require(bins > 0, "bins must be > 0")
+    val un = dfA.select(col(valueCol))
+      .unionByName(dfB.select(col(valueCol)))
+      .where(col(valueCol).isNotNull)
+    val mm = un.agg(min(col(valueCol)).cast("long").as("mn"),
+      max(col(valueCol)).cast("long").as("mx")).collect()(0)
+    require(!mm.isNullAt(0), "both inputs are empty")
+    val mn = mm.getLong(0)
+    val w = (mm.getLong(1) - mn) / bins + 1
+    def binned(df: DataFrame, n: String): DataFrame =
+      df.where(col(valueCol).isNotNull)
+        .groupBy(expr(s"(CAST(`$valueCol` AS BIGINT) - ${mn}L) div ${w}L")
+          .as("bin"))
+        .agg(count(lit(1)).as(n))
+    val nA = dfA.where(col(valueCol).isNotNull).count()
+    val nB = dfB.where(col(valueCol).isNotNull).count()
+    // the grid covers every representable bin (data bins are 0..bins-1
+    // by construction of w), so left joins from it lose nothing
+    val grid = dfA.sparkSession.range(0, bins).select(col("id").as("bin"))
+    grid.join(binned(dfA, "n_a"), Seq("bin"), "left_outer")
+      .join(binned(dfB, "n_b"), Seq("bin"), "left_outer")
+      .select(col("bin"),
+        (lit(mn) + col("bin") * w).as("lo"),
+        (lit(mn) + (col("bin") + 1) * w - 1).as("hi"),
+        coalesce(col("n_a"), lit(0L)).as("n_a"),
+        coalesce(col("n_b"), lit(0L)).as("n_b"))
+      .withColumn("pa",
+        (col("n_a") + 1L).cast("double") / lit(nA + bins))
+      .withColumn("pb",
+        (col("n_b") + 1L).cast("double") / lit(nB + bins))
+      .select(col("bin"), col("lo"), col("hi"), col("n_a"), col("n_b"),
+        round((col("pa") - col("pb")) * log(col("pa") / col("pb")), 9)
+          .as("psi"))
+  }
+
+  /** Source-coverage curve — the "how much of the corpus do the top-k
+    * domains carry" datasheet panel: per source its row count, weight
+    * total (chars/tokens/bytes), share, and the cumulative share when
+    * sources are ranked heaviest-first. The curve is what a curation
+    * review reads to spot domination (3 domains = 80% of tokens) and
+    * to size per-source caps.
+    *
+    * Scale shape: one map-side-combinable groupBy collapses the corpus
+    * to one row per source; the ranking window then runs over that
+    * SOURCE-sized table (unpartitioned by design — domains number
+    * thousands, not billions; the corpus itself never enters a
+    * window). Shares divide by one collected total and round to 6, so
+    * the curve is engine-exact.
+    *
+    * @return (rank, source, n_rows, n_weight, share, cum_share)
+    *   heaviest first, ties by source desc
+    */
+  def sourceCoverage(df: DataFrame, srcCol: String,
+      weightCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val bySource = df.where(col(srcCol).isNotNull)
+      .groupBy(col(srcCol).cast("string").as("source"))
+      .agg(count(lit(1)).as("n_rows"),
+        sum(col(weightCol)).cast("long").as("n_weight"))
+    val totRow = bySource.agg(sum("n_weight")).head()
+    if (totRow.isNullAt(0)) return bySource
+      .select(lit(0L).as("rank"), col("source"), col("n_rows"),
+        col("n_weight"), lit(0.0).as("share"), lit(0.0).as("cum_share"))
+      .where(lit(false))
+    val total = totRow.getLong(0)
+    val w = Window.orderBy(col("n_weight").desc, col("source").desc)
+    bySource
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .withColumn("share",
+        round(col("n_weight").cast("double") / total, 6))
+      .withColumn("cum_share", round(
+        sum("n_weight").over(w.rowsBetween(Window.unboundedPreceding, 0))
+          .cast("double") / total, 6))
+      .select("rank", "source", "n_rows", "n_weight", "share",
+        "cum_share")
+  }
+
+  /** Key-skew summary — the diagnostic that decides, BEFORE a 100 TB
+    * join or aggregation, whether its key needs salting: row/key
+    * counts, the heaviest key and its share (one reducer's worst-case
+    * load fraction), and the Shannon entropy of the key distribution
+    * (ln(n_keys) = perfectly uniform; near 0 = one key dominates).
+    *
+    * Entropy uses `H = ln(N) - (sum n_i ln n_i) / N`, so it needs ONE
+    * aggregate over the per-key counts; the `n_i ln n_i` terms
+    * accumulate in DECIMAL(28,12) — order-independent — before the
+    * final IEEE subtraction/division and 6-place round, making the
+    * number engine-exact (the [[graft.operators.Retrieval.bm25]]
+    * recipe). The heaviest key is a struct-max (count, then key desc
+    * on ties), never a sort.
+    *
+    * Scale shape: one map-side-combinable groupBy on the key, then a
+    * 1-row aggregate over the (much smaller) count table. Nothing
+    * else moves.
+    *
+    * @return one row: (n_rows, n_keys, top_key string, top_n,
+    *   top_share, entropy)
+    */
+  def keySkew(df: DataFrame, keyCol: String): DataFrame = {
+    val counts = df.where(col(keyCol).isNotNull)
+      .groupBy(col(keyCol).cast("string").as("k"))
+      .agg(count(lit(1)).as("n"))
+    counts.agg(
+        sum("n").as("n_rows"),
+        count(lit(1)).as("n_keys"),
+        max(struct(col("n"), col("k"))).as("top"),
+        sum((col("n").cast("double") * log(col("n")))
+          .cast("decimal(28,12)")).as("s"))
+      .select(col("n_rows"), col("n_keys"),
+        col("top.k").as("top_key"), col("top.n").as("top_n"),
+        round(col("top.n").cast("double") / col("n_rows"), 6)
+          .as("top_share"),
+        round(log(col("n_rows").cast("double")) -
+          col("s").cast("double") / col("n_rows").cast("double"), 6)
+          .as("entropy"))
+      // empty input -> the aggregate row is all-null; drop it rather
+      // than emit a meaningless summary
+      .where(col("n_rows").isNotNull)
+  }
+
+  /** Categorical drift between two snapshots — the companion of
+    * [[distributionDrift]] for discrete columns (language, source
+    * domain, license tag): per-category PSI with the same
+    * add-1-smoothed shares `p = (n + 1) / (N + C)`, where `C` is the
+    * number of distinct categories in the UNION of both sides (the
+    * shared "grid"), so a category present on one side only still
+    * contributes a finite, positive term. Callers sum `psi` for the
+    * headline drift number.
+    *
+    * Scale shape: one map-side-combinable groupBy per side (the
+    * category key is low-cardinality by construction, so the shuffle
+    * carries one row per category), a C-sized outer join, and two
+    * count scalars. Nothing grows with corpus size but the two
+    * pre-aggregated scans.
+    *
+    * @return (category, n_a, n_b, psi) per category of the union
+    */
+  def categoricalDrift(dfA: DataFrame, dfB: DataFrame,
+      catCol: String): DataFrame = {
+    def counted(df: DataFrame, n: String): DataFrame =
+      df.where(col(catCol).isNotNull)
+        .groupBy(col(catCol).cast("string").as("category"))
+        .agg(count(lit(1)).as(n))
+    val joined = counted(dfA, "n_a")
+      .join(counted(dfB, "n_b"), Seq("category"), "full_outer")
+      .select(col("category"),
+        coalesce(col("n_a"), lit(0L)).as("n_a"),
+        coalesce(col("n_b"), lit(0L)).as("n_b"))
+    val tot = joined.agg(count(lit(1)).as("c"),
+      sum("n_a").as("na"), sum("n_b").as("nb")).collect()(0)
+    // both inputs empty -> no categories; the empty joined frame IS
+    // the answer (sums are null then, so don't read them as longs)
+    if (tot.getLong(0) == 0)
+      return joined.withColumn("psi", lit(0.0))
+        .select("category", "n_a", "n_b", "psi")
+    val (c, nA, nB) = (tot.getLong(0), tot.getLong(1), tot.getLong(2))
+    joined
+      .withColumn("pa", (col("n_a") + 1L).cast("double") / lit(nA + c))
+      .withColumn("pb", (col("n_b") + 1L).cast("double") / lit(nB + c))
+      .select(col("category"), col("n_a"), col("n_b"),
+        round((col("pa") - col("pb")) * log(col("pa") / col("pb")), 9)
+          .as("psi"))
+  }
+
+  /** Equi-width integer histogram — the distribution-shape panel of a
+    * corpus datasheet (length profiles, score bands, token budgets).
+    * Bin arithmetic is pure INTEGER: width = (max - min) / bins + 1
+    * and bin = (v - min) / width, both truncating, so every engine
+    * derives identical bins from identical data — no float edges to
+    * drift on. One min/max aggregate (collected: two longs), then one
+    * map-side-combinable groupBy over `bins` keys. Empty bins are
+    * absent (callers render gaps; emitting them would need a
+    * generate-join for no analytical gain).
+    *
+    * @return (bin, lo, hi, n) — lo/hi the bin's inclusive value range
+    */
+  def histogram(df: DataFrame, valueCol: String, bins: Int)
+      : DataFrame = {
+    require(bins > 0, "bins must be > 0")
+    val mm = df.agg(min(col(valueCol)).cast("long").as("mn"),
+      max(col(valueCol)).cast("long").as("mx")).collect()(0)
+    if (mm.isNullAt(0)) {
+      // no non-null values -> empty histogram with the right schema
+      return df.sparkSession.emptyDataFrame
+        .select(lit(0L).as("bin"), lit(0L).as("lo"), lit(0L).as("hi"),
+          lit(0L).as("n")).where(lit(false))
+    }
+    val mn = mm.getLong(0)
+    val w = (mm.getLong(1) - mn) / bins + 1
+    // `div`, not `/`: Column `/` on longs is double division, which
+    // loses exactness past 2^53; div is true integral division
+    df.where(col(valueCol).isNotNull)
+      .groupBy(expr(s"(CAST(`$valueCol` AS BIGINT) - ${mn}L) div ${w}L")
+        .as("bin"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("bin"), (lit(mn) + col("bin") * w).as("lo"),
+        (lit(mn) + (col("bin") + 1) * w - 1).as("hi"), col("n"))
+  }
+
   /** Pairwise Pearson correlation, engine-exact where built-in `corr`
     * is not: Spark's corr accumulates running double moments whose
     * value depends on partition merge order, so two runs (or two

@@ -1,33 +1,51 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Mergeable bounded-state quantile sketch for CONTINUOUS columns:
-  * Spark's exact percentile aggregate buffers a per-distinct-value
-  * counts map, unbounded for continuous doubles. This sketch holds at
-  * most `buckets` rows per group, ever.
+/** Mergeable bounded-state quantile sketch for CONTINUOUS columns —
+  * the profiling gap exact `percentile` leaves at 100 TB: Spark's
+  * exact percentile aggregate buffers a per-distinct-value counts map,
+  * fine for the low-cardinality integer columns the panels document,
+  * unbounded for continuous doubles (quality scores, cosine margins,
+  * event values). This sketch holds at most `k` rows per group, ever.
   *
   * Design note (why not a literal KLL/GK compactor): KLL's compaction
   * and GK's band merging are MERGE-ORDER-DEPENDENT — Spark's partial
   * aggregation merges shard buffers in arrival order, which varies run
   * to run, so a compactor sketch cannot be bit-reproducible under the
   * engine's nondeterministic merge tree, and an external SQL oracle
-  * could never replay it. The order-free equivalent is a PRIORITY
-  * SAMPLE: priorities are the engine-wide md5-derived 60-bit hash of
-  * the row's unique id (`('0x'||substr(md5(id||':qs'),1,15))::BIGINT`
-  * in SQL — no JVM PRNG), and the per-bucket minimum is associative,
-  * commutative and idempotent exactly like the HLL register max in
-  * [[Sketches]]. So shard sketches merge to the BIT-IDENTICAL sketch a
+  * could never replay it. The order-free equivalent is a bottom-k
+  * PRIORITY SAMPLE: priorities are the engine-wide md5-derived 60-bit
+  * hash of the row's unique id (`('0x'||substr(md5(id||':qs'),1,15))
+  * ::BIGINT` in SQL — no JVM PRNG), and "keep the k smallest
+  * priorities" is associative, commutative, and idempotent exactly
+  * like the HLL register max in [[Sketches]]: bottom-k of a union of
+  * shard bottom-k's equals bottom-k of the union (any row a shard
+  * dropped ranks above that shard's k survivors, hence above the
+  * global k). So shard sketches merge to the BIT-IDENTICAL sketch a
   * direct build produces, regardless of sharding or partitioning, and
   * the whole construction replays in any md5-equipped SQL engine.
   *
   * Rank-error bound (documented, probabilistic over the hash): the
-  * kept rows are a uniform sample of about k = `buckets` rows drawn
-  * independently of the values. By Dvoretzky–Kiefer–Wolfowitz,
+  * kept rows are the sample induced by the k smallest of n distinct
+  * uniform priorities — a simple random sample of size min(k, n)
+  * drawn independently of the values. By Dvoretzky–Kiefer–Wolfowitz,
   * sup_x |F_sample(x) - F(x)| <= sqrt(ln(2/delta) / (2k)) with
   * probability 1-delta — at k = 8192 the uniform rank error is
-  * <= 1.8% with 99% confidence; at k = 1024 it is <= 5.1%.
+  * <= 1.8% with 99% confidence; at k = 1024 it is <= 5.1%. Every
+  * nearest-rank quantile read from the sample therefore sits within
+  * that rank band of the true quantile, SIMULTANEOUSLY at all p (DKW
+  * is uniform over x). When a group has n <= k rows nothing is
+  * dropped and the sketch quantiles are EXACT.
+  *
+  * Scale shape: the `row_number <= k` filter is Catalyst's
+  * WindowGroupLimit pattern (the [[Sketches.kmvDistinct]] plan pin),
+  * so each map task forwards at most k rows per group BEFORE the
+  * exchange — the shuffle carries O(groups x k) rows however large
+  * the input; quantile evaluation then folds each group's <= k
+  * values into one sorted bounded array.
   */
 object Quantiles {
 
@@ -36,6 +54,67 @@ object Quantiles {
     */
   private def h60(v: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = Sketches.h60(v)
+
+  /** Build (or merge) the sketch: the k smallest-priority rows per
+    * group. `idCol` must be unique per row (priority ties break on
+    * (pri, id), so a duplicated id could make the cut nondeterministic
+    * between engines); values ride along untouched.
+    *
+    * Feeding a UNION of shard sketches back through this function
+    * with the same k returns the direct-build sketch bit-for-bit —
+    * the mergeable-summary contract ([[SketchesSpec]] proves it).
+    *
+    * Output: (groupCols..., __pri, id, value) — keep `__pri` to stay
+    * mergeable; [[quantiles]] drops it.
+    */
+  def sampleSketch(df: DataFrame, groupCols: Seq[String],
+      valueCol: String, idCol: String, k: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val g = groupCols.map(col)
+    // a frame that already carries __pri is a (union of) sketch(es)
+    // being re-merged: reuse the priorities so merge == direct, and
+    // DEDUP on (group, id) first — overlapping or re-delivered shard
+    // sketches would otherwise occupy k slots twice with the same row
+    // (the idempotence half of the mergeable contract; the frames are
+    // <= k rows per group, so the dedup is cheap)
+    val withPri =
+      if (df.columns.contains("__pri"))
+        df.dropDuplicates(groupCols :+ idCol)
+      else df
+        // NULL values carry no rank information and would silently
+        // consume sample slots (and diverge from SQL replays whose
+        // list() keeps nulls) — excluded, like [[madOutliersSketch]]
+        .where(col(valueCol).isNotNull)
+        .withColumn("__pri",
+          h60(concat(col(idCol).cast("string"), lit(":qs"))))
+    val pri = withPri.select(
+      g :+ col("__pri") :+ col(idCol) :+ col(valueCol): _*)
+    val w = Window.partitionBy(g: _*)
+      .orderBy(col("__pri").asc, col(idCol).asc)
+    pri.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= k)
+      .drop("__rn")
+  }
+
+  /** Global (ungrouped) sketch: the k smallest-priority rows of the
+    * whole frame. Routed through `orderBy(...).limit(k)` rather than a
+    * single-partition window — Spark plans that as TakeOrderedAndProject
+    * (each map task forwards its local k, the driver merges k rows),
+    * so there is no one-reducer bottleneck at any scale. Same
+    * mergeable algebra as [[sampleSketch]].
+    */
+  def sampleSketchGlobal(df: DataFrame, valueCol: String,
+      idCol: String, k: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val withPri =
+      if (df.columns.contains("__pri")) df.dropDuplicates(idCol)
+      else df.where(col(valueCol).isNotNull) // see [[sampleSketch]]
+        .withColumn("__pri",
+          h60(concat(col(idCol).cast("string"), lit(":qs"))))
+    withPri.select(col("__pri"), col(idCol), col(valueCol))
+      .orderBy(col("__pri").asc, col(idCol).asc)
+      .limit(k)
+  }
 
   /** Nearest-rank quantiles from a sketch (or any frame of <= k rows
     * per group): for each permille point pm, the ceil(m*pm/1000)-th
@@ -84,10 +163,10 @@ object Quantiles {
     * priorities are value-independent md5 hashes, so by exchangeability
     * the minima form a uniform-without-replacement sample of ~buckets
     * rows per group — read quantiles off it with [[quantiles]] under
-    * the DKW-style rank band of the header (k = buckets). An exact
-    * bottom-k needs a rank and therefore cannot be a streaming
-    * aggregate; this trades a slightly looser sample for a pure
-    * bounded fold.
+    * the same DKW-style rank band (k = buckets). Unlike
+    * [[sampleSketch]]'s exact bottom-k (which needs a rank and
+    * therefore cannot be a streaming aggregate), this trades a
+    * slightly looser sample for a pure bounded fold.
     *
     * Output: (groupCols..., j, __pri, id, value).
     */
@@ -96,9 +175,7 @@ object Quantiles {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val g = groupCols.map(col)
     val withPri = df
-      // NULL values carry no rank information and would silently
-      // consume sample slots
-      .where(col(valueCol).isNotNull)
+      .where(col(valueCol).isNotNull) // see [[sampleSketch]]
       .withColumn("__pri",
         h60(concat(col(idCol).cast("string"), lit(":qs"))))
     withPri
@@ -111,4 +188,93 @@ object Quantiles {
         col("s.id").as(idCol) :+ col("s.v").as(valueCol): _*)
   }
 
+  /** One-call form: sketch then evaluate. */
+  def sketchQuantiles(df: DataFrame, groupCols: Seq[String],
+      valueCol: String, idCol: String, k: Int,
+      permilles: Seq[Int]): DataFrame =
+    quantiles(sampleSketch(df, groupCols, valueCol, idCol, k),
+      groupCols, valueCol, permilles)
+
+  /** Winsorization: clip `valueCol` to the per-group
+    * [loPermille, hiPermille] band estimated from the bottom-k
+    * priority sketch — the robust-cleaning step (cap the crawler's
+    * 10 GB "document", floor the negative price) that a 100 TB
+    * pipeline cannot run off exact per-group sorts.
+    *
+    * The clip bounds are SELECTED input values (nearest-rank, integer
+    * index arithmetic — see [[quantiles]]) and the clip itself is a
+    * pure comparison, so the output involves NO new arithmetic at
+    * all: bit-reproducible by construction, replayable by the same
+    * SQL that replays the sketch. Bounds sit within the sketch's DKW
+    * rank band of the true quantiles; groups with <= k rows clip at
+    * EXACT quantiles.
+    *
+    * Scale shape: the sketch shuffle carries O(groups x k) rows
+    * (WindowGroupLimit pattern); the bounds table is groups-sized and
+    * joins back by broadcast; the data-sized frame is touched by one
+    * scan + one broadcast join. NULL values are dropped (the sketch
+    * carries no rank information for them).
+    *
+    * @return `df`'s non-null-value rows plus `lo`, `hi`, `clipped`
+    *         (the winsorized value) and `was_clipped`.
+    */
+  def winsorizeSketch(df: DataFrame, groupCols: Seq[String],
+      valueCol: String, idCol: String, k: Int,
+      loPermille: Int, hiPermille: Int): DataFrame = {
+    require(loPermille < hiPermille,
+      s"need loPermille < hiPermille, got $loPermille/$hiPermille")
+    val bounds = sketchQuantiles(df, groupCols, valueCol, idCol, k,
+        Seq(loPermille, hiPermille))
+      .groupBy(groupCols.map(col): _*)
+      .agg(min(when(col("pm") === loPermille, col("q_est"))).as("lo"),
+        min(when(col("pm") === hiPermille, col("q_est"))).as("hi"))
+    val joined =
+      if (groupCols.isEmpty) df.crossJoin(broadcast(bounds))
+      else df.join(broadcast(bounds), groupCols)
+    joined
+      .where(col(valueCol).isNotNull)
+      .withColumn("clipped",
+        when(col(valueCol) < col("lo"), col("lo"))
+          .when(col(valueCol) > col("hi"), col("hi"))
+          .otherwise(col(valueCol)))
+      .withColumn("was_clipped",
+        col(valueCol) < col("lo") || col(valueCol) > col("hi"))
+  }
+
+  /** MAD outlier gate for CONTINUOUS columns — the bounded-state
+    * companion to [[Curation.madOutliers]], which is exact but buffers
+    * per-distinct-value counts (fine for its documented integer
+    * columns, unbounded on continuous doubles). Median and MAD are
+    * nearest-rank statistics of the [[sampleSketchGlobal]] sample:
+    * one bounded TakeOrdered job collects <= sketchK (priority, value)
+    * rows, the two order statistics evaluate on the driver with the
+    * same integer ceil-index arithmetic as [[quantiles]], and the gate
+    * itself is a codegen'd scan-side predicate — no shuffle at all.
+    * Both statistics sit within the DKW rank band of their true
+    * values (see the object scaladoc); every arithmetic step
+    * (subtraction, abs, one multiply, the compare) is a single
+    * exactly-rounded IEEE op, so an external SQL engine reproduces
+    * the identical keep set bit-for-bit.
+    *
+    * NULL values are excluded (they are outliers to any gate). A zero
+    * sample MAD degenerates to keeping only values equal to the
+    * sample median, matching the exact operator's strictness.
+    *
+    * @return df's rows with |value - med~| <= k * mad~
+    */
+  def madOutliersSketch(df: DataFrame, valueCol: String, idCol: String,
+      k: Double, sketchK: Int = 8192): DataFrame = {
+    require(k >= 0, "k must be >= 0")
+    val sample = sampleSketchGlobal(df.where(col(valueCol).isNotNull),
+        valueCol, idCol, sketchK)
+      .select(col(valueCol).cast("double"))
+      .collect().map(_.getDouble(0)) // <= sketchK, bounded
+    if (sample.isEmpty) return df.where(lit(false))
+    val m = sample.length
+    val idx = (m * 500 + 999) / 1000 - 1 // 0-based nearest-rank median
+    val med = sample.sorted.apply(idx)
+    val mad = sample.map(v => math.abs(v - med)).sorted.apply(idx)
+    df.where(col(valueCol).isNotNull &&
+      abs(col(valueCol) - med) <= lit(k) * mad)
+  }
 }

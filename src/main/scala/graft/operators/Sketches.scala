@@ -1,14 +1,14 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Mergeable sketches — HyperLogLog registers for bounded-state
-  * cardinality estimation at 100 TB, where exact `count(distinct)`
-  * shuffles every distinct key, and count-min cells for frequencies.
-  * Both sketches hash with the engine-wide md5-derived 60-bit idiom
-  * (`('0x'||substr(md5(x),1,15))::BIGINT` in SQL), so the whole
-  * construction — hashing, register/cell selection, the estimate
+/** Distinct-count sketches — bounded-state cardinality estimation for
+  * profiling at 100 TB, where exact `count(distinct)` shuffles every
+  * distinct key. Both sketches hash with the engine-wide md5-derived
+  * 60-bit idiom (`('0x'||substr(md5(x),1,15))::BIGINT` in SQL), so the
+  * whole construction — hashing, register/min selection, the estimate
   * arithmetic — is replayed exactly by an md5-equipped SQL oracle; no
   * JVM PRNG, no engine-private hash.
   *
@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  /** The 60-bit uniform hash as a column: reproducible by any
-    * md5-equipped engine, uniform enough for order statistics.
+  /** The 60-bit uniform hash as a column (same idiom as
+    * [[Sampling]]'s hash splits): reproducible by any md5-equipped
+    * engine, uniform enough for order statistics.
     */
   private[operators] def h60(v: Column): Column =
     conv(substring(md5(v.cast("string")), 1, 15), 16, 10).cast("long")
@@ -52,6 +53,69 @@ object Sketches {
     alphaNum / (zp + (m.toDouble - sorted.length.toDouble))
   }
 
+  /** KMV (k-minimum-values) distinct estimate per group: keep the k
+    * smallest distinct hash values; with the k-th smallest normalized
+    * to u = h_k / 2^60, the estimator is (k-1)/u. Groups with fewer
+    * than k distinct values report their EXACT count (every hash was
+    * kept, nothing was estimated).
+    *
+    * Scale shape: the `row_number <= k` filter is recognized by
+    * Catalyst's WindowGroupLimit rule, so each map task forwards at
+    * most k rows per group BEFORE the exchange — state is O(groups x
+    * k) end to end, never the distinct-key volume an exact
+    * count(distinct) shuffles.
+    *
+    * Output: (group, distinct_est) — estimate rounded at 3.
+    */
+  def kmvDistinct(df: DataFrame, groupCol: String, valueCol: String,
+      k: Int): DataFrame = {
+    require(k >= 2, s"k must be >= 2, got $k")
+    val hashed = df
+      .select(col(groupCol).as("group"), h60(col(valueCol)).as("h"))
+      .distinct()
+    val w = Window.partitionBy("group").orderBy(col("h").asc)
+    hashed.withColumn("rn", row_number().over(w))
+      .where(col("rn") <= k)
+      .groupBy("group")
+      .agg(count(lit(1)).as("n_mins"), max(col("h")).as("hk"))
+      .select(col("group"),
+        when(col("n_mins") < k, col("n_mins").cast("double"))
+          .otherwise(round(
+            lit((k - 1).toDouble) /
+              (col("hk").cast("double") / lit(1152921504606846976.0)),
+            3))
+          .as("distinct_est"))
+  }
+
+  /** HyperLogLog distinct estimate per group, raw estimator: the low
+    * `p` hash bits pick one of m = 2^p registers, each register keeps
+    * the max rank (leading-zero count + 1) of the remaining 60-p
+    * bits, and the estimate is alpha_m * m^2 / sum_j 2^-M_j. Absent
+    * registers contribute 2^0 = 1 each, no driver-side state — the
+    * aggregation buffer is one small int per (group, register).
+    *
+    * Rank avoids floating log entirely: rank = (61-p) - length of the
+    * binary string of w with leading zeros trimmed — `bin`/`ltrim`/
+    * `length` behave identically in Spark and SQL oracles, including
+    * the w = 0 all-zeros case. The register sum is an ordered fold
+    * over the register-id-sorted array (bounded at m entries/group).
+    *
+    * RAW estimator only, by design: the standard small-range linear
+    * counting correction needs `ln`, whose last-ulp behavior differs
+    * across math libraries and would break bit-reproducibility. Below
+    * ~2.5m true distincts the raw estimate reads high — size p to the
+    * expected cardinality (or use [[kmvDistinct]], which is exact in
+    * exactly that small regime).
+    *
+    * Output: (group, distinct_est) — estimate rounded at 2.
+    */
+  def hllDistinct(df: DataFrame, groupCol: String, valueCol: String,
+      p: Int = 5): DataFrame =
+    hllMergeEstimate(
+      hllRegisters(df.withColumn("group", col(groupCol)),
+        Seq("group"), valueCol, p),
+      Seq("group"), p)
+
   /** The HLL register table itself — the MERGEABLE partial sketch.
     * One row per (group..., register id j) holding the max rank seen:
     * the canonical "sketch per shard, union later" artifact. Because
@@ -78,6 +142,69 @@ object Sketches {
       .agg(max(col("r")).as("r"))
   }
 
+  /** KMV set-overlap estimator (Beyer et al.): distinct-union,
+    * distinct-intersection, and Jaccard between two corpora from two
+    * bottom-k hash sketches — the cross-dataset overlap question
+    * ("how many users/documents do A and B share?") that an exact
+    * answer would pay a full distinct-join for, answered from two
+    * narrow scans and k-row driver math.
+    *
+    * Construction: each side's sketch is its k smallest distinct
+    * md5-60 hashes (a TakeOrdered per side — per-partition k, driver
+    * merge, no single-reducer stage); the union's KMV is the k
+    * smallest of the merged sketches (bottom-k of bottom-k's ==
+    * bottom-k of the union, the mergeable-summary algebra), estimated
+    * with the same (k-1)/u_k estimator as [[kmvDistinct]]; the
+    * Jaccard is the fraction of the union sample present in BOTH
+    * sides, and intersection = jaccard x union. Every number is
+    * EXACT when the true distinct counts sit below k (nothing was
+    * estimated), and the whole construction — hashing, order
+    * statistics, the division order — replays in an md5-equipped SQL
+    * oracle bit-for-bit.
+    *
+    * Output: one row (d_a_est, d_b_est, union_est, jaccard_est,
+    * inter_est) — counts rounded at 3, jaccard at 6.
+    */
+  def kmvOverlap(a: DataFrame, b: DataFrame, colA: String, colB: String,
+      k: Int): DataFrame = {
+    require(k >= 2 && k <= 1000000, s"k must be in [2, 1e6], got $k")
+    val spark = a.sparkSession
+    def sketch(df: DataFrame, c: String): Array[Long] = df
+      .where(col(c).isNotNull)
+      .select(h60(col(c)).as("h")).distinct()
+      .orderBy("h").limit(k) // TakeOrdered: k per partition, k total
+      .collect().map(_.getLong(0)) // <= k rows, bounded by construction
+    val sa = sketch(a, colA)
+    val sb = sketch(b, colB)
+    val setA = sa.toSet
+    val setB = sb.toSet
+    val u = (setA ++ setB).toArray.sorted.take(k)
+    val nU = u.length
+    val two60 = 1152921504606846976.0 // 2^60, the [[kmvDistinct]] unit
+    def est(s: Array[Long]): Double =
+      if (s.length < k) s.length.toDouble
+      else round3((k - 1).toDouble / (s.last.toDouble / two60))
+    def round3(x: Double): Double = BigDecimal(x)
+      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def round6(x: Double): Double = BigDecimal(x)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val dA = est(sa)
+    val dB = est(sb)
+    val uRaw =
+      if (nU < k) nU.toDouble
+      else (k - 1).toDouble / (u.last.toDouble / two60)
+    val uEst = if (nU < k) nU.toDouble else round3(uRaw)
+    val common = u.count(h => setA.contains(h) && setB.contains(h))
+    val jac = if (nU == 0) 0.0 else round6(common.toDouble / nU)
+    val inter =
+      if (nU == 0) 0.0
+      else round3(common.toDouble / nU * uRaw)
+    import spark.implicits._
+    Seq((dA, dB, uEst, jac, inter))
+      .toDF("d_a_est", "d_b_est", "union_est", "jaccard_est",
+        "inter_est")
+  }
+
   /** Count-min sketch cells — the MERGEABLE frequency sketch, the
     * counting sibling of [[hllRegisters]]: a d x w counter matrix
     * where each input value increments one cell per hash row
@@ -99,6 +226,12 @@ object Sketches {
       .groupBy(col("rc.r").as("r"), col("rc.c").as("c"))
       .agg(count(lit(1)).as("n"))
   }
+
+  /** Union shard sketches: cell-wise sum. Feeding the result back in
+    * is a no-op (one row per cell sums itself).
+    */
+  def cmsMerge(cells: DataFrame): DataFrame =
+    cells.groupBy(col("r"), col("c")).agg(sum(col("n")).as("n"))
 
   /** Point-query the sketch: estimated frequency of each distinct
     * probe value = min over the d rows of its cell counts (untouched
@@ -128,8 +261,9 @@ object Sketches {
     * register — drop the finer shard columns from `groupCols` to roll
     * up) and evaluate the raw HLL estimate. Input is any frame of
     * (groupCols..., j, r) rows from [[hllRegisters]] — one shard's or
-    * many's, concatenated. The register sum is an ordered fold over
-    * the j-sorted bounded array, so merged estimates hash-match the
+    * many's, concatenated. Same determinism discipline as
+    * [[hllDistinct]]: the register sum is an ordered fold over the
+    * j-sorted bounded array, so merged estimates hash-match the
     * direct computation bit-for-bit.
     *
     * Output: (groupCols..., distinct_est) — rounded at 2.

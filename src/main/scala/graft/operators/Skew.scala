@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Skew-safe relational building blocks for hot keys: a salted
-  * equi-join and a two-phase top-k per group, used by the `Queries`
+  * equi-join and a two-phase top-k per group. Shared by the operator
+  * families (`Sampling`, `Frequency`, `Retrieval`) and the `Queries`
   * catalog; the connector sync does not use them.
   */
 object Skew {

@@ -3,7 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Streaming distribution-drift monitoring: each event-time window's metric distribution is binned as it closes, and
+/** Streaming distribution-drift monitoring — the continuous-ingestion
+  * side of [[graft.operators.Profile.distributionDrift]]: each
+  * event-time window's metric distribution is binned as it closes, and
   * scored against a frozen baseline. The alert a 100 TB ingest
   * pipeline wants is "this hour's document-length / score / value
   * distribution stopped looking like the corpus" — cheap enough to run
@@ -13,9 +15,10 @@ import org.apache.spark.sql.functions._
 object DriftMonitor {
 
   /** Streaming stage: watermarked tumbling-window equi-width bin
-    * counts of an integer metric. Bin arithmetic is an equi-width
-    * integer grid (caller fixes `mn`/`binWidth` from the baseline, so
-    * stream and baseline share the grid by construction); output is append-only — a
+    * counts of an integer metric. Bin arithmetic is the
+    * [[graft.operators.Profile.histogram]] integer grid (caller fixes
+    * `mn`/`binWidth` from the baseline, so stream and baseline share
+    * the grid by construction); output is append-only — a
     * (window, bin, count) row emits exactly once, when the watermark
     * closes the window.
     *
@@ -30,7 +33,8 @@ object DriftMonitor {
       windowDur: String, watermark: String, mn: Long,
       binWidth: Long): DataFrame = {
     require(binWidth > 0, "binWidth must be > 0")
-    // NULL metric values carry no bin — without this filter they'd form a
+    // NULL metric values carry no bin (same contract as
+    // Profile.histogram) — without this filter they'd form a
     // (window, NULL-bin) row that score() grades against an n_base of
     // 0, inflating PSI (ADVICE r10)
     src.where(col(valueCol).isNotNull)
@@ -45,9 +49,10 @@ object DriftMonitor {
 
   /** Scoring stage over the CLOSED windows (a batch frame — e.g. the
     * memory/Delta sink [[windowedBins]] feeds): add-1-smoothed PSI of
-    * each window's bin shares against the baseline's, with the
-    * baseline as side A. Every window scores EXACTLY the grid
-    * 0..bins-1 (ADVICE r10): a
+    * each window's bin shares against the baseline's, the
+    * [[graft.operators.Profile.distributionDrift]] expression with
+    * the baseline as side A. Every window scores EXACTLY the grid
+    * 0..bins-1 (ADVICE r10, same reasoning as the batch operator): a
     * bin the window left empty still carries smoothing mass against
     * the baseline's share, so each window's summed `psi` is the true
     * full-grid PSI. Stream values outside the baseline's grid (past

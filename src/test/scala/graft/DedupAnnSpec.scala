@@ -756,8 +756,7 @@ class DedupAnnSpec extends SparkSpec {
     val direct = Dedup.minhashNearDupsAgainst(batch, corpus, "id",
         "text", threshold = 0.3)
       .select("batch_id", "corpus_id").as[(Long, Long)].collect().toSet
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-mhidx-test-").toString + "/bands"
+    val idx = tmpDir("mhidx") + "/bands"
     // split write + append: the incremental maintenance path must
     // yield the same index as a one-shot build
     Dedup.minhashIndexWrite(corpus.where(col("id") < 3), "id", "text",

@@ -15,24 +15,6 @@ class ExpressionsSpec extends SparkSpec {
     "the quick brown fox jumps over the lazy dog",
     "a b", "", "single", "x y z x y z x y z")
 
-  /** A small deterministic English-bigram merge table; ranks are list
-    * positions.
-    */
-  private val merges: Seq[(String, String)] = Seq(
-    ("t", "h"), ("th", "e"), ("i", "n"), ("e", "r"), ("a", "n"),
-    ("o", "n"), ("r", "e"), ("e", "n"), ("o", "r"), ("s", "t"),
-    ("a", "t"), ("e", "s"), ("o", "u"), ("in", "g"), ("t", "o"),
-    ("an", "d"), ("a", "r"), ("l", "l"), ("o", "m"), ("t", "i"))
-
-  /** Whitespace tokens of lowercased, trimmed, space-collapsed text. */
-  private def tokens(text: org.apache.spark.sql.Column) =
-    filter(split(regexp_replace(trim(lower(text)), "\\s+", " "), " "),
-      t => t =!= "")
-
-  private def bpeSegment(text: org.apache.spark.sql.Column,
-      m: Seq[(String, String)]) =
-    NativeExpressions.bpeSegment(tokens(text), m)
-
   test("wordShingles matches the HOF formulation on all edge shapes") {
     val hof = (tokens: org.apache.spark.sql.Column, n: Int) =>
       when(size(tokens) < n, array(concat_ws(" ", tokens)))
@@ -189,6 +171,7 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("bpeSegment: greedy min-rank leftmost merges, reference-exact") {
+    import graft.functions.{TextFunctions => T}
     // independent Scala reference of the contract
     def ref(text: String, merges: Seq[(String, String)]): Seq[String] = {
       val rank = merges.zipWithIndex
@@ -211,6 +194,7 @@ class ExpressionsSpec extends SparkSpec {
         s
       }
     }
+    val merges = T.demoMerges
     val cases = Seq(
       "The thin another thing is interesting and the rest",
       "standing on the corner with an orange",
@@ -220,7 +204,7 @@ class ExpressionsSpec extends SparkSpec {
       "intéressant naïve") // non-ASCII code points
     cases.foreach { txt =>
       val got = Seq(Tuple1(txt)).toDF("t")
-        .select(bpeSegment(col("t"), merges).as("s"))
+        .select(T.bpeSegment(col("t"), merges).as("s"))
         .as[Seq[String]].head()
       assert(got == ref(txt, merges), s"text=`$txt` got=$got")
     }
@@ -229,30 +213,23 @@ class ExpressionsSpec extends SparkSpec {
     // min-rank loop must pick (b,c) before the also-present (c,b)=r2
     val chain = Seq(("b", "c"), ("a", "bc"), ("c", "b"))
     val got2 = Seq(Tuple1("abcb")).toDF("t")
-      .select(bpeSegment(col("t"), chain).as("s"))
+      .select(T.bpeSegment(col("t"), chain).as("s"))
       .as[Seq[String]].head()
     assert(got2 == Seq("abc", "b"), s"got $got2")
     // leftmost tie: rank0 (a,a) on "aaaa" -> aa,aa not a,aa,a
     val got3 = Seq(Tuple1("aaaa")).toDF("t")
-      .select(bpeSegment(col("t"), Seq(("a", "a"))).as("s"))
+      .select(T.bpeSegment(col("t"), Seq(("a", "a"))).as("s"))
       .as[Seq[String]].head()
     assert(got3 == Seq("aa", "aa"), s"got $got3")
     // count wrapper
     val cnt = Seq(Tuple1("the the")).toDF("t")
-      .select(size(bpeSegment(col("t"), merges)).as("n"))
+      .select(T.bpeTokenCount(col("t"), merges).as("n"))
       .as[Int].head()
     assert(cnt == 2, s"got $cnt")
   }
 
   test("interpreted eval agrees with codegen for every expression") {
-    // 8 md5-derived planes in [-1, 1)^8, the same on every executor
-    val planes = Seq.tabulate(8) { p =>
-      Seq.tabulate(8) { d =>
-        val h = graft.expressions.Kernels.md5_60(
-          s"plane_${p}_$d".getBytes("UTF-8"))
-        h.toDouble / 1152921504606846976.0 * 2 - 1 // / 2^60
-      }
-    }
+    val planes = graft.functions.VectorFunctions.hyperplanes(8, 8)
     def results(): Seq[org.apache.spark.sql.Row] = {
       val docs = texts.toDF("t")
         .select(split(col("t"), " ").as("tok"),
@@ -263,7 +240,8 @@ class ExpressionsSpec extends SparkSpec {
         NativeExpressions.minhashSignature(col("tok"), 8).as("sig"),
         NativeExpressions.simhash60(col("tok")).as("sim"),
         NativeExpressions.jaccard(col("tok"), col("pair")).as("j"),
-        NativeExpressions.bpeSegment(col("tok"), merges).as("bpe"))
+        NativeExpressions.bpeSegment(col("tok"),
+          graft.functions.TextFunctions.demoMerges).as("bpe"))
         .collect().toSeq ++
         vec.select(
           NativeExpressions.cosine(col("a"), col("b")).as("c"),

@@ -79,6 +79,27 @@ class ItemSimSpec extends SparkSpec {
     assert(joint.forall(_.getLong(2) == 2L))
   }
 
+  test("cosineNeighborsFromState: persisted-state maintenance equals " +
+      "rebuild (cap flip, new user, support drop)") {
+    // user 2's delta pushes it over cap 4 (flip: its old pairs must be
+    // SUBTRACTED and nothing added); user 4 is brand-new; item c's
+    // only capped supporter is user 2, so c's support drops to zero
+    val oldDf = Seq((1L, "a"), (1L, "b"), (2L, "a"), (2L, "c"),
+      (3L, "a"), (3L, "b")).toDF("user_id", "item_id")
+    val dltDf = Seq((2L, "b"), (2L, "d"), (2L, "e"), (4L, "a"),
+      (4L, "b")).toDF("user_id", "item_id")
+    val (pairs, sup) = ItemSim.pairCountState(oldDf, maxUserItems = 4)
+    val viaState = ItemSim.cosineNeighborsFromState(pairs, sup,
+        oldDf, dltDf, maxUserItems = 4, minCo = 1L)
+      .collect().map(_.toSeq).toSet
+    val rebuild = ItemSim.cosineNeighbors(oldDf.unionByName(dltDf),
+        maxUserItems = 4, minCo = 1L)
+      .collect().map(_.toSeq).toSet
+    assert(viaState == rebuild)
+    assert(!viaState.exists(_.contains("c"))) // c supported only by
+    // the cap-flipped user: its pairs and support must vanish
+  }
+
   test("catalogMetrics: coverage, novelty smoothing, exposure bias") {
     // catalog {A,B,C,D} (4 items), users {1,2}; recs: top-1 per user
     val inter = Seq((1L, "A"), (1L, "B"), (2L, "A"), (2L, "C"),

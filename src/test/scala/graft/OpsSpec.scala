@@ -424,6 +424,169 @@ class OpsSpec extends SparkSpec {
     assert(kept == Seq(1L, 4L, 5L, 6L))
   }
 
+  test("chunkDocs windows with overlap; empty docs keep one empty chunk") {
+    import graft.operators.Curation
+    val docs = Seq((1L, "abcdefghij"), (2L, "")).toDF("id", "text")
+    // chunk 4, overlap 1 -> stride 3: ceil((10-1)/3) = 3 chunks cover
+    // all 10 chars; a naive ceil(10/3) = 4 would add a 4th chunk "j"
+    // that is a pure suffix of chunk 2 (duplicate content downstream)
+    val out = Curation.chunkDocs(docs, "id", "text", chunkChars = 4,
+        overlap = 1)
+      .orderBy("id", "chunk_ix")
+      .as[(Long, Long, String)].collect().toSeq
+    assert(out == Seq(
+      (1L, 0L, "abcd"), (1L, 1L, "defg"), (1L, 2L, "ghij"),
+      (2L, 0L, "")))
+    intercept[IllegalArgumentException] {
+      Curation.chunkDocs(docs, "id", "text", chunkChars = 4, overlap = 4)
+    }
+  }
+
+  test("unigramLogProb: mean log p(token) under the corpus distribution") {
+    import graft.operators.Curation
+    // corpus: "a a b" + "a c" -> counts a=3, b=1, c=1, n=5
+    val docs = Seq((1L, "a a b"), (2L, "a c")).toDF("id", "text")
+    val out = Curation.unigramLogProb(docs, "id", "text")
+      .orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    def m(ps: Double*) = BigDecimal(ps.map(math.log).sum / ps.size)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(out == Seq(
+      (1L, 3L, m(0.6, 0.6, 0.2)), // a, a, b
+      (2L, 2L, m(0.6, 0.2))))     // a, c
+  }
+
+  test("distributionDrift: identical halves score zero, a shift scores positive") {
+    import graft.operators.Profile
+    val base = (1L to 200L).map(v => v % 50)
+    val same = Profile.distributionDrift(
+        base.toDF("v"), base.toDF("v"), "v", bins = 10)
+      .select("psi").as[Double].collect()
+    assert(same.forall(_ == 0.0)) // identical shares -> every bin 0
+    val shifted = Profile.distributionDrift(
+        base.toDF("v"), base.map(_ + 40L).toDF("v"), "v", bins = 10)
+      .select("psi").as[Double].collect()
+    // each bin's contribution is non-negative by construction
+    // ((pa-pb) and ln(pa/pb) share sign); a real shift must show up
+    assert(shifted.forall(_ >= 0.0))
+    assert(shifted.sum > 0.2, s"psi total ${shifted.sum}")
+    // the FULL grid is emitted (ADVICE r10): unequal totals give even
+    // a both-sides-empty bin nonzero smoothing mass, which the summed
+    // headline PSI must include
+    val unequal = Profile.distributionDrift(
+        Seq(0L, 100L).toDF("v"),
+        Seq(0L, 0L, 0L, 100L, 100L, 100L).toDF("v"), "v", bins = 10)
+      .select("bin", "n_a", "n_b", "psi")
+      .as[(Long, Long, Long, Double)].collect().sortBy(_._1)
+    assert(unequal.map(_._1).toSeq == (0L to 9L)) // all 10 bins present
+    val emptyBins = unequal.filter(r => r._2 == 0 && r._3 == 0)
+    assert(emptyBins.nonEmpty && emptyBins.forall(_._4 != 0.0))
+  }
+
+  test("categoricalDrift: identical sides zero, one-sided category positive") {
+    import graft.operators.Profile
+    val a = Seq("en", "en", "fr", "de").toDF("lang")
+    val same = Profile.categoricalDrift(a, a, "lang")
+      .select("psi").as[Double].collect()
+    assert(same.forall(_ == 0.0))
+    val b = Seq("en", "zh", "zh", "zh").toDF("lang")
+    val out = Profile.categoricalDrift(a, b, "lang")
+      .select("category", "n_a", "n_b", "psi")
+      .as[(String, Long, Long, Double)].collect()
+      .map(r => r._1 -> r).toMap
+    // union grid: every category of either side appears
+    assert(out.keySet == Set("en", "fr", "de", "zh"))
+    assert(out("zh")._2 == 0L && out("zh")._3 == 3L)
+    // one-sided categories must contribute positive drift
+    assert(out("zh")._4 > 0.0 && out("fr")._4 > 0.0)
+  }
+
+  test("logOdds: class vocabulary separates, unknown tokens take the default") {
+    import graft.operators.Curation
+    val pos = Seq("excellent prose flows here", "prose reads excellent")
+      .toDF("text")
+    val neg = Seq("spam spam click buy", "click spam buy now")
+      .toDF("text")
+    val model = Curation.trainLogOdds(pos, neg, "text")
+    val lo = model.collect()
+      .map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
+    assert(lo(Some("excellent")) > 0 && lo(Some("spam")) < 0)
+    // symmetric counts -> the unknown default sits between the classes
+    assert(lo(Some("spam")) < lo(None) && lo(None) < lo(Some("excellent")))
+    val docs = Seq(
+      (1L, "excellent prose"),     // pure positive vocabulary
+      (2L, "spam click buy"),      // pure negative vocabulary
+      (3L, "zzz qqq")              // fully out of vocabulary
+    ).toDF("doc_id", "text")
+    val s = Curation.logOddsScore(docs, "doc_id", "text", model)
+      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    assert(s(1L) > 0 && s(2L) < 0)
+    assert(math.abs(s(3L) - lo(None)) < 1e-6) // mean of defaults
+    assert(s(2L) < s(3L) && s(3L) < s(1L))
+  }
+
+  test("equiDepthBuckets: equal populations, repeated values stay together") {
+    import graft.operators.Curation
+    val out = Curation.equiDepthBuckets((1L to 100L).toDF("v"), "v", 4)
+      .as[(Long, Long)].collect().toMap
+    // 1..25 -> 0, 26..50 -> 1, 51..75 -> 2, 76..100 -> 3
+    assert((1L to 100L).forall(v => out(v) == (v - 1) / 25))
+    // a value straddling a threshold cannot split: 60x the same value
+    // collapses thresholds and first-match keeps every copy in bucket 0
+    val skew = (Seq.fill(60)(5L) ++ (6L to 45L)).toDF("v")
+    val sk = Curation.equiDepthBuckets(skew, "v", 4)
+      .as[(Long, Long)].collect()
+    assert(sk.filter(_._1 == 5L).map(_._2).distinct.toSeq == Seq(0L))
+    // NULL values band to a NULL bucket, not the top quantile
+    // (ADVICE r10); non-null rows keep their thresholds
+    val withNulls = Curation.equiDepthBuckets(
+      (Seq[java.lang.Long](null, null) ++ (1L to 100L).map(Long.box))
+        .toDF("v"), "v", 4)
+    assert(withNulls.where(col("v").isNull && col("bucket").isNotNull)
+      .isEmpty)
+    assert(withNulls.where(col("v") === 100L).select("bucket")
+      .as[Long].head() == 3L)
+  }
+
+  test("sourceCoverage: heaviest first, shares cumulate to 1") {
+    import graft.operators.Profile
+    val df = Seq(("a", 70L), ("a", 30L), ("b", 50L), ("c", 10L),
+      (null.asInstanceOf[String], 99L)).toDF("src", "w")
+    val out = Profile.sourceCoverage(df, "src", "w")
+      .orderBy("rank")
+      .as[(Long, String, Long, Long, Double, Double)].collect().toSeq
+    assert(out.map(_._2) == Seq("a", "b", "c")) // null source excluded
+    assert(out.map(_._4) == Seq(100L, 50L, 10L))
+    assert(out.map(_._5) == Seq(0.625, 0.3125, 0.0625))
+    assert(out.map(_._6) == Seq(0.625, 0.9375, 1.0))
+  }
+
+  test("round-10 drift/skew/shuffle/fusion ops tolerate empty inputs") {
+    import graft.operators.{Ann, Curation, Profile, Retrieval, Sampling}
+    val noLongs = Seq.empty[Long].toDF("v")
+    val noPairs = Seq.empty[(Long, Long)].toDF("doc_id", "rank")
+    assert(Profile.categoricalDrift(noLongs, noLongs, "v").count() == 0)
+    assert(Profile.keySkew(noLongs, "v").count() == 0)
+    assert(Sampling.shuffleShards(noLongs.withColumnRenamed("v", "id"),
+      "id", 4).count() == 0)
+    assert(Retrieval.rrfFuse(Seq(noPairs, noPairs), "doc_id")
+      .count() == 0)
+    assert(Curation.kAnonymityViolations(
+      Seq.empty[(String, String)].toDF("a", "b"), Seq("a", "b"), 3)
+      .count() == 0)
+    val noVecs = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    assert(Ann.semanticDedup(noVecs, nCells = 4, threshold = 0.9)
+      .count() == 0)
+    assert(Sampling.hardNegatives(noPairs
+        .withColumnRenamed("doc_id", "u").withColumnRenamed("rank", "i"),
+      "u", "i", Seq((1L, Seq(1.0f))).toDF("u", "embedding"),
+      Seq((2L, Seq(1.0f))).toDF("i", "embedding"), k = 3).count() == 0)
+    // distributionDrift is explicit about the empty case
+    intercept[IllegalArgumentException] {
+      Profile.distributionDrift(noLongs, noLongs, "v", bins = 4)
+    }
+  }
+
   test("correlation: tracks corr, partition-proof, edge cases") {
     import graft.operators.Profile
     val li = spark.read
@@ -457,6 +620,74 @@ class OpsSpec extends SparkSpec {
     intercept[Exception] {
       Profile.correlation(big, Seq(("x", "y"))).collect()
     }
+  }
+
+  test("keySkew: uniform keys hit ln(n), a dominant key is named") {
+    import graft.operators.Profile
+    // 4 keys x 25 rows: perfectly uniform
+    val uniform = (0L until 100L).map(i => i % 4).toDF("k")
+    val u = Profile.keySkew(uniform, "k")
+      .select("n_rows", "n_keys", "top_share", "entropy")
+      .as[(Long, Long, Double, Double)].collect().head
+    assert(u == ((100L, 4L, 0.25, math.round(math.log(4) * 1e6) / 1e6)))
+    // 96 rows of key 7, four singletons: top key must be named with
+    // its share, entropy collapses toward 0
+    val skewed = (Seq.fill(96)(7L) ++ Seq(1L, 2L, 3L, 4L)).toDF("k")
+    val s = Profile.keySkew(skewed, "k")
+      .select("top_key", "top_n", "top_share", "entropy")
+      .as[(String, Long, Double, Double)].collect().head
+    assert(s._1 == "7" && s._2 == 96L && s._3 == 0.96)
+    assert(s._4 < 0.3 && s._4 > 0.0)
+  }
+
+  test("kAnonymityViolations: flags only groups under k, with their size") {
+    import graft.operators.Curation
+    val rows = Seq.fill(5)(("a", "x")) ++ Seq.fill(2)(("a", "y")) ++
+      Seq(("b", "x"))
+    val out = Curation.kAnonymityViolations(
+        rows.toDF("c1", "c2"), Seq("c1", "c2"), k = 3)
+      .as[(String, String, Long)].collect().toSet
+    assert(out == Set(("a", "y", 2L), ("b", "x", 1L)))
+  }
+
+  test("madOutliers: keeps the robust center, drops planted extremes") {
+    import graft.operators.Curation
+    // center 100 +- small noise, two planted extremes; median 100,
+    // MAD ~2 -> k=3 keeps [94, 106]
+    val vals = (Seq.tabulate(20)(i => 98L + (i % 5)) ++ Seq(5000L, -400L))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }
+    val out = Curation.madOutliers(vals.toDF("id", "v"), "v", k = 3.0)
+      .select("v").as[Long].collect()
+    assert(out.forall(v => v >= 94 && v <= 106))
+    assert(out.length == 20) // both extremes gone, center intact
+    // zero MAD (majority constant): only the median value survives
+    val const = Seq.fill(9)(7L).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) } :+ (99L, 1000L)
+    val strict = Curation.madOutliers(const.toDF("id", "v"), "v", 3.0)
+      .select("v").as[Long].collect()
+    assert(strict.toSet == Set(7L) && strict.length == 9)
+    // empty input survives
+    assert(Curation.madOutliers(
+      Seq.empty[(Long, Long)].toDF("id", "v"), "v", 3.0).count() == 0)
+  }
+
+  test("histogram: exact integer bins, lossless counts, empty input tolerated") {
+    import graft.operators.Profile
+    // values 0..99, 10 bins -> width (99-0)/10+1 = 10, bins 0..9 of 10
+    val vals = (0L to 99L).toDF("v")
+    val out = Profile.histogram(vals, "v", bins = 10)
+      .orderBy("bin").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(out.length == 10)
+    assert(out.head == (0L, 0L, 9L, 10L) && out.last == (9L, 90L, 99L, 10L))
+    assert(out.map(_._4).sum == 100L)
+    // a single distinct value lands wholly in bin 0
+    val one = Profile.histogram(Seq(7L, 7L).toDF("v"), "v", 5)
+      .collect().map(r => (r.getLong(0), r.getLong(3)))
+    assert(one.toSeq == Seq((0L, 2L)))
+    // all-null / empty input -> empty frame with the histogram schema
+    val nulls = Seq[Option[Long]](None, None).toDF("v")
+    assert(Profile.histogram(nulls, "v", 3).count() == 0)
   }
 
   test("sessionPrefixes: prior-event prefixes, session-bounded, first excluded") {
@@ -560,6 +791,29 @@ class OpsSpec extends SparkSpec {
       val chunked = run(Some(1800L), chunk, maxP)
       assert(plain == chunked, s"maxPrefix=$maxP chunk=$chunk diverged")
     }
+  }
+
+  test("bigramLogProb: coherent transitions outscore word salad") {
+    import graft.operators.Curation
+    // "x y" is a frequent transition in the corpus; doc 3 uses the
+    // same unigrams in scrambled order, so its unigram profile is
+    // identical to doc 1's but its bigram transitions are all rare
+    val docs = Seq(
+      (1L, "x y x y x y"),
+      (2L, "x y x y"),
+      (3L, "y x y x y x")
+    ).toDF("id", "text")
+    val out = Curation.bigramLogProb(docs, "id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSeq.sortBy(_._1)
+    assert(out.map(_._2) == Seq(5L, 3L, 5L)) // n-1 bigrams each
+    val byId = out.map(t => t._1 -> t._3).toMap
+    // doc 3 leans on the rare y->x transition -> strictly lower score
+    assert(byId(3L) < byId(1L))
+    // docs with < 2 tokens are absent
+    val short = Curation.bigramLogProb(
+      Seq((9L, "solo")).toDF("id", "text"), "id", "text")
+    assert(short.count() == 0)
   }
 
   test("pivotAttributes transposes array<struct> and drops external_id clash") {
@@ -853,6 +1107,36 @@ class OpsSpec extends SparkSpec {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
     }
+  }
+
+  test("decontaminate: planted eval overlap flags, clean docs do not") {
+    import graft.operators.Curation
+    // 10-token docs with w=4 shingles: doc 1's middle 6 tokens form
+    // the eval set (3 shared 4-grams), doc 2 shares exactly TWO
+    // 4-grams (under minShared=3), doc 3 shares none
+    val train = Seq(
+      (1L, "a b c d e f g h i j"),
+      (2L, "x y c d e f g zz ww qq"),  // "c d e f","d e f g" shared
+      (3L, "p q r s t u v w p2 q2")
+    ).toDF("doc_id", "text")
+    val eval = Seq(Tuple1("c d e f g h")).toDF("text")
+    val m = Curation.decontaminate(train, eval, "doc_id", "text",
+        shingleWidth = 4, minShared = 3)
+      .select("doc_id", "n_shared", "contaminated")
+      .as[(Long, Long, Boolean)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(m(1L) == ((3L, true)), s"got ${m(1L)}")
+    assert(m(2L) == ((2L, false)), s"got ${m(2L)}")
+    assert(m(3L) == ((0L, false)), s"got ${m(3L)}")
+    // short-doc contract: under w tokens, the whole text is one
+    // shingle — an eval doc equal to a short train doc still flags
+    // at minShared=1
+    val shortT = Seq((9L, "tiny doc here")).toDF("doc_id", "text")
+    val shortE = Seq(Tuple1("tiny doc here")).toDF("text")
+    val sm = Curation.decontaminate(shortT, shortE, "doc_id", "text",
+        shingleWidth = 8, minShared = 1)
+      .select("n_shared", "contaminated").as[(Long, Boolean)].head()
+    assert(sm == ((1L, true)), s"got $sm")
   }
 
   test("funnel: strict ordering, stalls, same-instant, absent keys") {

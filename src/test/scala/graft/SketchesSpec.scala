@@ -2,14 +2,63 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Sketches
+import graft.operators.{Quantiles, RuntimeFilter, Sketches}
 
-/** Mergeable sketches: HLL registers and count-min cells. */
+/** Distinct-count sketches + the Bloom runtime-filter join. */
 class SketchesSpec extends SparkSpec {
   import spark.implicits._
 
   private def events(sf: String) =
     spark.read.parquet(s"/root/testdata/sf$sf/events.parquet")
+
+  test("kmvDistinct: below-k groups report the exact distinct count") {
+    // sf0.001 has exactly 15 distinct users per event_type; k=64 > 15
+    // means every hash was kept and the sketch degrades to exact.
+    val out = Sketches.kmvDistinct(events("0.001"), "event_type",
+        "user_id", k = 64)
+      .as[(String, Double)].collect().toMap
+    assert(out.size == 5)
+    out.foreach { case (g, est) => assert(est == 15.0, s"$g -> $est") }
+  }
+
+  test("kmvDistinct: estimates land near truth; WindowGroupLimit plan") {
+    // sf0.1: 1500 distinct users per type; k=64 -> ~13% std error.
+    val df = Sketches.kmvDistinct(events("0.1"), "event_type",
+      "user_id", k = 64)
+    val out = df.as[(String, Double)].collect().toMap
+    out.foreach { case (g, est) =>
+      assert(est > 750 && est < 3000, s"$g estimate $est vs truth 1500")
+    }
+    // the rn <= k filter must become a group limit so map tasks keep
+    // only k rows per group before the exchange — the scale contract
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("WindowGroupLimit"), "rank pushdown missing")
+  }
+
+  test("hllDistinct: raw estimate tracks truth in the raw regime") {
+    // truth 150 (sf0.01) and 1500 (sf0.1) vs m=32 registers: both are
+    // above the 2.5m small-range cutoff, so the raw estimator applies;
+    // std error ~1.04/sqrt(32) = 18%.
+    for ((sf, truth) <- Seq(("0.01", 150.0), ("0.1", 1500.0))) {
+      val out = Sketches.hllDistinct(events(sf), "event_type",
+          "user_id", p = 5)
+        .as[(String, Double)].collect().toMap
+      assert(out.size == 5)
+      out.foreach { case (g, est) =>
+        assert(est > truth * 0.55 && est < truth * 1.8,
+          s"sf$sf $g estimate $est vs truth $truth")
+      }
+    }
+  }
+
+  test("hllDistinct: deterministic across runs and repartitionings") {
+    val a = Sketches.hllDistinct(events("0.01"), "event_type",
+      "user_id", p = 5).as[(String, Double)].collect().toMap
+    val b = Sketches.hllDistinct(events("0.01").repartition(17),
+      "event_type", "user_id", p = 5)
+      .as[(String, Double)].collect().toMap
+    assert(a == b) // ordered fold: partitioning cannot move the sum
+  }
 
   test("hllRegisters+hllMergeEstimate: sharded merge == direct, exactly") {
     val ev = events("0.001")
@@ -20,9 +69,7 @@ class SketchesSpec extends SparkSpec {
           "user_id", p = 5).drop("day"),
         Seq("event_type"), p = 5)
       .as[(String, Double)].collect().toMap
-    val direct = Sketches.hllMergeEstimate(
-        Sketches.hllRegisters(ev, Seq("event_type"), "user_id", p = 5),
-        Seq("event_type"), p = 5)
+    val direct = Sketches.hllDistinct(ev, "event_type", "user_id", p = 5)
       .as[(String, Double)].collect().toMap
     // register union is an element-wise max: merged estimates must be
     // BIT-identical to the direct computation, not merely close
@@ -67,11 +114,158 @@ class SketchesSpec extends SparkSpec {
     val sharded = Seq(0, 1, 2).map(i =>
       Sketches.cmsCells(ev.where(pmod(col("user_id"), lit(3)) === i),
         "user_id", d = 4, w = 4096))
-    val merged = sharded.reduce(_ union _)
-      .groupBy(col("r"), col("c")).agg(sum(col("n")).as("n"))
+    val merged = Sketches.cmsMerge(sharded.reduce(_ union _))
       .as[(Int, Long, Long)].collect().toSet
     val direct = cells.as[(Int, Long, Long)].collect().toSet
     assert(merged == direct)
+  }
+
+  test("bloomPrunedJoin: exact plain-join semantics, real pruning") {
+    val orders = spark.read
+      .parquet("/root/testdata/sf0.001/orders.parquet")
+    val dims = spark.read
+      .parquet("/root/testdata/sf0.001/customer.parquet")
+      .where(col("c_nationkey") < 3)
+    val out = RuntimeFilter.bloomPrunedJoin(orders, dims,
+      "o_custkey", "c_custkey", expectedItems = 1000L)
+    val plain = orders.join(dims,
+      orders("o_custkey") === dims("c_custkey"))
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("o_orderkey", "c_custkey").as[(Long, Long)]
+        .collect().toSet
+    assert(keys(out) == keys(plain)) // false positives die in the join
+    // the filter must actually prune: with ~12% of customers kept,
+    // far fewer orders than the full fact table may pass the Bloom
+    val bloom = dims.select(col("c_custkey").cast("string").as("k"))
+      .stat.bloomFilter("k", 1000L, 0.03)
+    val passed = orders.where(graft.functions.HashFunctions
+      .bloomMightContain(col("o_custkey").cast("string"), bloom)).count()
+    val total = orders.count()
+    assert(passed < total / 2,
+      s"bloom passed $passed of $total - not pruning")
+  }
+
+  test("quantile sketch: shard-merge == direct-build, bit-for-bit") {
+    import graft.operators.Quantiles
+    val ev = events("0.01")
+    val direct = Quantiles.sampleSketch(ev, Seq("event_type"), "value",
+      "event_id", k = 128)
+    // three shards sketched independently, unioned, re-bottom-k'd:
+    // the mergeable-summary contract says the result IS the direct
+    // sketch — bottom-k of a union of shard bottom-k's equals
+    // bottom-k of the union
+    val shards = (0 until 3).map(i =>
+      Quantiles.sampleSketch(ev.where(pmod(col("event_id"), lit(3)) === i),
+        Seq("event_type"), "value", "event_id", k = 128))
+    val merged = Quantiles.sampleSketch(
+      shards.reduce(_ unionByName _), Seq("event_type"), "value",
+      "event_id", k = 128)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_type", "__pri", "event_id", "value")
+        .as[(String, Long, Long, Double)].collect().toSet
+    assert(rows(merged) == rows(direct))
+    // IDEMPOTENT merge (review r19): re-delivering one shard twice
+    // must not let duplicate rows occupy k slots and evict real ones
+    val reMerged = Quantiles.sampleSketch(
+      shards.reduce(_ unionByName _).unionByName(shards.head),
+      Seq("event_type"), "value", "event_id", k = 128)
+    assert(rows(reMerged) == rows(direct))
+    // NULL values are excluded, not sampled (review r19): planting
+    // nulls leaves the sketch identical
+    val withNulls = ev.unionByName(ev.limit(40)
+      .withColumn("value", lit(null).cast("double"))
+      .withColumn("event_id", col("event_id") + 1000000L))
+    val nullSk = Quantiles.sampleSketch(withNulls, Seq("event_type"),
+      "value", "event_id", k = 128)
+    assert(rows(nullSk) == rows(direct))
+    // and therefore identical quantiles, under any partitioning
+    val pms = Seq(100, 500, 900)
+    val qd = Quantiles.quantiles(direct, Seq("event_type"), "value", pms)
+      .orderBy("event_type", "pm").collect().toSeq
+    val qm = Quantiles.quantiles(merged.repartition(7), Seq("event_type"),
+        "value", pms)
+      .orderBy("event_type", "pm").collect().toSeq
+    assert(qd == qm)
+  }
+
+  test("quantile sketch: DKW rank-error bound holds; exact below k") {
+    import graft.operators.Quantiles
+    val ev = events("0.01") // ~2000 rows per event_type
+    val k = 1024
+    val pms = Seq(100, 250, 500, 750, 900, 990)
+    val est = Quantiles.sketchQuantiles(ev, Seq("event_type"), "value",
+        "event_id", k, pms)
+      .as[(String, Int, Double)].collect()
+    // documented bound: sup-norm rank error <= sqrt(ln(2/d)/(2k)) w.p.
+    // 1-d (DKW); at k=1024, d=0.01 that is 5.1%, plus 1/k nearest-rank
+    // discreteness. The seed is fixed, so this is deterministic — a
+    // failure means the bound (or the sampler's uniformity) broke.
+    val eps = math.sqrt(math.log(2.0 / 0.01) / (2.0 * k)) + 1.0 / k
+    val n = ev.groupBy("event_type").count()
+      .as[(String, Long)].collect().toMap
+    est.foreach { case (g, pm, q) =>
+      val rank = ev.where(col("event_type") === g &&
+        col("value") <= q).count().toDouble / n(g)
+      assert(math.abs(rank - pm / 1000.0) <= eps,
+        s"$g pm=$pm: empirical rank $rank vs ${pm / 1000.0} (eps=$eps)")
+    }
+    // n <= k: nothing dropped, sketch quantiles are EXACT nearest-rank
+    val small = ev.where(col("event_id") < 100)
+    val exact = small.select("value").orderBy("value")
+      .as[Double].collect()
+    val m = exact.length
+    assert(m <= k && m > 10)
+    Quantiles.sketchQuantiles(small.withColumn("g", lit(1)), Seq("g"),
+        "value", "event_id", k, pms)
+      .as[(Int, Int, Double)].collect().foreach { case (_, pm, q) =>
+        assert(q == exact((m * pm + 999) / 1000 - 1),
+          s"pm=$pm: $q != exact nearest-rank")
+      }
+  }
+
+  test("quantile sketch: WindowGroupLimit pushes k before the shuffle") {
+    import graft.operators.Quantiles
+    val df = Quantiles.sampleSketch(events("0.01"), Seq("event_type"),
+      "value", "event_id", k = 64)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("WindowGroupLimit"), "rank pushdown missing")
+  }
+
+  test("kmvOverlap: exact below k, estimates near truth, deterministic") {
+    import graft.operators.Sketches
+    // hand-sized sets: A = 1..30, B = 21..50 -> union 50, inter 10,
+    // jaccard 0.2; k=64 > all, so every output is EXACT
+    val a = (1L to 30L).toDF("v")
+    val b = (21L to 50L).toDF("v")
+    val ex = Sketches.kmvOverlap(a, b, "v", "v", k = 64)
+      .as[(Double, Double, Double, Double, Double)].head()
+    assert(ex == ((30.0, 30.0, 50.0, 0.2, 10.0)), s"got $ex")
+    // duplicates and nulls do not count
+    val a2 = a.unionByName(a).unionByName(
+      Seq(Option.empty[Long]).toDF("v"))
+    val ex2 = Sketches.kmvOverlap(a2, b, "v", "v", k = 64)
+      .as[(Double, Double, Double, Double, Double)].head()
+    assert(ex2 == ex)
+    // estimate regime on real data: view/purchase users at sf0.1 are
+    // 1500 distinct each with (near-)total overlap; k=256 keeps the
+    // KMV std error ~1/sqrt(k-2) ~ 6% per count
+    val ev = events("0.1")
+    val est = Sketches.kmvOverlap(
+        ev.where(col("event_type") === "view"),
+        ev.where(col("event_type") === "purchase"),
+        "user_id", "user_id", k = 256)
+      .as[(Double, Double, Double, Double, Double)].head()
+    assert(est._1 > 1000 && est._1 < 2200, s"d_a ${est._1}")
+    assert(est._3 > 1000 && est._3 < 2300, s"union ${est._3}")
+    assert(est._4 > 0.7, s"jaccard ${est._4} (expect near-total overlap)")
+    assert(est._5 > 700 && est._5 < 2300, s"inter ${est._5}")
+    // determinism under repartitioning (order statistics of a hash)
+    val again = Sketches.kmvOverlap(
+        ev.where(col("event_type") === "view").repartition(13),
+        ev.where(col("event_type") === "purchase").repartition(7),
+        "user_id", "user_id", k = 256)
+      .as[(Double, Double, Double, Double, Double)].head()
+    assert(again == est)
   }
 
   test("bucketMinSample: uniform-ish quantiles, dedup vs repartition") {
@@ -102,4 +296,79 @@ class SketchesSpec extends SparkSpec {
       again.orderBy("event_type", "j").collect().toSeq)
   }
 
+  test("madOutliersSketch: gate tracks the exact MAD gate; edge cases") {
+    import graft.operators.{Curation, Quantiles}
+    val ev = events("0.01").select("event_id", "value")
+    val approx = Quantiles.madOutliersSketch(ev, "value", "event_id",
+      k = 3.0, sketchK = 1024)
+    val exact = Curation.madOutliers(ev, "value", k = 3.0)
+    val a = approx.count().toDouble
+    val e = exact.count().toDouble
+    val n = ev.count().toDouble
+    // the sketch med/mad sit within the DKW rank band of the exact
+    // ones, so the two keep sets may differ only near the threshold —
+    // bound the symmetric difference as a share of the corpus
+    val both = approx.select("event_id").intersect(
+      exact.select("event_id")).count().toDouble
+    val symDiff = (a - both) + (e - both)
+    assert(symDiff / n < 0.15,
+      s"approx keep $a vs exact $e, symdiff ${symDiff / n}")
+    // deterministic under repartitioning (priorities are content-keyed)
+    val again = Quantiles.madOutliersSketch(ev.repartition(13), "value",
+      "event_id", k = 3.0, sketchK = 1024)
+    assert(again.count().toDouble == a)
+    // empty input -> empty output, no crash
+    assert(Quantiles.madOutliersSketch(ev.where(lit(false)), "value",
+      "event_id", k = 3.0).count() == 0L)
+    // n <= sketchK: sample IS the data, gate equals the exact one
+    // computed by the same nearest-rank convention
+    val small = ev.where(col("event_id") < 200)
+    val smallKeep = Quantiles.madOutliersSketch(small, "value",
+        "event_id", k = 1.0, sketchK = 4096)
+      .select("event_id").as[Long].collect().toSet
+    val vals = small.select("value").as[Double].collect().sorted
+    val m = vals.length
+    val med = vals((m * 500 + 999) / 1000 - 1)
+    val mad = vals.map(v => math.abs(v - med)).sorted
+      .apply((m * 500 + 999) / 1000 - 1)
+    val want = small.where(abs(col("value") - med) <= lit(1.0) * mad)
+      .select("event_id").as[Long].collect().toSet
+    assert(smallKeep == want)
+    // scale shape: the global sketch is a TakeOrdered, never a
+    // single-partition window
+    val plan = Quantiles.sampleSketchGlobal(ev, "value", "event_id",
+      k = 64).queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"),
+      s"global bottom-k not a TakeOrdered:\n$plan")
+  }
+
+  test("winsorizeSketch: exact bounds below k, pure-comparison clip") {
+    // 10 rows, k=100 -> the sketch IS the group: p50/p950 permilles hit
+    // the nearest-rank values ceil(10*.05)=1st and ceil(10*.95)=10th...
+    // with lo=50 -> index (10*50+999) div 1000 = 1 (value 1.0) and
+    // hi=950 -> index (10*950+999) div 1000 = 10 (value 10.0): nothing
+    // clips. Tighter band lo=250/hi=750 -> 3.0 / 8.0.
+    val df = (1 to 10).map(i => (i.toLong, "g", i.toDouble))
+      .toDF("id", "grp", "v")
+    val out = Quantiles.winsorizeSketch(df, Seq("grp"), "v", "id",
+      k = 100, loPermille = 250, hiPermille = 750)
+    val rows = out.collect().map(r => r.getAs[Double]("v") ->
+      (r.getAs[Double]("clipped"), r.getAs[Boolean]("was_clipped")))
+      .toMap
+    assert(rows(1.0) == ((3.0, true)))
+    assert(rows(3.0) == ((3.0, false)))
+    assert(rows(5.0) == ((5.0, false)))
+    assert(rows(9.0) == ((8.0, true)))
+    assert(rows(10.0) == ((8.0, true)))
+    // null group keys drop at the bound join; null values drop too
+    val extra = Seq((99L, Option.empty[String], Option(5.0)),
+      (98L, Option("g"), Option.empty[Double])).toDF("id", "grp", "v")
+    val n = Quantiles.winsorizeSketch(df.unionByName(extra),
+      Seq("grp"), "v", "id",
+      k = 100, loPermille = 250, hiPermille = 750).count()
+    assert(n == 10L)
+    intercept[IllegalArgumentException] {
+      Quantiles.winsorizeSketch(df, Seq("grp"), "v", "id", 100, 900, 100)
+    }
+  }
 }

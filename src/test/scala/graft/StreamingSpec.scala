@@ -270,6 +270,173 @@ class StreamingSpec extends SparkSpec {
     assert(out == Set((10L, 11L)))
   }
 
+  test("streaming dedup drops in-watermark duplicate content") {
+    import graft.streaming.StreamingDedup
+    val dir = tmpDir("sdedup")
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("ts", TimestampType),
+      StructField("text", StringType)))
+    // Batch 1: two distinct docs. Batch 2 (separate micro-batch): a
+    // duplicate of doc 1 modulo case/whitespace, plus a fresh doc.
+    Seq("""{"doc_id":1,"ts":"2024-01-01T00:00:00.000Z","text":"Hello  World"}""",
+      """{"doc_id":2,"ts":"2024-01-01T00:01:00.000Z","text":"other"}""")
+      .toDF("value").coalesce(1).write.text(s"$dir/in/f1")
+    Seq("""{"doc_id":3,"ts":"2024-01-01T00:02:00.000Z","text":"hello world"}""",
+      """{"doc_id":4,"ts":"2024-01-01T00:03:00.000Z","text":"fresh"}""")
+      .toDF("value").coalesce(1).write.text(s"$dir/in/f2")
+    val src = spark.readStream.schema(docSchema)
+      .option("recursiveFileLookup", "true")
+      .option("maxFilesPerTrigger", "1").json(s"$dir/in")
+    val q = StreamingDedup.dedupByContent(src, "text", "ts", "10 minutes")
+      .writeStream.format("memory").queryName("sdedup")
+      .outputMode("append")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val ids = spark.table("sdedup").select("doc_id").as[Long]
+      .collect().toSet
+    // doc 3 deduped against doc 1's fingerprint held in streaming state
+    assert(ids == Set(1L, 2L, 4L))
+  }
+
+  test("streaming minhash equals batch banding on event-time order (batch mode)") {
+    import graft.streaming.StreamingDedup
+    import graft.functions.{HashFunctions => H, TextFunctions => T}
+    // Differential pin: on a BATCH frame (flatMapGroupsWithState runs
+    // batch too; watermark 0, lease never expires) the per-doc flag
+    // must equal ground truth computed straight from the same band
+    // expressions — dup(d) iff some strictly (ts, id)-earlier doc
+    // shares >= 1 band. Twins planted at +100 with one trailing word
+    // dropped; ids 5/6 share text AND timestamp, so the docId
+    // tie-break decides: 5 original, 6 dup.
+    val base = Seq(
+      (1L, 0L, "alpha beta gamma delta epsilon zeta eta theta iota"),
+      (2L, 10L, "one two three four five six seven eight nine ten"),
+      (3L, 20L, "red orange yellow green blue indigo violet pink"),
+      (5L, 30L, "north south east west up down left right center mid"),
+      (6L, 30L, "north south east west up down left right center mid"))
+    val twins = base.take(3).map { case (i, ts, t) =>
+      (i + 100, ts + 100, t.split(" ").dropRight(1).mkString(" ")) }
+    val df = (base ++ twins).toDF("doc_id", "tsl", "text")
+      .withColumn("ts", timestamp_seconds(col("tsl"))).drop("tsl")
+    val out = StreamingDedup.nearDupByMinhash(df, "doc_id", "text",
+        "ts", ttlMs = 3600000L, shingleWidth = 3, numHashes = 32,
+        bands = 16)
+      .toDF().groupBy("docId").agg(max("dup").as("dup"))
+    val got = out.as[(Long, Boolean)].collect().toMap
+    // ground truth from the identical band expressions, batch-joined
+    val banded = df.select(col("doc_id"),
+      unix_micros(col("ts")).as("us"),
+      explode(H.bandKeys(H.minhashSignature(
+        H.wordShingles(T.tokens(col("text")), 3), 32), 16, 2)).as("b"))
+    val expected = banded.alias("a").join(banded.alias("l"),
+        col("a.b") === col("l.b") &&
+          (col("l.us") < col("a.us") ||
+            (col("l.us") === col("a.us") &&
+              col("l.doc_id") < col("a.doc_id"))))
+      .select(col("a.doc_id")).distinct()
+      .as[Long].collect().toSet
+    assert(got.size == base.size + twins.size)
+    assert(got.filter(_._2).keySet == expected,
+      s"flag mismatch: got ${got.filter(_._2).keySet}, want $expected")
+    // the planted structure itself: twins + the tie-break loser are
+    // dup, the originals are not (fails loudly if the fixture ever
+    // degenerates into accidental cross-collisions)
+    assert(expected == Set(101L, 102L, 103L, 6L))
+  }
+
+  test("streaming minhash: cross-batch flag, partner id, lease expiry") {
+    import graft.streaming.StreamingDedup
+    val dir = tmpDir("sminhash")
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("ts", TimestampType),
+      StructField("text", StringType)))
+    val textA = "the quick brown fox jumps over the lazy dog tonight"
+    val textA2 = "the quick brown fox jumps over the lazy dog"   // near-dup
+    val other = "completely different words about storage engines here"
+    // f1 @T0: original A + unrelated B. f2 @T0+30m: near-dup of A —
+    // inside the 1 h lease, must flag with A as partner. f3 @T0+5h:
+    // watermark pusher. f4 @T0+6h: another near-dup of A — the lease
+    // (last band activity T0+30m + 1 h) expired long before, so it
+    // re-emits as FRESH (the bounded-state trade, enforced by the
+    // read-side lease check even where the data-less timeout batch
+    // never ran for its bands).
+    Seq(s"""{"doc_id":1,"ts":"2024-01-01T00:00:00.000Z","text":"$textA"}""",
+      s"""{"doc_id":2,"ts":"2024-01-01T00:00:00.000Z","text":"$other"}""")
+      .toDF("value").coalesce(1).write.text(s"$dir/in/f1")
+    Seq(s"""{"doc_id":3,"ts":"2024-01-01T00:30:00.000Z","text":"$textA2"}""")
+      .toDF("value").coalesce(1).write.text(s"$dir/in/f2")
+    Seq(s"""{"doc_id":4,"ts":"2024-01-01T05:00:00.000Z","text":"totally unrelated sentence pushing the watermark forward now"}""")
+      .toDF("value").coalesce(1).write.text(s"$dir/in/f3")
+    Seq(s"""{"doc_id":5,"ts":"2024-01-01T06:00:00.000Z","text":"$textA2"}""")
+      .toDF("value").coalesce(1).write.text(s"$dir/in/f4")
+    val src = spark.readStream.schema(docSchema)
+      .option("recursiveFileLookup", "true")
+      .option("maxFilesPerTrigger", "1").json(s"$dir/in")
+      .withWatermark("ts", "1 hour")
+    val q = StreamingDedup.nearDupByMinhash(src, "doc_id", "text", "ts",
+        ttlMs = 3600000L)
+      .toDF().writeStream.format("memory").queryName("sminhash_spec")
+      .outputMode("append")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val verdicts = spark.table("sminhash_spec")
+      .groupBy("docId").agg(max("dup").as("dup"))
+      .as[(Long, Boolean)].collect().toMap
+    assert(verdicts.keySet == Set(1L, 2L, 3L, 4L, 5L))
+    assert(!verdicts(1L) && !verdicts(2L) && !verdicts(4L))
+    assert(verdicts(3L), "in-lease near-dup not flagged across batches")
+    assert(!verdicts(5L),
+      "doc past the state lease still flagged — lease check broken")
+    // every flagged band of doc 3 names doc 1 as the band's original
+    val partners = spark.table("sminhash_spec")
+      .where(col("docId") === 3L && col("dup"))
+      .select("partnerId").as[Long].collect().toSet
+    assert(partners == Set(1L), s"wrong partner(s): $partners")
+  }
+
+  test("streaming minhash: a straggler far behind the watermark " +
+      "degrades to fresh instead of crashing the query") {
+    import graft.streaming.StreamingDedup
+    val dir = tmpDir("sminhash_late")
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("ts", TimestampType),
+      StructField("text", StringType)))
+    // ADVICE r18: flatMapGroupsWithState never drops late rows, so a
+    // straggler more than ttl older than the watermark computes a
+    // lease timeout BELOW the watermark — setTimeoutTimestamp throws
+    // IllegalArgumentException for that, which (uncaught) killed the
+    // whole query on ONE late event. The fix clamps the timeout to
+    // wm+1: the straggler processes, its band memory expires at the
+    // next watermark advance, the query lives.
+    // f1 @T0+10h drives the watermark to ~T0+9h; f2 is a straggler at
+    // T0 — 9 h behind, far past the 1 h ttl.
+    Seq(s"""{"doc_id":1,"ts":"2024-01-01T10:00:00.000Z","text":"completely different words about storage engines here"}""")
+      .toDF("value").coalesce(1).write.text(s"$dir/in/f1")
+    Seq(s"""{"doc_id":2,"ts":"2024-01-01T00:00:00.000Z","text":"the quick brown fox jumps over the lazy dog tonight"}""")
+      .toDF("value").coalesce(1).write.text(s"$dir/in/f2")
+    val src = spark.readStream.schema(docSchema)
+      .option("recursiveFileLookup", "true")
+      .option("maxFilesPerTrigger", "1").json(s"$dir/in")
+      .withWatermark("ts", "1 hour")
+    val q = StreamingDedup.nearDupByMinhash(src, "doc_id", "text", "ts",
+        ttlMs = 3600000L)
+      .toDF().writeStream.format("memory").queryName("sminhash_late")
+      .outputMode("append")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination() // pre-fix: StreamingQueryException (IAE) here
+    val verdicts = spark.table("sminhash_late")
+      .groupBy("docId").agg(max("dup").as("dup"))
+      .as[(Long, Boolean)].collect().toMap
+    assert(verdicts.keySet == Set(1L, 2L))
+    assert(!verdicts(2L), "a straggler with no prior band must be fresh")
+  }
+
   test("left-outer interval join: eviction emits unconverted views") {
     import graft.streaming.Attribution
     val dir = tmpDir("outerj")

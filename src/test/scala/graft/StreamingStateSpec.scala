@@ -165,6 +165,70 @@ class StreamingStateSpec extends SparkSpec {
         Some(Set("events")))
     }
 
+  /** Streaming MinHash near-dup state must peak at exactly the
+    * DISTINCT band-key population of the corpus — O(active bands),
+    * never O(documents x bands) or O(documents) — and drain to the
+    * sentinel's own bands once the watermark times the real bands
+    * out. The expected count comes from the identical batch band
+    * expressions, so the pin is exact, not a bound.
+    */
+  private def checkMinhashState(sfDir: String): Unit = {
+    import graft.functions.{HashFunctions => H, TextFunctions => T}
+    import graft.streaming.StreamingDedup
+    val dir = tmpDir("state-minhash")
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    docs.withColumn("ts",
+        lit("2024-01-01 00:00:00").cast("timestamp"))
+      .write.mode("overwrite").json(s"$dir/in/f1")
+    // far-future sentinel: its arrival advances the watermark so the
+    // trailing no-data batch event-time-times-out every real band
+    spark.range(1).select(lit(-1L).as("doc_id"),
+        lit("2024-06-01 00:00:00").cast("timestamp").as("ts"),
+        lit("sentinel").as("text"))
+      .write.mode("overwrite").json(s"$dir/in/f2")
+    def bandsOf(df: org.apache.spark.sql.DataFrame) = df.select(
+      explode(H.bandKeys(H.minhashSignature(
+        H.wordShingles(T.tokens(col("text")), 3), 32), 16, 2)).as("b"))
+    val expectBands = bandsOf(docs).distinct().count()
+    val sentinelBands = bandsOf(Seq("sentinel").toDF("text"))
+      .distinct().count()
+    val nDocs = docs.count()
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("ts", TimestampType), StructField("text", StringType)))
+    val (peak, fin, memPeak) = runAndMeasure(d =>
+      StreamingDedup.nearDupByMinhash(
+          spark.readStream.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .option("maxFilesPerTrigger", "1").json(s"$d/in")
+            .withWatermark("ts", "1 hour"),
+          "doc_id", "text", "ts", ttlMs = 3600000L)
+        .toDF()
+        .writeStream.format("noop")
+        .outputMode("append")
+        .option("checkpointLocation", s"$d/ckpt"),
+      dir)
+    info(s"minhash @$sfDir: docs=$nDocs distinctBands=$expectBands " +
+      s"peakStateRows=$peak finalStateRows=$fin peakStateMB=" +
+      f"${memPeak / 1048576.0}%.1f")
+    // batch 1 holds every real doc: one state row per DISTINCT band
+    assert(peak == expectBands || peak == expectBands + sentinelBands,
+      s"state rows $peak != distinct bands $expectBands (+sentinel " +
+        s"$sentinelBands) — state is not O(active bands)")
+    // cleanup drained all real bands; only the sentinel's remain
+    assert(fin == sentinelBands,
+      s"final state $fin != sentinel bands $sentinelBands — " +
+        "timed-out bands not reclaimed")
+  }
+
+  test("streaming minhash state is O(distinct bands) at sf0.01") {
+    checkMinhashState("/root/testdata/sf0.01")
+  }
+
+  test("streaming minhash state is O(distinct bands) at sf0.1 (10x docs)") {
+    checkMinhashState("/root/testdata/sf0.1")
+  }
+
   test("sessionizer state stays O(users) at sf1 (10x events)") {
     ensureStaged("/tmp/graft-sf1", 10, "uniform")
     checkSessionizerState("/tmp/graft-sf1")
