@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-/** Driver contract (SURVEY.md §7): a smoke entry, the query registry
+/** The SURVEY.md §7 contract: a smoke entry, the query registry
   * and its DuckDB oracles.
   */
 object SparkEntry {
