@@ -1720,36 +1720,6 @@ fin$i AS (SELECT w, max_by(cnt, it) AS cnt, max_by(s, it) AS s
         |       ((n_base + 1)::DOUBLE / (nbt + 8))), 9) AS "psi"
         |FROM j CROSS JOIN nb ORDER BY 1, 2""".stripMargin,
 
-    // Idempotent streaming relay: a full reprocess with a fresh
-    // checkpoint still delivers each key once — the manifest, not the
-    // checkpoint, carries the guarantee.
-    "q_idempotent_relay" ->
-      """SELECT o_orderkey AS "k", 1::BIGINT AS "n_deliveries"
-        |FROM orders WHERE o_orderkey < 120
-        |ORDER BY 1""".stripMargin,
-
-    // Idempotent sink: the manifest absorbs the replay and the
-    // overlap, so every delivered key appears exactly once.
-    "q_idempotent_sink" ->
-      """SELECT o_orderkey AS "k", 1::BIGINT AS "n_deliveries"
-        |FROM orders WHERE o_orderkey < 150
-        |ORDER BY 1""".stripMargin,
-
-    // §2.11 incremental job: cumulative output over both micro-batch
-    // runs = one decorated assembly over all suppliers, exactly once.
-    "q_incremental_job" ->
-      """WITH recs AS (
-        |  SELECT s_suppkey, s_nationkey AS k1,
-        |         (s_nationkey + 1) % 25 AS k2
-        |  FROM supplier)
-        |SELECT s_suppkey::VARCHAR AS "queryItemId",
-        |       k1::VARCHAR || ',' || k2::VARCHAR AS "rec_items",
-        |       n1.n_name || ',' || n2.n_name AS "rec_names"
-        |FROM recs
-        |JOIN nation n1 ON k1 = n1.n_nationkey
-        |JOIN nation n2 ON k2 = n2.n_nationkey
-        |ORDER BY 1""".stripMargin,
-
     "q_queue_relay" ->
       """SELECT s_suppkey::VARCHAR AS "userId", s_name AS "name"
         |FROM supplier ORDER BY 1""".stripMargin,

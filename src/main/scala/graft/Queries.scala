@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -321,42 +321,6 @@ object Queries {
     Readers.jsonl(s, s"$d/braze", schema).orderBy("regionkey")
   }
 
-  /** Idempotent sink (io.Writers.idempotentConnectorOutput): batch A
-    * delivered, batch A REPLAYED (the reference's Lambda-retry
-    * double-send), then an overlapping batch B — the read-back must
-    * hold every key exactly once, the manifest having absorbed the
-    * replay and the overlap. The oracle states the exactly-once
-    * invariant directly from the construction.
-    */
-  def idempotentSink(s: SparkSession, dir: String): DataFrame = {
-    val d = tmp("idemsink")
-    val orders = t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
-    // batch A carries IN-BATCH twins (keys < 10 appear twice with
-    // identical payloads) — the sink must collapse them too, not just
-    // cross-batch replays (ADVICE r10)
-    val a = orders.where(col("k") < 100)
-      .unionByName(orders.where(col("k") < 10))
-    val b = orders.where(col("k") >= 50 && col("k") < 150)
-    val rt = java.time.LocalDateTime.of(2024, 1, 2, 3, 4, 5)
-    // the sink returns its survivors persisted (caller owns unpersist);
-    // consume the cached frame once, release, return the count
-    def deliver(batch: DataFrame, t: java.time.LocalDateTime): Long = {
-      val r = Writers.idempotentConnectorOutput(batch, s"$d/out", "conn",
-        t, Seq("k"), s"$d/manifest")
-      try r.count() finally r.unpersist()
-    }
-    require(deliver(a, rt) == a.dropDuplicates("k").count(),
-      "first A truncated or in-batch twins not collapsed")
-    require(deliver(a, rt.plusHours(1)) == 0L, // the retry
-      "replayed batch re-delivered")
-    val bNew = deliver(b, rt.plusHours(2))
-    require(bNew > 0 && bNew < b.count(), "overlap not absorbed")
-    s.read.option("recursiveFileLookup", "true")
-      .json(s"$d/out/conn")
-      .groupBy("k").agg(count(lit(1)).as("n_deliveries"))
-      .orderBy("k")
-  }
 
   /** K2: gated errors sink — the error split written through
     * [[Writers.errors]] into the `errors/<jobType>/year=.../time=...`
@@ -1512,44 +1476,6 @@ object Queries {
       .orderBy("win_start_us", "bin")
   }
 
-  /** Exactly-once streaming delivery (streaming source + foreachBatch
-    * + [[Writers.idempotentConnectorOutput]]): the SAME input is
-    * streamed twice with SEPARATE checkpoints — a full reprocess
-    * after checkpoint loss, the failure Structured Streaming's own
-    * tracking cannot absorb — and the key manifest still holds every
-    * delivery to exactly once. This is the §2.11 "enqueue can
-    * double-send on retry" gap closed end-to-end at the streaming
-    * layer, not just per batch.
-    */
-  def idempotentRelay(s: SparkSession, dir: String): DataFrame = {
-    val d = tmp("idemrelay")
-    t(s, dir, "orders")
-      .select(col("o_orderkey").as("k"), col("o_totalprice").as("v"))
-      .where(col("k") < 120)
-      .write.mode("overwrite").json(s"$d/in")
-    val schema = StructType(Seq(StructField("k", LongType),
-      StructField("v", DoubleType)))
-    def run(ckpt: String): Unit = {
-      val q = s.readStream.schema(schema).json(s"$d/in")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Writers.idempotentConnectorOutput(batch, s"$d/out", "conn",
-            java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0)
-              .plusSeconds(id),
-            Seq("k"), s"$d/manifest").unpersist()
-          ()
-        }
-        .option("checkpointLocation", s"$d/$ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    run("ckpt1")
-    run("ckpt2") // full reprocess: fresh checkpoint, same input
-    s.read.option("recursiveFileLookup", "true").json(s"$d/out/conn")
-      .groupBy("k").agg(count(lit(1)).as("n_deliveries"))
-      .orderBy("k")
-  }
 
   /** §2.12 stateful streaming sessionization, driver-checkable: an
     * AvailableNow run of the `flatMapGroupsWithState` Sessionizer over
@@ -2339,47 +2265,6 @@ object Queries {
       .orderBy("user_id", "session_seq")
   }
 
-  /** §2.11 incremental connector job, driver-checkable: TWO
-    * `StreamingJob.runIncremental` invocations over a growing input dir
-    * (supplier-derived batch-inference JSONL, split by suppkey parity).
-    * The file-source checkpoint must process each file exactly once
-    * across runs — a broken bookmark double-processes f1 and fails the
-    * row/hash compare; a skipped f2 halves the rows. Output is the
-    * cumulative decorated assembly, oracled from supplier x nation.
-    */
-  def incrementalJob(s: SparkSession, dir: String): DataFrame = {
-    import java.time.LocalDateTime
-    import graft.schema.Schemas
-    import graft.streaming.StreamingJob
-    val d = tmp("incjob")
-    val sup = t(s, dir, "supplier").select(col("s_suppkey"),
-      col("s_nationkey"))
-    val batch = sup.select(
-      struct(col("s_suppkey").cast("string").as("itemId")).as("input"),
-      struct(array(col("s_nationkey").cast("string"),
-        ((col("s_nationkey") + 1) % 25).cast("string"))
-        .as("recommendedItems")).as("output"),
-      lit(null).cast("string").as("error"))
-    val meta = t(s, dir, "nation")
-      .select(col("n_nationkey").cast("string").as("id"), col("n_name"))
-    def run(): Long = StreamingJob.runIncremental(s, s"$d/in",
-      Schemas.relatedItemsBatchInference, s"$d/ckpt", s"$d/out", "braze",
-      Some(meta), Seq("n_name"), "input.itemId", "queryItemId", "inc_job",
-      LocalDateTime.of(2024, 1, 1, 0, 0, 0))
-    batch.where(col("input.itemId").cast("long") % 2 === 0)
-      .write.mode("overwrite").json(s"$d/in/f1")
-    run()
-    batch.where(col("input.itemId").cast("long") % 2 =!= 0)
-      .write.mode("overwrite").json(s"$d/in/f2")
-    run()
-    s.read.option("recursiveFileLookup", "true").json(s"$d/out/braze")
-      .select(col("queryItemId"),
-        array_join(transform(col("recommendations"),
-          r => r.getField("itemId")), ",").as("rec_items"),
-        array_join(transform(col("recommendations"),
-          r => r.getField("n_name")), ",").as("rec_names"))
-      .orderBy("queryItemId")
-  }
 
   /** Co-located join over bucketed tables (io.Bucketing): both sides
     * bucketed+sorted on the join key at write time, so the join itself
@@ -2550,7 +2435,6 @@ object Queries {
     "q_zvalue" -> (zvalueQ _),
     "q_zorder_layout" -> (zorderLayout _),
     "q_errors_sink" -> (errorsSink _),
-    "q_idempotent_sink" -> (idempotentSink _),
     "q_config_parse" -> (configParse _),
     "q_error_split_ok" -> (errorSplitOk _),
     "q_error_split_err" -> (errorSplitErr _),
@@ -2629,8 +2513,6 @@ object Queries {
     "q_streaming_cms" -> (streamingCmsQ _),
     "q_streaming_quantile" -> (streamingQuantileQ _),
     "q_stream_drift" -> (streamDrift _),
-    "q_idempotent_relay" -> (idempotentRelay _),
-    "q_incremental_job" -> (incrementalJob _),
     "q_sessionize_stream" -> (sessionizeStream _),
     "q_queue_relay" -> (queueRelay _),
     "q_rest_sink" -> (restSink _),

@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{HashFunctions => H, TextFunctions => T,
-  VectorFunctions => V}
+import graft.functions.{HashFunctions => H, TextFunctions => T}
 import graft.operators.{Ann, Dedup, Multimodal}
 
 /** LLM-training-data pipeline queries over documents/embeddings.

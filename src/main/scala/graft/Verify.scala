@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -34,11 +34,10 @@ object Verify {
             StructType(Seq(StructField("__verify_error", StringType))))
           .write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      // Queries that persist an intermediate (dataset card's narrow
-      // frame, the idempotent sink's survivors) rely on the caller to
-      // release it; Verify runs all ~135 in one session, so clear the
-      // cache per query like Bench does — otherwise entries accumulate
-      // for the whole run (ADVICE r14).
+      // Queries that persist an intermediate (the dataset card's narrow
+      // frame) rely on the caller to release it; Verify runs them all in
+      // one session, so clear the cache per query like Bench does —
+      // otherwise entries accumulate for the whole run (ADVICE r14).
       finally spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -89,9 +89,8 @@ object Jobs {
   /** Decorate `exploded` ([[graft.etl.Ops.explodeRecs]] keyed by
     * `keyAlias`, nothing carried), assemble one list per key, then fan
     * the lists out to the users in `pairs`
-    * ([[graft.etl.Ops.mappingPairCounts]]) when given. Called by [[run]],
-    * `Queries.riPipeline`/`upPipeline` and
-    * [[graft.streaming.StreamingJob.runIncremental]].
+    * ([[graft.etl.Ops.mappingPairCounts]]) when given. Called by [[run]]
+    * and `Queries.riPipeline`/`upPipeline`.
     */
   def assemble(exploded: DataFrame, keyAlias: String,
       metadata: Option[DataFrame], fields: Seq[String],

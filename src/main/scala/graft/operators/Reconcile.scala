@@ -37,14 +37,12 @@ object Reconcile {
     * few buckets.
     */
   def merkleDiff(a: DataFrame, b: DataFrame, keyCols: Seq[String],
-      nBuckets: Int,
-      cache: Option[StorageLevel] = None): DataFrame = {
+      nBuckets: Int): DataFrame = {
     require(nBuckets > 0, s"nBuckets must be > 0, got $nBuckets")
     require(a.columns.toSeq == b.columns.toSeq,
       s"schemas differ: ${a.columns.toSeq} vs ${b.columns.toSeq}")
     require(keyCols.nonEmpty && keyCols.forall(a.columns.contains),
       s"keyCols $keyCols not all present in ${a.columns.toSeq}")
-    val level = cache.getOrElse(StorageLevel.MEMORY_AND_DISK)
     val cols = a.columns.toSeq
     def canon(cs: Seq[String]): Column =
       concat_ws("\u0001",
@@ -52,7 +50,7 @@ object Reconcile {
     def prep(df: DataFrame): DataFrame = df
       .withColumn("__rh", h60(canon(cols)))
       .withColumn("__bkt", pmod(h60(canon(keyCols)), lit(nBuckets.toLong)))
-      .persist(level)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val pa = prep(a)
     val pb = prep(b)
     def digest(df: DataFrame, n: String): DataFrame = df
@@ -79,7 +77,7 @@ object Reconcile {
         .select(lit(tag).as("side") +: keyOut: _*)
         .distinct()
     val out = side(pa, pb, "a").unionByName(side(pb, pa, "b"))
-      .persist(level)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     out.count() // terminal action, then free the per-side pins
     pa.unpersist(blocking = false)
     pb.unpersist(blocking = false)

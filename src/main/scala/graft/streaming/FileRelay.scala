@@ -7,36 +7,16 @@ import org.apache.spark.sql.types.StructType
 import graft.connector.Sinks
 import graft.io.Writers
 
-/** Streaming/incremental layer (SURVEY.md §2.11).
+/** Output relay (SURVEY.md §2.11).
   *
-  * The reference has two incremental mechanisms, both coarser than
-  * Structured Streaming: Glue job bookmarks (skip already-processed input
-  * files, `template.yaml:201`) and an S3-event -> Lambda -> SQS fan-out of
-  * new output files (`template.yaml:310-320`, `enqueue.py:34-67`). Both
-  * are file-arrival semantics, which is exactly Spark's file stream
-  * source + checkpoint: each file is processed exactly once across runs,
-  * and `Trigger.AvailableNow` gives run-to-completion batches like a Glue
-  * job run.
+  * The reference relays each new connector-output file through an
+  * S3-event -> Lambda -> SQS fan-out (`template.yaml:310-320`,
+  * `enqueue.py:34-67`). That is file-arrival semantics, which is exactly
+  * Spark's file stream source + checkpoint: each file is relayed once
+  * across runs, and `Trigger.AvailableNow` runs to completion like a
+  * Lambda drain.
   */
 object FileRelay {
-
-  /** Bookmark-equivalent incremental read: stream new JSONL files under
-    * `path` (a glob is expanded), tracked by `checkpointDir`, handing each
-    * micro-batch to `process`. Returns when all currently-available files
-    * are consumed.
-    */
-  def processNewFiles(spark: SparkSession, path: String, schema: StructType,
-      checkpointDir: String)(process: (DataFrame, Long) => Unit): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .json(path)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) => process(batch, id) }
-      .start()
-    q.awaitTermination()
-  }
 
   /** S3-event -> enqueue equivalence: relay new connector-output files to
     * a queue sink, at-least-once per file with exactly-once file tracking
@@ -49,18 +29,26 @@ object FileRelay {
     * ([[graft.io.Writers.runPartitions]], the reference's key-regex gate,
     * `braze_enqueue_function/main.py:19`), so the state the sync keeps
     * next to them never reaches the queue; sends go out
-    * [[Sinks.QueueBatchSize]] messages at a time.
+    * [[Sinks.QueueBatchSize]] messages at a time. Returns when every
+    * file available at the start is relayed.
     */
   def relayToQueue(spark: SparkSession, outputPath: String,
       schema: StructType, checkpointDir: String,
       transport: Sinks.QueueTransport, userIdCol: String): Unit =
-    processNewFiles(spark, Writers.runPartitions(outputPath), schema,
-      checkpointDir) { (batch, id) =>
-      val failed = spark.sparkContext.collectionAccumulator[String]
-      Sinks.queueSink(batch, transport, userIdCol, failed)
-      if (!failed.isZero) throw new java.io.IOException(
-        s"relay micro-batch $id: ${failed.value.size} message(s) failed " +
-          s"to send (e.g. ${failed.value.get(0)}); left uncommitted " +
-          "for replay")
-    }
+    spark.readStream.schema(schema)
+      .option("recursiveFileLookup", "true")
+      .json(Writers.runPartitions(outputPath))
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val failed = spark.sparkContext.collectionAccumulator[String]
+        Sinks.queueSink(batch, transport, userIdCol, failed)
+        if (!failed.isZero) throw new java.io.IOException(
+          s"relay micro-batch $id: ${failed.value.size} message(s) failed " +
+            s"to send (e.g. ${failed.value.get(0)}); left uncommitted " +
+            "for replay")
+      }
+      .start()
+      .awaitTermination()
 }

@@ -130,27 +130,6 @@ class IoSpec extends SparkSpec {
     assert(Writers.errors(some, dir, "ri", clock, enabled = true).isDefined)
   }
 
-  test("idempotentConnectorOutput collapses in-batch key twins") {
-    val dir = tmpDir("idem-twins")
-    val clock = LocalDateTime.of(2024, 5, 1, 0, 0, 0)
-    // key 1 appears twice WITHIN the first batch; only one delivery
-    // may reach the output (ADVICE r10 — the manifest alone cannot
-    // absorb twins inside the batch it is about to record)
-    val batch = Seq((1L, "a"), (1L, "a"), (2L, "b")).toDF("k", "v")
-    val fresh = Writers.idempotentConnectorOutput(batch, s"$dir/out",
-      "conn", clock, Seq("k"), s"$dir/manifest")
-    try assert(fresh.count() == 2) finally fresh.unpersist()
-    val delivered = spark.read.option("recursiveFileLookup", "true")
-      .json(s"$dir/out/conn")
-    assert(delivered.count() == 2)
-    assert(delivered.groupBy("k").count()
-      .where(col("count") > 1).isEmpty)
-    // and the cross-batch replay path still holds
-    val replay = Writers.idempotentConnectorOutput(batch, s"$dir/out",
-      "conn", clock.plusHours(1), Seq("k"), s"$dir/manifest")
-    try assert(replay.isEmpty) finally replay.unpersist()
-  }
-
   test("StateTable.append: interleaved concurrent appends lose nothing") {
     // two writers, 8 appends each, racing for version slots — the
     // atomic-rename claim must serialize them into 16 DISTINCT versions

@@ -142,6 +142,24 @@ class MultimodalConfigSpec extends SparkSpec {
     assert(first == 2 && second == 0)
   }
 
+  test("file relay over a connector root with no run partition sends nothing") {
+    val dir = tmpDir("relay-empty")
+    val qname = s"relay-${java.util.UUID.randomUUID()}"
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("userId",
+        org.apache.spark.sql.types.StringType)))
+    def relay(): Int = {
+      FileRelay.relayToQueue(spark, s"$dir/out", schema, s"$dir/ckpt",
+        Sinks.InMemoryQueueTransport(qname), "userId")
+      Sinks.InMemoryQueues.drain(qname).size
+    }
+    // no connector root at all
+    assert(relay() == 0)
+    // a root that holds only the sync's state
+    Writers.state(Seq("a", "b").toDF("userId"), dir, "out")
+    assert(relay() == 0)
+  }
+
   test("file relay leaves a batch with failed sends uncommitted") {
     val dir = tmpDir("relay-fail")
     val qname = s"relay-${java.util.UUID.randomUUID()}"

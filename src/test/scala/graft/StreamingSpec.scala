@@ -179,58 +179,6 @@ class StreamingSpec extends SparkSpec {
     assert(out.toSeq == Seq(("00:00", 1L)))
   }
 
-  test("incremental connector job: per-batch output, bookmark across runs") {
-    import java.time.LocalDateTime
-    import graft.schema.Schemas
-    import graft.streaming.StreamingJob
-    val root = tmpDir("sjob")
-    val meta = Seq(("p1", "B1")).toDF("id", "brand")
-    def run() = StreamingJob.runIncremental(spark, s"$root/in",
-      Schemas.relatedItemsBatchInference, s"$root/ckpt", s"$root/out",
-      "braze", Some(meta), Seq("brand"), "input.itemId", "queryItemId",
-      "sj", LocalDateTime.of(2024, 2, 1, 0, 0, 0))
-    Seq("""{"input":{"itemId":"i1"},"output":{"recommendedItems":["p1","p2"]}}""")
-      .toDF("value").coalesce(1).write.text(s"$root/in/f1")
-    assert(run() >= 1)
-    Seq("""{"input":{"itemId":"i2"},"output":{"recommendedItems":["p1"]}}""")
-      .toDF("value").coalesce(1).write.text(s"$root/in/f2")
-    assert(run() >= 1) // only the NEW file (bookmark semantics)
-    val out = spark.read.option("recursiveFileLookup", "true")
-      .json(s"$root/out/braze")
-    assert(out.select("queryItemId").as[String].collect().toSet ==
-      Set("i1", "i2"))
-    // decoration applied inside the micro-batch
-    val i1 = out.where(col("queryItemId") === "i1")
-      .select(explode(col("recommendations")).as("r"))
-      .select("r.itemId", "r.brand").orderBy("itemId").collect()
-    assert(i1.map(_.getString(0)).toSeq == Seq("p1", "p2"))
-    assert(i1(0).getString(1) == "B1" && i1(1).isNullAt(1))
-    // a third run with nothing new processes nothing
-    val before = spark.read.option("recursiveFileLookup", "true")
-      .json(s"$root/out/braze").count()
-    run()
-    assert(spark.read.option("recursiveFileLookup", "true")
-      .json(s"$root/out/braze").count() == before)
-  }
-
-  test("incremental connector job drops an unparseable line") {
-    import java.time.LocalDateTime
-    import graft.schema.Schemas
-    import graft.streaming.StreamingJob
-    val root = tmpDir("sjobbad")
-    Seq("""{"input":{"itemId":"i1"},"output":{"recommendedItems":["p1"]}}""",
-      """{"input":""").toDF("value").coalesce(1).write.text(s"$root/in/f1")
-    StreamingJob.runIncremental(spark, s"$root/in",
-      Schemas.relatedItemsBatchInference, s"$root/ckpt", s"$root/out",
-      "braze", None, Nil, "input.itemId", "queryItemId", "sj",
-      LocalDateTime.of(2024, 2, 1, 0, 0, 0))
-    // A malformed line must not reach the output as a null-keyed row.
-    val keys = spark.read.option("recursiveFileLookup", "true")
-      .json(s"$root/out/braze").select("queryItemId").as[String]
-      .collect().toSeq
-    assert(keys == Seq("i1"), s"output keys: $keys")
-  }
-
   test("stream-stream interval join emits view->purchase attributions") {
     val dir = tmpDir("ssjoin")
     val evSchema = StructType(Seq(
